@@ -1,17 +1,22 @@
-"""Connected components via iterative DataFrame min-label propagation (N7).
+"""Connected components over verified near-dup edges (N7).
 
 Replaces the reference's transitive grouping-by-hashmap-key
-(reference: /root/reference/src/server.rs:18 — a DashMap keyed by exact hash
-IS the connected components of an equality graph). Near-dup similarity is not
+(reference: src/server.rs:18 — a DashMap keyed by exact hash IS the
+connected components of an equality graph). Near-dup similarity is not
 transitive, so the verified-edge graph needs real CC.
 
-Algorithm: every node starts labeled with its own conv_id; each round every
-node takes the min of its label and its neighbors' labels; converged when no
-label changes. Duplicate clusters are near-cliques (LSH buckets emit dense
-edges, mega-buckets emit stars), so the effective diameter is tiny and this
-converges in a handful of rounds; ``cc_max_iters`` bounds pathological
-chains. ``localCheckpoint`` after every round truncates the lineage so the
-plan doesn't grow exponentially (the classic iterative-DataFrame trap).
+One algorithm, two regimes, chosen by edge count:
+
+- **Driver finish** (up to ``_DRIVER_EDGES`` edges): one collect of the edge
+  table as Arrow, ids mapped to sorted int indices, then a vectorized numpy
+  hook-and-compress union-find (every root hooks to the smallest root it
+  touches, then pointer jumping until every node points at a root). It
+  needs O(log n) rounds on any graph, a 10⁵-node path included, and costs
+  one Spark job instead of a multi-stage loop per round.
+- **Distributed** (larger graphs): alternating large-star/small-star rounds
+  (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC
+  2014) as plain DataFrame ops, until the edges form one star per component
+  centred on its minimum node. ``cc_max_iters`` bounds the rounds.
 
 Returns (conv_id, cluster_id) where cluster_id = min conv_id in the
 component — deterministic, unlike the reference's random-seeded hash keys
@@ -20,20 +25,17 @@ and nondeterministic DashMap iteration order (src/formatter.rs:45).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dedup.util import persistent_rdd_ids, unpersist_ids
 
-def cc_loop_width(n_edges: int, parallelism: int) -> int:
-    """Shuffle width for the label loop, EDGE-PROPORTIONAL (not a fixed
-    fraction of cluster parallelism): the label table is small relative to
-    the corpus, so at low edge counts per-round cost is pure shuffle-task
-    latency and the loop runs narrow — but a 100×-denser duplicate graph
-    must not run its whole loop on a handful of partitions. Width scales
-    with the SYMMETRIC adjacency row count (2·edges) at ~250k rows/task,
-    clamped to [2, 8×parallelism] (more partitions than cores is fine —
-    it bounds per-task memory; fewer than 2 never makes sense)."""
-    return max(2, min((2 * n_edges + 250_000 - 1) // 250_000, 8 * parallelism))
+#: largest edge table finished on the driver: 1M string pairs are a few
+#: tens of MB of Arrow and about a second of numpy.
+_DRIVER_EDGES = 1_000_000
 
 
 def connected_components(
@@ -42,176 +44,133 @@ def connected_components(
     log=None,
     n_edges: int | None = None,
     input_deduped: bool = False,
-    loop_conf: bool = False,
     metrics_out: dict | None = None,
 ) -> DataFrame:
     """edges(conv_a, conv_b) → labels(conv_id, cluster_id).
 
-    ``n_edges``: optional pre-known (deduplicated) edge count — callers that
-    already counted the edge table (the pipeline's stage checkpoint) pass it
-    so the loop width is sized without an extra job.
-    ``input_deduped``: the caller guarantees one row per undirected pair
-    (the pipeline's edge stage is unique by construction), skipping the
-    defensive dropDuplicates shuffle and the pre-count checkpoint.
-    ``loop_conf``: DEPRECATED no-op, kept for signature compatibility. The
-    r04 experiment pinned session confs for the loop (AQE off, shuffle
-    width = loop width) on the theory that AQE re-planning was the
-    per-round latency. Measured head-to-head at sf0.1 / local[8] (227k
-    edges, 133k nodes, 2 reps each): AQE-off pinned-width 53.0-60.5s /
-    148-204 MB shuffle write / ~349 stages; AQE ON (plain session confs)
-    9.3s / 18 MB / 26 stages; AQE-off at width 32 still 59.6s. AQE's
-    partition coalescing is what keeps the near-empty label exchanges
-    cheap — disabling it was the clusters-stage regression (13→44→56s
-    across r03-r05 benches), so the pinning is REMOVED, which also closes
-    the r04 advisor note about mutating process-global session confs under
-    concurrent driver threads.
-    ``metrics_out``: optional dict the loop fills with its bound runtime
-    knobs (``cc_loop_width``, ``cc_edges``, ``cc_rounds``) — the caps-audit
-    contract (VERDICT r04 #7): every width/cap that binds is reported, so a
-    100× run is auditable from its metrics JSON alone.
+    ``n_edges``: optional pre-known edge count (the pipeline's stage
+    lineage); above ``_DRIVER_EDGES`` it skips the driver-regime probe.
+    ``input_deduped``: the caller guarantees one row per undirected pair,
+    so the distributed regime skips its defensive distinct.
+    ``metrics_out``: optional dict filled with ``cc_edges``, ``cc_driver``
+    (which regime ran) and ``cc_rounds`` (distributed rounds; 0 on the
+    driver) — the caps audit: a run dir says how CC ran.
     """
-    from dedup.util import persistent_rdd_ids, unpersist_ids
-
-    spark = edges.sparkSession
-    # every frame this loop pins (localCheckpoint/persist) is freed before
-    # returning — at the RDD-id level: DataFrame.unpersist() is a no-op for
-    # localCheckpoint-ed frames (the cache manager never saw their RDDs), so
-    # standalone callers would otherwise leak label blocks for the session
-    _pre_ids = persistent_rdd_ids(spark)
-    pinned: list[DataFrame] = []
-
     edges = edges.select("conv_a", "conv_b")
-    if not input_deduped:
-        edges = edges.dropDuplicates()
-    if n_edges is None:
-        if not input_deduped:
-            edges = edges.localCheckpoint()
-            pinned.append(edges)
-        n_edges = edges.count()
-    cc_parts = cc_loop_width(n_edges, spark.sparkContext.defaultParallelism)
-    if metrics_out is not None:
-        metrics_out["cc_loop_width"] = cc_parts
-        metrics_out["cc_edges"] = n_edges
-
-    return _cc_loop(
-        spark, edges, cc_parts, max_iters, log, pinned, _pre_ids, metrics_out
-    )
-
-
-#: propagation hops fused into each convergence-checked round. With the
-#: self-loop hop below (one join + one aggregation per hop) a 3-hop round
-#: is a shallower plan than the old 2-hop shape (which paid a second join
-#: per hop), and 3 hops/round converged sf0.1 in 4 rounds vs 6 — measured
-#: r06 at matched spins: 7.3-8.7 s vs 11.6-16.0 s for the old loop, label
-#: sets bit-identical. 4 hops/round saved no further rounds.
-_HOPS_PER_ROUND = 3
-
-
-def _cc_loop(spark, edges, cc_parts, max_iters, log, pinned, _pre_ids, metrics_out=None):
-    from dedup.util import persistent_rdd_ids, unpersist_ids
-
-    # symmetric adjacency PLUS one self-loop row per node: min(label) over
-    # neighbors ∪ self is then ONE join + ONE aggregation per hop. The r05
-    # shape needed a second join back to the previous labels (for the self
-    # term and the ride-along convergence column); the self-loop row carries
-    # both — its label IS the node's own label, and the agg below recovers
-    # the node's label0 from it via min(when(conv_b == conv_a, label0)).
-    sym2 = (
-        edges.unionByName(
-            edges.select(
-                F.col("conv_b").alias("conv_a"), F.col("conv_a").alias("conv_b")
-            )
-        )
-        .unionByName(
-            edges.select(F.col("conv_a").alias("conv_id"))
-            .unionByName(edges.select(F.col("conv_b").alias("conv_id")))
-            .distinct()
-            .select(
-                F.col("conv_id").alias("conv_a"), F.col("conv_id").alias("conv_b")
-            )
-        )
-        .repartition(cc_parts, "conv_b")
-        .localCheckpoint()
-    )
-    pinned.append(sym2)
-
-    labels = (
-        sym2.select(F.col("conv_b").alias("conv_id"))
-        .distinct()
-        .select(
-            "conv_id",
-            F.col("conv_id").alias("label"),
-            F.col("conv_id").alias("label0"),
-        )
-        .localCheckpoint()
-    )
-    pinned.append(labels)
-
-    def _hop(lbls):
-        j = sym2.join(lbls, sym2["conv_b"] == lbls["conv_id"])
-        return (
-            j.groupBy("conv_a")
-            .agg(
-                F.min("label").alias("label"),
-                F.min(
-                    F.when(F.col("conv_b") == F.col("conv_a"), F.col("label0"))
-                ).alias("label0"),
-            )
-            .withColumnRenamed("conv_a", "conv_id")
-        )
-
-    # NOTE: a pointer-jumping step (label ← label(label), Shiloach-Vishkin
-    # path halving) was measured here and REMOVED: it cut rounds only 5 → 4
-    # at sf0.1 (the graph's chains are short) while tripling per-round cost
-    # (two extra exchanges + a sort of the label table per round) — net 2×
-    # slower. Worth revisiting only if a corpus produces deep chains.
-
-    # label0 rides along so the convergence check needs NO join back to the
-    # previous round — `changed` is a plain agg over the stepped frame.
-    # (The r05 note about 4-hop rounds paying 15-37 s of AQE planning was
-    # measured on the OLD two-join hop; the one-join hop re-measured 2 vs 3
-    # vs 4 hops/round in r06 and 3 won — see _HOPS_PER_ROUND.)
-    prev_cached = None
-    for it in range(max_iters):
-        # one Spark job per round: the count() both materializes the
-        # persisted frame and measures convergence; localCheckpoint every
-        # third round truncates the lineage (per-round plans grow linearly
-        # between cuts, which the analyzer tolerates; unbounded growth it
-        # does not).
-        stepped = labels
-        for _ in range(_HOPS_PER_ROUND):
-            stepped = _hop(stepped)
-        if it % 3 == 2:
-            stepped = stepped.localCheckpoint()
-        else:
-            stepped = stepped.persist()
-        pinned.append(stepped)
-        changed = stepped.where(F.col("label0") != F.col("label")).count()
-        if prev_cached is not None:
-            prev_cached.unpersist()
-            pinned.remove(prev_cached)
-        prev_cached = stepped if it % 3 != 2 else None
-        labels = stepped.select(
-            "conv_id", "label", F.col("label").alias("label0")
-        )
+    table = None
+    if n_edges is None or n_edges <= _DRIVER_EDGES:
+        table = edges.limit(_DRIVER_EDGES + 1).toArrow()
+        if table.num_rows > _DRIVER_EDGES:
+            table = None
+    if table is not None:
+        labels, rounds = _driver_labels(table)
         if log:
-            log(f"cc round {it} ({_HOPS_PER_ROUND} hops): {changed} labels changed")
-        if changed == 0:
-            if metrics_out is not None:
-                metrics_out["cc_rounds"] = it + 1
-                metrics_out["cc_hops_per_round"] = _HOPS_PER_ROUND
-            break
+            log(f"cc driver finish: {table.num_rows} edges, {rounds} union-find rounds")
+        out = edges.sparkSession.createDataFrame(labels, "conv_id string, cluster_id string")
+        stats = {"cc_edges": table.num_rows, "cc_driver": True, "cc_rounds": 0}
     else:
-        raise RuntimeError(f"connected components did not converge in {max_iters} rounds")
-
-    # cut the result loose from every loop-pinned frame, then free them all:
-    # the caller gets exactly one pinned frame (its own checkpoint) back.
-    # Freeing is RDD-id-level (util.unpersist_ids): df.unpersist() finds
-    # persist()-ed frames in the cache manager but NOT localCheckpoint-ed
-    # ones, whose RDDs are pinned directly (the r03 advisor leak).
-    _loop_ids = persistent_rdd_ids(spark) - _pre_ids
-    out = labels.select("conv_id", F.col("label").alias("cluster_id")).localCheckpoint()
-    for df in pinned:
-        df.unpersist()  # clears cache-manager entries for persist()-ed rounds
-    unpersist_ids(spark, _loop_ids)  # frees the localCheckpoint-ed RDDs too
+        out, stats = _star_labels(edges, n_edges, input_deduped, max_iters, log)
+    if metrics_out is not None:
+        metrics_out.update(stats)
     return out
+
+
+def _driver_labels(table: pa.Table) -> tuple[pa.Table, int]:
+    ends = pa.concat_arrays([table.column(c).combine_chunks() for c in ("conv_a", "conv_b")])
+    ids = pc.unique(ends)
+    ids = ids.take(pc.array_sort_indices(ids))  # index order == conv_id order
+    idx = pc.index_in(ends, value_set=ids).to_numpy(zero_copy_only=False)
+    m = table.num_rows
+    root, rounds = _union_find(idx[:m], idx[m:], len(ids))
+    return pa.table({"conv_id": ids, "cluster_id": ids.take(pa.array(root))}), rounds
+
+
+def _union_find(u: np.ndarray, v: np.ndarray, n: int) -> tuple[np.ndarray, int]:
+    """Root of each of ``n`` nodes under edges (u, v): the component's
+    smallest index. Pointers only ever move to smaller indices, so there
+    are no cycles and each component's minimum ends up its root."""
+    parent = np.arange(n, dtype=np.int64)
+    rounds = 0
+    while True:
+        ru, rv = parent[u], parent[v]
+        live = ru != rv  # edges whose ends are still in different trees
+        if not live.any():
+            return parent, rounds
+        u, v, ru, rv = u[live], v[live], ru[live], rv[live]
+        np.minimum.at(parent, np.maximum(ru, rv), np.minimum(ru, rv))  # hook
+        while True:  # compress: pointer jumping until every node is at a root
+            grand = parent[parent]
+            if np.array_equal(grand, parent):
+                break
+            parent = grand
+        rounds += 1
+
+
+def _star_labels(
+    edges: DataFrame, n_edges: int | None, input_deduped: bool, max_iters: int, log
+) -> tuple[DataFrame, dict]:
+    spark = edges.sparkSession
+    # every frame checkpointed here is freed before returning, at the
+    # RDD-id level: DataFrame.unpersist() is a no-op for localCheckpoint-ed
+    # frames, so the caller gets back exactly one pinned frame
+    pre = persistent_rdd_ids(spark)
+    # (v, p): one row per undirected edge, child v above parent p
+    e = edges.select(
+        F.greatest("conv_a", "conv_b").alias("v"), F.least("conv_a", "conv_b").alias("p")
+    ).where(F.col("v") != F.col("p"))
+    if not input_deduped:
+        e = e.distinct()
+    e = e.localCheckpoint()
+    if n_edges is None:
+        n_edges = e.count()
+    rounds = 0
+    while not _star_forest(e):
+        if rounds == max_iters:
+            raise RuntimeError(f"connected components did not converge in {max_iters} rounds")
+        e = _small_star(_large_star(e)).localCheckpoint()
+        rounds += 1
+        if log:
+            log(f"cc star round {rounds}")
+    loop_ids = persistent_rdd_ids(spark) - pre
+    out = (
+        e.select(F.col("v").alias("conv_id"), F.col("p").alias("cluster_id"))
+        .unionByName(e.select("p", "p").distinct().toDF("conv_id", "cluster_id"))
+        .localCheckpoint()
+    )
+    unpersist_ids(spark, loop_ids)
+    return out, {"cc_edges": n_edges, "cc_driver": False, "cc_rounds": rounds}
+
+
+def _large_star(e: DataFrame) -> DataFrame:
+    """Every node u links each larger neighbour to min(u, neighbours of u)."""
+    adj = e.toDF("a", "b").unionByName(e.select(F.col("p").alias("a"), F.col("v").alias("b")))
+    m = F.least("a", F.min("b").over(Window.partitionBy("a")))
+    return adj.withColumn("m", m).where(F.col("b") > F.col("a")).select(
+        F.col("b").alias("v"), F.col("m").alias("p")
+    )
+
+
+def _small_star(e: DataFrame) -> DataFrame:
+    """Every node v links itself and its smaller neighbours to the smallest
+    of them."""
+    m = F.min("p").over(Window.partitionBy("v"))
+    pair = F.explode(F.array(F.array("v", "m"), F.array("p", "m")))
+    return (
+        e.withColumn("m", m)
+        .select(pair.alias("e"))
+        .select(F.col("e")[0].alias("v"), F.col("e")[1].alias("p"))
+        .where(F.col("v") != F.col("p"))
+        .distinct()
+    )
+
+
+def _star_forest(e: DataFrame) -> bool:
+    """True when every child has one parent and no parent is a child: each
+    component is then a star centred on its minimum node."""
+    roles = e.select(F.col("v").alias("n"), F.lit(1).alias("child")).unionByName(
+        e.select(F.col("p").alias("n"), F.lit(0).alias("child"))
+    )
+    bad = roles.groupBy("n").agg(
+        F.sum("child").alias("c"), F.count(F.lit(1)).alias("k")
+    ).where((F.col("c") > 1) | ((F.col("c") == 1) & (F.col("k") > 1)))
+    return bad.isEmpty()

@@ -138,7 +138,7 @@ def shingle_hashes(text: str, k: int) -> np.ndarray:
         return np.unique(_mix64(h))
 
 
-def batch_window_hashes(texts, k: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def batch_window_hashes(texts: list[str | bytes], k: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Mixed uint64 k-byte-window hashes for a WHOLE batch of texts in one
     vectorized pass: all bytes are concatenated, one sliding-window matmul
     computes every window hash, and windows crossing document boundaries are

@@ -267,8 +267,7 @@ class DedupPipeline:
             # simhash_conv_pairs) and its expensive inputs (the turn-simhash
             # table above, the fp stats tables) are already checkpointed —
             # the unfused path paid a ~1M-row write+read for nothing
-            # (tools/testdata_ab.py: 9.49 vs 9.75 s warm at matched spins,
-            # clusters bit-identical; the fused path already elided it)
+            # (OPTIMIZATION_r06.md §11; the fused path already elided it)
             sh_pairs, sh_overflow = simhash_conv_pairs(
                 sh, cfg, materialize=False, return_overflow=True
             )
@@ -387,8 +386,8 @@ class DedupPipeline:
             clusters = self._materialize("clusters", None)  # loads from disk
         else:
             # edge count from the stage lineage (exact when the stage was
-            # written+counted; -1 for in-memory runs → CC counts its own
-            # checkpointed edges) sizes the label loop's shuffle width
+            # written+counted; -1 for in-memory runs): above CC's driver
+            # bound it skips the driver-regime probe
             n_edges = next(
                 (e["rows"] for e in self._lineage if e["stage"] == "edges"), None
             )
@@ -398,7 +397,7 @@ class DedupPipeline:
                 log=self.log,
                 n_edges=None if n_edges is None or n_edges < 0 else n_edges,
                 input_deduped=True,  # edge stage is one row per pair
-                metrics_out=metrics,  # cc_loop_width / cc_edges / cc_rounds
+                metrics_out=metrics,  # cc_edges / cc_driver / cc_rounds
             )
             _before_clusters = persistent_rdd_ids(self.spark)
             clusters = self._materialize(

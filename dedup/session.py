@@ -15,6 +15,32 @@ import os
 
 from pyspark.sql import SparkSession
 
+_GiB = 1 << 30
+
+
+def host_sizing(phys_bytes: int, cpus: int, shm_free_bytes: int) -> tuple[str, bool]:
+    """(default ``spark.driver.memory``, whether shuffle scratch may go to
+    ``/dev/shm``) for a host with ``phys_bytes`` of RAM and ``cpus`` cores.
+
+    The heap is physical memory minus 1 GB per core for the Python UDF
+    workers and 3 GB for the JVM's off-heap use (metaspace, Netty/Arrow
+    buffers) and the driver's own Python, capped at 48g and at least 1g: a
+    15 GB 4-core host gets 8g. Scratch goes to the tmpfs only when it has
+    at least that much free space — a small ``/dev/shm`` (64 MB in a
+    default container) would fill up mid-shuffle."""
+    heap_gb = max(1, min(48, phys_bytes // _GiB - cpus - 3))
+    return f"{heap_gb}g", shm_free_bytes >= heap_gb * _GiB
+
+
+def _host_sizing() -> tuple[str, bool]:
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        st = os.statvfs("/dev/shm")
+        shm_free = st.f_bavail * st.f_frsize
+    except OSError:
+        shm_free = 0
+    return host_sizing(phys, os.cpu_count() or 8, shm_free)
+
 
 def get_spark(
     app_name: str = "dedup",
@@ -43,11 +69,12 @@ def get_spark(
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "2147483647")
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "268435456")
 
-    # shuffle/spill scratch on tmpfs when available: 32 concurrent tasks
+    # shuffle/spill scratch on tmpfs when it has room: 32 concurrent tasks
     # writing shuffle files through one virtio disk serializes the job on
     # IO regardless of core count (observed: local[32] == local[8] walls)
+    driver_memory, scratch_on_shm = _host_sizing()
     local_dir = os.environ.get("SPARK_LOCAL_DIRS")
-    if local_dir is None and os.path.isdir("/dev/shm"):
+    if local_dir is None and scratch_on_shm:
         local_dir = "/dev/shm/spark-local"
         os.makedirs(local_dir, exist_ok=True)
 
@@ -71,7 +98,7 @@ def get_spark(
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "2147483647")
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "268435456")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("DEDUP_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("DEDUP_DRIVER_MEM", driver_memory))
         .config("spark.ui.enabled", "false")
         # AppStatusStore retention: util.shuffle_totals sums per-stage byte
         # counters from this store (the bench/kernel-A/B evidence). At the

@@ -30,6 +30,8 @@ Dataflow (everything but the signature UDF is JVM-side):
 
 from __future__ import annotations
 
+import sys
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -128,6 +130,9 @@ def batch_simhash(texts: list[str], k: int = 4) -> np.ndarray:
         return np.zeros(0, dtype=np.int64)
     CHUNK = 16384
     votes = np.zeros((n_docs, 64), dtype=np.int64)
+    # the byte view below puts byte j of each uint64 word at shift 8·j only
+    # on a little-endian host
+    assert sys.byteorder == "little", "SWAR lane extraction assumes little-endian"
     lane_shifts = np.arange(0, 64, 8, dtype=np.uint64)
     for lo in range(0, H.size, CHUNK):
         hi = min(lo + CHUNK, H.size)

@@ -351,6 +351,20 @@ def test_parse_size_literals():
     assert DedupConfig(min_size="2kb").min_size == 2000
 
 
+def test_host_sizing_fits_the_host():
+    """The default driver heap leaves room for the Python workers and the
+    JVM's off-heap use, caps at 48g, and scratch goes to /dev/shm only when
+    the tmpfs has room for as much as the heap."""
+    from dedup.session import host_sizing
+
+    gib = 1 << 30
+    assert host_sizing(int(15.7 * gib), 4, 16 * gib) == ("8g", True)
+    assert host_sizing(512 * gib, 32, 256 * gib) == ("48g", True)
+    assert host_sizing(64 * gib, 32, 32 * gib) == ("29g", True)
+    assert host_sizing(4 * gib, 4, 2 * gib) == ("1g", True)  # never below 1g
+    assert host_sizing(int(15.7 * gib), 4, 64 << 20) == ("8g", False)  # 64 MB shm
+
+
 def test_ingest_reject_metrics(spark):
     """S8: dropped/repaired rows are counted (via observe — no extra scan),
     unlike the reference's silent filter_map(Result::ok)."""
@@ -581,25 +595,6 @@ def test_bucket_cap_guard(spark):
         bucketed_pairs(rows, ["k"], ["m"], cap=1, materialize=False)
 
 
-def test_cc_width_edge_proportional(spark):
-    """VERDICT r03 #7: the label loop's shuffle width scales with the edge
-    count instead of sitting at a fixed fraction of parallelism."""
-    from dedup.cc import cc_loop_width, connected_components
-
-    par = spark.sparkContext.defaultParallelism
-    assert cc_loop_width(10, par) == 2  # tiny graph -> latency-minimal loop
-    assert cc_loop_width(1_000_000, par) == 8
-    assert cc_loop_width(100_000_000, par) == min(800, 8 * par)
-    assert cc_loop_width(10**12, par) == 8 * par  # clamped, never unbounded
-
-    # integration: n_edges hint sizes the symmetric adjacency's partitions
-    edges = spark.createDataFrame(
-        [(f"a{i}", f"b{i}") for i in range(50)], "conv_a string, conv_b string"
-    )
-    out = connected_components(edges, n_edges=2_000_000)
-    assert out.count() == 100  # 50 disjoint pairs -> 100 labeled nodes
-
-
 def test_cc_frees_all_pinned_rdds(spark):
     """ADVICE r03 (low): localCheckpoint-ed loop frames must be freed at the
     RDD level — df.unpersist() alone leaks them for the session."""
@@ -787,32 +782,24 @@ def test_lineage_queries_share_one_pipeline_run_pair(spark, monkeypatch):
     entry._lineage_memo.clear()
 
 
-def test_cc_chain_graph_and_hop_batching(spark):
-    """r06 loop rewrite (self-loop hop, 3 hops/round): a path graph is the
-    worst case for batched hops — labels must still converge to the chain
-    minimum, and isolated star centers keep their own label semantics."""
+def test_cc_chain_graph_labels(spark):
+    """A path graph is the worst case for label propagation — labels must
+    still converge to the chain minimum, and star centers and disjoint
+    pairs keep min-id semantics."""
     from dedup.cc import connected_components
-    from dedup.util import persistent_rdd_ids, unpersist_ids
 
-    pre = persistent_rdd_ids(spark)
-    # a 12-node chain (needs 11 propagation hops to reach the far end),
-    # plus a 3-leaf star, plus one disjoint pair
+    # a 12-node chain, plus a 3-leaf star, plus one disjoint pair
     chain = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(11)]
     star = [("s0", "s1"), ("s0", "s2"), ("s0", "s3")]
     pair = [("p1", "p0")]
     edges = spark.createDataFrame(
         chain + star + pair, "conv_a string, conv_b string"
     )
-    m: dict = {}
-    out = {
-        r["conv_id"]: r["cluster_id"]
-        for r in connected_components(edges, metrics_out=m).collect()
-    }
+    out = {r["conv_id"]: r["cluster_id"] for r in connected_components(edges).collect()}
+    assert len(out) == 18
     assert all(out[f"n{i:02d}"] == "n00" for i in range(12))
     assert all(out[s] == "s0" for s in ("s0", "s1", "s2", "s3"))
     assert out["p0"] == "p0" and out["p1"] == "p0"
-    assert m["cc_rounds"] * m["cc_hops_per_round"] >= 11  # chain depth
-    unpersist_ids(spark, persistent_rdd_ids(spark) - pre)
 
 
 def test_bucketed_pairs_checkpoint_elision(spark):

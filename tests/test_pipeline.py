@@ -252,10 +252,11 @@ def test_caps_audit_in_metrics(spark, turns_df, tmp_path_factory):
     assert m["lsh_overflow_buckets"] > 0
     for k in ("simhash_overflow_buckets", "span_overflow_anchors"):
         assert k in m and m[k] >= 0
-    # CC reported the widths it actually ran with
-    assert m["cc_loop_width"] >= 2 and m["cc_edges"] > 0 and m["cc_rounds"] >= 1
+    # CC reported which regime ran: a small edge table finishes on the
+    # driver, with no distributed rounds
+    assert m["cc_driver"] is True and m["cc_edges"] > 0 and m["cc_rounds"] == 0
 
     # all of it persisted next to the lineage
     disk = _json.loads(open(_os.path.join(run_dir, "metrics.json")).read())
-    for k in ("caps", "lsh_overflow_buckets", "cc_loop_width", "stages"):
+    for k in ("caps", "lsh_overflow_buckets", "cc_edges", "cc_driver", "cc_rounds", "stages"):
         assert k in disk, k
