@@ -69,27 +69,35 @@ _ROLL_BASE_INV = np.uint64(pow(int(_ROLL_BASE), -1, 1 << 64))
 
 #: per-process cache of the geometric power series B^i / B^-i used by every
 #: rolling-hash kernel (minhash shingles, simhash grams, span anchors, LCS
-#: prefix arrays). The series depends only on its base, so one growing array
-#: serves every batch; np.cumprod is a sequential scan re-run per batch
-#: (measured 2× the whole window-hash kernel), while the doubling fill below
-#: runs log2(n) vectorized multiplies ONCE per process.
+#: prefix arrays). The series depends only on its base, so one array serves
+#: every batch; np.cumprod is a sequential scan re-run per batch (measured 2×
+#: the whole window-hash kernel), while the doubling fill in ``_pow_fill``
+#: runs log2(n) vectorized multiplies once per process.
 _POW_CACHE: dict[int, np.ndarray] = {}
+#: longest series ``_POW_CACHE`` keeps (32 MB per base); a longer request is
+#: filled per call and not cached, so a worker's cache stays bounded.
+_POW_CACHE_MAX = 1 << 22
+
+
+def _pow_fill(base: np.uint64, n: int) -> np.ndarray:
+    b = np.empty(n, dtype=np.uint64)
+    b[0] = 1
+    m = 1
+    with np.errstate(over="ignore"):
+        while m < n:
+            step = min(m, n - m)
+            np.multiply(b[:step], b[m - 1] * base, out=b[m : m + step])
+            m += step
+    return b
 
 
 def _pow_series(base: np.uint64, n: int) -> np.ndarray:
-    """First ``n`` powers of ``base`` mod 2^64 (cached, grow-only)."""
+    """First ``n`` powers of ``base`` mod 2^64 (cached up to ``_POW_CACHE_MAX``)."""
+    if n > _POW_CACHE_MAX:
+        return _pow_fill(base, n)
     arr = _POW_CACHE.get(int(base))
     if arr is None or arr.size < n:
-        size = max(n, 1 << 20)
-        b = np.empty(size, dtype=np.uint64)
-        b[0] = 1
-        m = 1
-        with np.errstate(over="ignore"):
-            while m < size:
-                step = min(m, size - m)
-                np.multiply(b[:step], b[m - 1] * base, out=b[m : m + step])
-                m += step
-        _POW_CACHE[int(base)] = arr = b
+        _POW_CACHE[int(base)] = arr = _pow_fill(base, min(max(n, 1 << 20), _POW_CACHE_MAX))
     return arr[:n]
 
 
@@ -217,7 +225,7 @@ def _densify_rotation(sig: np.ndarray) -> None:
         row[holes] = row[filled[nxt]]
 
 
-def batch_minhash(texts: list[str], k: int, num_perm: int, seed: int) -> np.ndarray:
+def batch_minhash(texts: list[str | bytes], k: int, num_perm: int, seed: int) -> np.ndarray:
     """(n_docs × num_perm) int32 signatures for a batch via ONE-PERMUTATION
     HASHING: mix every window hash once, route it to bin = top log2(num_perm)
     bits, keep the min per (doc, bin) with a single np.minimum.at scatter,
@@ -273,24 +281,14 @@ def minhash_signature(shingles_u64: np.ndarray, num_perm: int, seed: int) -> np.
 NORM_PATTERN = "[\\s\\x1c-\\x1f]+"
 
 
-def _normalize_expr(col):
-    """Spark-side normalization: lowercase + collapse whitespace runs.
-
-    Keeps normalization in JVM codegen so the pandas UDF only does the numpy
-    work; also what makes "whitespace/punct-insensitive near-dup" fixtures
-    land above the Jaccard threshold.
-    """
-    return F.regexp_replace(F.lower(col), NORM_PATTERN, " ")
-
-
 def make_minhash_udf(cfg: DedupConfig):
     k, num_perm, seed = cfg.shingle_k, cfg.num_perm, cfg.seed
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def minhash_udf(docs: pd.Series) -> pd.Series:
-        sigs = batch_minhash(
-            [d if d is not None else "" for d in docs], k, num_perm, seed
-        )
+        # normalized here, not in the JVM: Java's \s and lower() disagree
+        # with py_normalize on Unicode whitespace (U+00A0, U+2003, U+3000)
+        sigs = batch_minhash(batch_ws_normalize_bytes(list(docs)), k, num_perm, seed)
         return pd.Series(list(sigs))
 
     return minhash_udf
@@ -299,7 +297,8 @@ def make_minhash_udf(cfg: DedupConfig):
 def with_minhash(
     conversations: DataFrame, cfg: DedupConfig | None = None, repartition: bool | str = True
 ) -> DataFrame:
-    """Attach a ``minhash: array<int>`` column computed from the normalized doc.
+    """Attach a ``minhash: array<int>`` column: the signature of
+    ``py_normalize(doc)``, normalized inside the UDF.
 
     ``repartition`` spreads rows across the cluster's full parallelism
     first: signature cost scales with ROWS, while upstream AQE coalesces
@@ -326,7 +325,7 @@ def with_minhash(
         conversations = spread_for_udf(
             conversations, materialized=narrow_plan(conversations)
         )
-    return conversations.withColumn("minhash", udf(_normalize_expr(F.col("doc"))))
+    return conversations.withColumn("minhash", udf(F.col("doc")))
 
 
 # ---------------------------------------------------------------------------

@@ -269,7 +269,7 @@ class DedupPipeline:
             # the unfused path paid a ~1M-row write+read for nothing
             # (OPTIMIZATION_r06.md §11; the fused path already elided it)
             sh_pairs, sh_overflow = simhash_conv_pairs(
-                sh, cfg, materialize=False, return_overflow=True
+                sh, cfg, materialize=False, return_overflow=True, metrics_out=metrics
             )
             tier["simhash"] = sh_pairs
             overflow_dfs["simhash_overflow_buckets"] = sh_overflow
@@ -279,7 +279,7 @@ class DedupPipeline:
             # later, anti-joined against the already-accepted edge set, so
             # building candidates early costs nothing extra
             span_cand, span_overflow = span_candidate_pairs(
-                conv, cfg, materialize=mat, input_materialized=True
+                conv, cfg, input_materialized=True
             )
             tier["span_cand"] = span_cand
             overflow_dfs["span_overflow_anchors"] = span_overflow

@@ -7,7 +7,8 @@ the reference's per-file prefix hash (reference: /root/reference/src/
 fileinfo.rs:42-48): a cheap fixed-width fingerprint whose equality implies
 near-equality of content.
 
-Dataflow (everything but the signature UDF is JVM-side):
+Dataflow (fingerprints in one pandas UDF; pairing in the JVM, or on the
+driver for small tables):
 1. normalize turn text hard (lowercase, strip punctuation) — so pure
    whitespace/punct variants hash IDENTICALLY;
 2. 64-bit SimHash per turn in one Arrow-batched pandas UDF (numpy bit-count
@@ -17,8 +18,8 @@ Dataflow (everything but the signature UDF is JVM-side):
    match exactly, so every (blocks-k)-subset of blocks becomes a band key
    and bucket-grouping on (chunk_id, chunk_val) finds all such pairs
    without O(n²) compare — key width sets collision volume (see
-   DedupConfig.simhash_blocks);
-4. verify Hamming ≤ ``simhash_hamming`` via xor + bit_count (codegen'd);
+   DedupConfig.simhash_blocks; ``_pigeonhole_layout`` is the one layout);
+4. verify Hamming ≤ ``simhash_hamming`` via xor + bit_count;
 5. lift turn pairs to conversation pairs: conversations where matched turns
    cover ≥ ``min_shared_turn_frac`` of BOTH sides' turns AND at least
    ``min_matched_turns`` turns matched become pairs (source='simhash').
@@ -26,6 +27,14 @@ Dataflow (everything but the signature UDF is JVM-side):
    near-duplication, so a 1-turn conversation holding a common boilerplate
    turn ("thanks") cannot act as an unverified bridge that connected
    components would use to merge unrelated long conversations.
+
+Steps 3-5 run in one of two regimes (``simhash_conv_pairs``): up to
+``_DRIVER_TURNS`` turns they run as one Arrow collect plus a numpy kernel
+on the driver, which saves the distributed kernel's dozens of stages and
+several exchanges on small tables; larger tables, and any table on which a
+bucket cap would bind, take the distributed DataFrame path
+(``simhash_turn_pairs``), whose capped buckets become star edges plus
+overflow rows.
 """
 
 from __future__ import annotations
@@ -34,11 +43,22 @@ import sys
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dedup.config import DedupConfig
+
+#: largest turn-fingerprint table paired on the driver (1M rows are ~25 MB
+#: of Arrow).
+_DRIVER_TURNS = 1_000_000
+#: most candidate pairs (fingerprint pairs from the band buckets plus turn
+#: pairs from the exact groups and their expansion) the driver kernel
+#: enumerates. Measured on one core: 300k random fingerprints enumerate
+#: ~2.7M band pairs in 0.6 s and 120 MB; memory is ~100 B per pair.
+_DRIVER_PAIRS = 8_000_000
 
 
 def _hard_normalize(text: str) -> str:
@@ -356,13 +376,13 @@ def pick_simhash_blocks(
     return best_b
 
 
-def _band_structs(cfg: DedupConfig, nb: int, col: str = "simhash") -> list:
-    """JVM band-key exprs: one struct (chunk_id, chunk_val) per
-    (nb - hamming)-subset of the fingerprint's nb bit blocks, the subset's
-    block values packed into one long (shift/mask only, no Python)."""
+def _pigeonhole_layout(bits: int, k: int, nb: int) -> tuple[list, list]:
+    """The banding layout both SimHash regimes share: ``blocks`` lists
+    (offset, width) of the fingerprint's nb bit blocks; ``keys`` lists, per
+    (nb - k)-subset of blocks, the (block, left shift) pairs whose sum packs
+    the subset's block values into one 64-bit band key."""
     from itertools import combinations
 
-    bits, k = cfg.simhash_bits, cfg.simhash_hamming
     if nb <= k:
         # with nb <= hamming blocks, a pair within Hamming k can differ in
         # EVERY block — no subset key is guaranteed equal and the pigeonhole
@@ -373,25 +393,35 @@ def _band_structs(cfg: DedupConfig, nb: int, col: str = "simhash") -> list:
             f"pigeonhole banding needs >= hamming+1 blocks for full recall"
         )
     widths = [bits // nb + (1 if i < bits % nb else 0) for i in range(nb)]
-    offs = [sum(widths[:i]) for i in range(nb)]
-    blk = [
-        F.shiftrightunsigned(F.col(col), offs[i]).bitwiseAND(
-            F.lit((1 << widths[i]) - 1)
-        )
-        for i in range(nb)
-    ]
+    blocks = [(sum(widths[:i]), widths[i]) for i in range(nb)]
     wmax = max(widths)
+    keys = [
+        [(bi, pos * wmax) for pos, bi in enumerate(combo)]
+        for combo in combinations(range(nb), nb - k)
+    ]
+    return blocks, keys
+
+
+def _band_structs(cfg: DedupConfig, nb: int, col: str = "simhash") -> list:
+    """JVM band-key exprs: one struct (chunk_id, chunk_val) per
+    (nb - hamming)-subset of the fingerprint's nb bit blocks, the subset's
+    block values packed into one long (shift/mask only, no Python)."""
+    blocks, keys = _pigeonhole_layout(cfg.simhash_bits, cfg.simhash_hamming, nb)
+    blk = [
+        F.shiftrightunsigned(F.col(col), off).bitwiseAND(F.lit((1 << w) - 1))
+        for off, w in blocks
+    ]
     structs = []
-    for ci, combo in enumerate(combinations(range(nb), max(1, nb - k))):
-        key = blk[combo[0]]
-        for pos, bi in enumerate(combo[1:], start=1):
-            key = key + F.shiftleft(blk[bi], pos * wmax)
+    for ci, key_parts in enumerate(keys):
+        key = blk[key_parts[0][0]]
+        for bi, shift in key_parts[1:]:
+            key = key + F.shiftleft(blk[bi], shift)
         structs.append(F.struct(F.lit(ci).alias("chunk_id"), key.alias("chunk_val")))
     return structs
 
 
 def simhash_turn_pairs(
-    turns_sh: DataFrame, cfg: DedupConfig | None = None, dedup: bool = True
+    turns_sh: DataFrame, cfg: DedupConfig | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """(conv_id, turn_idx, simhash) → turn-level near-exact pairs.
 
@@ -528,11 +558,9 @@ def simhash_turn_pairs(
         F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).cast("int"),
     )
 
-    pairs = pairs0.unionByName(pairs1)
     # one row per pair by construction: path 1 buckets are disjoint groups,
-    # path 3 buckets are distinct fp pairs and fp_pairs is deduped — the
-    # ``dedup`` flag is kept for API stability but costs nothing now
-    del dedup
+    # path 3 buckets are distinct fp pairs and fp_pairs is deduped
+    pairs = pairs0.unionByName(pairs1)
     overflow = (
         ov0.select(F.lit("exact_fp").alias("path"), "bucket_n")
         .unionByName(ovf.select(F.lit("fp_band").alias("path"), "bucket_n"))
@@ -548,6 +576,7 @@ def simhash_conv_pairs(
     min_matched_turns: int = 2,
     materialize: bool = True,
     return_overflow: bool = False,
+    metrics_out: dict | None = None,
 ):
     """Lift turn pairs to conversation candidate pairs (source='simhash').
 
@@ -559,11 +588,47 @@ def simhash_conv_pairs(
     connected component (single-turn conversations pair only with other
     single-turn conversations, and only when min_matched_turns allows).
 
-    ``materialize`` checkpoints the turn-pair table; with it off, Spark's
-    exchange reuse still computes the chunk self-join once per action.
+    Two regimes, chosen by input size (as in ``dedup.cc``):
+
+    - **Driver** (up to ``_DRIVER_TURNS`` turns): one Arrow collect of the
+      turn-fingerprint table and a vectorized numpy kernel
+      (``_driver_conv_pairs``) that enumerates the same buckets as the
+      distributed path. It falls back to the distributed path when any
+      bucket cap would bind or the enumeration would exceed
+      ``_DRIVER_PAIRS``, so star edges and overflow rows have one
+      implementation; the driver regime's overflow frame is empty.
+    - **Distributed**: ``simhash_turn_pairs`` plus a coverage aggregation.
+      ``materialize`` checkpoints its turn-pair table; with it off, Spark's
+      exchange reuse still computes the chunk self-join once per action.
+
+    ``metrics_out``: optional dict filled with ``simhash_driver`` (which
+    regime ran).
     """
     cfg = cfg or DedupConfig()
-    tp, overflow = simhash_turn_pairs(turns_sh, cfg, dedup=False)
+    spark = turns_sh.sparkSession
+    t = turns_sh.select("conv_id", "turn_idx", "simhash")
+    table = t.limit(_DRIVER_TURNS + 1).toArrow()
+    lifted = None
+    if table.num_rows <= _DRIVER_TURNS:
+        lifted = _driver_conv_pairs(table, cfg, min_shared_turn_frac, min_matched_turns)
+    if lifted is not None:
+        out = spark.createDataFrame(lifted, "conv_a string, conv_b string").withColumn(
+            "source", F.lit("simhash")
+        )
+        overflow = spark.createDataFrame([], "path string, bucket_n bigint")
+    else:
+        out, overflow = _distributed_conv_pairs(
+            turns_sh, cfg, min_shared_turn_frac, min_matched_turns, materialize
+        )
+    if metrics_out is not None:
+        metrics_out["simhash_driver"] = lifted is not None
+    return (out, overflow) if return_overflow else out
+
+
+def _distributed_conv_pairs(
+    turns_sh, cfg, min_shared_turn_frac, min_matched_turns, materialize
+) -> tuple[DataFrame, DataFrame]:
+    tp, overflow = simhash_turn_pairs(turns_sh, cfg)
     if materialize:
         tp = tp.localCheckpoint()
     n_turns = turns_sh.groupBy("conv_id").agg(F.count(F.lit(1)).alias("n_turns"))
@@ -588,4 +653,121 @@ def simhash_conv_pairs(
         )
         .select("conv_a", "conv_b", F.lit("simhash").alias("source"))
     )
-    return (out, overflow) if return_overflow else out
+    return out, overflow
+
+
+_POPCOUNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.int64)
+
+
+def _popcount64(x: np.ndarray) -> np.ndarray:
+    return _POPCOUNT8[x.view(np.uint8).reshape(-1, 8)].sum(axis=1)
+
+
+def _group_pairs(members: np.ndarray, sizes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Every unordered pair inside each group, for ``members`` laid out
+    group after group with the given ``sizes``."""
+    ends = np.repeat(np.cumsum(sizes), sizes)
+    pos = np.arange(members.size)
+    reps = ends - pos - 1  # partners after each member in its group
+    left = np.repeat(pos, reps)
+    seg = np.repeat(np.cumsum(reps) - reps, reps)
+    right = left + 1 + (np.arange(left.size) - seg)
+    return members[left], members[right]
+
+
+def _distinct_per_group(g: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:
+    """Number of distinct values ``v`` in each of the ``n`` groups ``g``."""
+    o = np.lexsort((v, g))
+    g, v = g[o], v[o]
+    new = np.ones(g.size, dtype=bool)
+    new[1:] = (g[1:] != g[:-1]) | (v[1:] != v[:-1])
+    return np.bincount(g[new], minlength=n)
+
+
+def _driver_conv_pairs(
+    table: pa.Table, cfg: DedupConfig, min_frac: float, min_matched: int
+) -> pa.Table | None:
+    """(conv_id, turn_idx, simhash) → (conv_a, conv_b) with conv_a < conv_b
+    in byte order; the same pairs the distributed path lifts. ``None`` when
+    a cap would bind there (an exact-fingerprint group, a band bucket or an
+    expansion bucket above ``band_bucket_cap``), when the enumeration would
+    exceed ``_DRIVER_PAIRS``, or on null values, so the caller falls back.
+    """
+    cap, k = cfg.band_bucket_cap, cfg.simhash_hamming
+    if cap < 2 or any(c.null_count for c in table.columns):
+        return None  # the distributed path rejects cap < 2; nulls stay there too
+    conv = table.column("conv_id").combine_chunks()
+    ids = pc.unique(conv)
+    ids = ids.take(pc.array_sort_indices(ids))  # index order == conv_id order
+    ci = pc.index_in(conv, value_set=ids).to_numpy(zero_copy_only=False).astype(np.int64)
+    turn = table.column("turn_idx").to_numpy()
+    fps, fpi, cnt = np.unique(
+        table.column("simhash").to_numpy(), return_inverse=True, return_counts=True
+    )
+    if cnt.max(initial=0) > cap:
+        return None
+    budget = _DRIVER_PAIRS
+
+    # near fingerprint pairs: the distributed path's pigeonhole band buckets
+    # over the distinct fingerprints
+    nb = cfg.simhash_blocks
+    if nb is None:
+        nb = pick_simhash_blocks(max(fps.size, 1), cfg.simhash_bits, k)
+    blocks, keys = _pigeonhole_layout(cfg.simhash_bits, k, nb)
+    u = fps.view(np.uint64)
+    blk = [(u >> np.uint64(off)) & np.uint64((1 << w) - 1) for off, w in blocks]
+    fa, fb = [], []
+    for key_parts in keys:
+        key = np.zeros_like(u)
+        for bi, shift in key_parts:
+            key += blk[bi] << np.uint64(shift)
+        order = np.argsort(key)
+        _, sizes = np.unique(key[order], return_counts=True)
+        if sizes.max(initial=0) > cap:
+            return None
+        budget -= int((sizes * (sizes - 1) // 2).sum())
+        if budget < 0:
+            return None
+        a, b = _group_pairs(order, sizes)
+        hit = _popcount64(u[a] ^ u[b]) <= k  # distinct fingerprints: never 0
+        fa.append(np.minimum(a, b)[hit])
+        fb.append(np.maximum(a, b)[hit])
+    n_fp = max(fps.size, 1)
+    near = np.unique(np.concatenate(fa) * n_fp + np.concatenate(fb))
+    fa, fb = near // n_fp, near % n_fp
+    if (cnt[fa] + cnt[fb] > cap).any():
+        return None  # an expansion bucket would be capped
+
+    # turn pairs: every pair inside an exact group, every cross pair of a
+    # near fingerprint pair
+    budget -= int((cnt * (cnt - 1) // 2).sum() + (cnt[fa] * cnt[fb]).sum())
+    if budget < 0:
+        return None
+    rows = np.argsort(fpi)  # rows grouped by fingerprint
+    start = np.cumsum(cnt) - cnt
+    r0, r1 = _group_pairs(rows, cnt)
+    width = cnt[fb]
+    n_cross = cnt[fa] * width
+    within = np.arange(n_cross.sum()) - np.repeat(np.cumsum(n_cross) - n_cross, n_cross)
+    width = np.repeat(width, n_cross)
+    r0 = np.concatenate([r0, rows[np.repeat(start[fa], n_cross) + within // width]])
+    r1 = np.concatenate([r1, rows[np.repeat(start[fb], n_cross) + within % width]])
+
+    # conversation lift: distinct matched turns per side of each conv pair
+    c0, c1 = ci[r0], ci[r1]
+    cross = c0 != c1
+    r0, r1, c0, c1 = r0[cross], r1[cross], c0[cross], c1[cross]
+    swap = c0 > c1
+    ra, rb = np.where(swap, r1, r0), np.where(swap, r0, r1)
+    n_conv = max(len(ids), 1)
+    pairs, p = np.unique(ci[ra] * n_conv + ci[rb], return_inverse=True)
+    m = [_distinct_per_group(p, turn[r], pairs.size) for r in (ra, rb)]
+    ca, cb = pairs // n_conv, pairs % n_conv
+    n_turns = np.bincount(ci, minlength=len(ids))
+    n_a, n_b = n_turns[ca], n_turns[cb]
+    keep = (np.minimum(m[0] / n_a, m[1] / n_b) >= min_frac) & (
+        np.maximum(m[0], m[1]) >= np.minimum(min_matched, np.minimum(n_a, n_b))
+    )
+    return pa.table(
+        {"conv_a": ids.take(pa.array(ca[keep])), "conv_b": ids.take(pa.array(cb[keep]))}
+    )

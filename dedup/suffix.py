@@ -161,7 +161,6 @@ def doc_anchors(
 def span_candidate_pairs(
     conversations: DataFrame,
     cfg: DedupConfig | None = None,
-    materialize: bool = True,
     input_materialized: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Anchor-join candidates: pairs sharing ≥ min_span_len/(4·mod) anchors.
@@ -170,11 +169,10 @@ def span_candidate_pairs(
     pair table small: a true L-span shares ≈ L/mod anchors, so the threshold
     is conservative by 4× (alignment/normalization slack).
 
-    The anchor table is ALWAYS checkpointed (``materialize`` kept for API
-    stability, ignored): the stats-first pair kernel reads the anchor rows
-    from two subtrees (bucket stats + the s>2 membership join), and without
-    a cut the anchor pandas UDF — the expensive part of this tier — runs
-    once per subtree (measured 58 s fused vs 14.5 s checkpointed at sf0.1
+    The anchor table is ALWAYS checkpointed: the stats-first pair kernel
+    reads the anchor rows from two subtrees (bucket stats + the s>2
+    membership join), and without a cut the anchor pandas UDF — the
+    expensive part of this tier — runs once per subtree (measured 58 s fused vs 14.5 s checkpointed at sf0.1
     local[32]).
     """
     from dedup.lsh import bucketed_pairs

@@ -30,8 +30,18 @@ def test_py_minhash_estimates_jaccard():
 
 
 def test_spark_minhash_matches_python_oracle(spark, turns_df):
-    conv = assemble_conversations(turns_df).limit(20)
-    rows = with_minhash(conv, CFG).select("conv_id", "doc", "minhash").collect()
+    conv = assemble_conversations(turns_df).limit(20).select("conv_id", "doc")
+    # Unicode whitespace (no-break, em and ideographic spaces) is whitespace
+    # to py_normalize; the signature must normalize it the same way
+    ws = spark.createDataFrame(
+        [
+            ("ws_nbsp", "Tool\u00a0output:\u00a0\u00a0ROWS 1..40 ok " * 4),
+            ("ws_em", "Alpha\u2003\u2003beta gamma\u2003DELTA epsilon " * 4),
+            ("ws_ideo", "日本語\u3000テキスト\u3000\u3000mixed Text " * 4),
+        ],
+        "conv_id string, doc string",
+    )
+    rows = with_minhash(conv.unionByName(ws), CFG).select("conv_id", "doc", "minhash").collect()
     for r in rows:
         expected = py_minhash(r.doc, CFG)
         assert np.array_equal(np.array(r.minhash, dtype=np.int32), expected), r.conv_id

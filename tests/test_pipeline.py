@@ -255,8 +255,15 @@ def test_caps_audit_in_metrics(spark, turns_df, tmp_path_factory):
     # CC reported which regime ran: a small edge table finishes on the
     # driver, with no distributed rounds
     assert m["cc_driver"] is True and m["cc_edges"] > 0 and m["cc_rounds"] == 0
+    # SimHash reported its regime: the driver kernel hands any input on
+    # which a cap binds to the distributed path, so the driver regime ran
+    # exactly when no SimHash bucket overflowed
+    assert m["simhash_driver"] is (m["simhash_overflow_buckets"] == 0)
 
     # all of it persisted next to the lineage
     disk = _json.loads(open(_os.path.join(run_dir, "metrics.json")).read())
-    for k in ("caps", "lsh_overflow_buckets", "cc_edges", "cc_driver", "cc_rounds", "stages"):
+    for k in (
+        "caps", "lsh_overflow_buckets", "cc_edges", "cc_driver", "cc_rounds",
+        "simhash_driver", "stages",
+    ):
         assert k in disk, k

@@ -54,6 +54,22 @@ def test_jaccard_symmetric_and_bounded(a, b):
     assert j == py_jaccard(b, a, CFG)
 
 
+def test_pow_series_uncached_beyond_bound(monkeypatch):
+    """Series longer than the cache bound are filled per call, equal to the
+    cached ones, and never enter the cache."""
+    import dedup.minhash as mh
+
+    base = mh._ROLL_BASE
+    ref = mh._pow_series(base, 5000).copy()
+    assert all(int(ref[i]) == pow(int(base), i, 1 << 64) for i in (0, 1, 2, 999, 4999))
+    monkeypatch.setattr(mh, "_POW_CACHE_MAX", 1000)
+    monkeypatch.setattr(mh, "_POW_CACHE", {})
+    assert np.array_equal(mh._pow_series(base, 5000), ref)
+    assert mh._POW_CACHE == {}
+    assert np.array_equal(mh._pow_series(base, 700), ref[:700])
+    assert mh._POW_CACHE[int(base)].size == 1000
+
+
 def _lcs_brute(a: str, b: str) -> int:
     best = 0
     for i in range(len(a)):

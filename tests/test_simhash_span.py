@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime as dt
 
 import numpy as np
+import pytest
 
 from dedup.config import DedupConfig
 from dedup.schema import TRANSCRIPTS_SCHEMA
@@ -99,3 +100,129 @@ def test_shared_span_pipeline(spark, turns_df, corpus):
     # by construction (LCS is exact), so just sanity-check span lengths
     for r in verified.collect():
         assert r.span_len >= cfg.min_span_len
+
+
+# --- driver vs distributed regime of simhash_conv_pairs ---------------------
+
+SH_SCHEMA = "conv_id string, turn_idx int, simhash long"
+
+
+def _fp(rng):
+    return rng.getrandbits(64) - (1 << 63)
+
+
+def _flip(fp, bits):
+    for b in bits:
+        fp ^= 1 << b
+    return fp - (1 << 64) if fp >= 1 << 63 else fp
+
+
+def _single_turn_rows(rng):
+    a, b, c, m = _fp(rng), _fp(rng), _fp(rng), _fp(rng)
+    rows = [("s0", 0, a), ("s1", 0, a), ("s2", 0, b), ("s3", 0, _flip(b, [1, 40]))]
+    rows += [("s4", 0, c), ("s5", 0, _flip(c, [3, 9, 27, 60]))]  # Hamming 4: apart
+    rows += [("m0", 0, a), ("m0", 1, m)]  # covers only half of m0
+    return rows
+
+
+def _boilerplate_rows(rng):
+    boiler = _fp(rng)
+    rows = []
+    for i in range(30):
+        own = [_fp(rng), _fp(rng)]
+        rows += [(f"b{i:02d}", 0, boiler), (f"b{i:02d}", 1, own[0]), (f"b{i:02d}", 2, own[1])]
+        if i % 3 == 0:  # a near copy that shares the boilerplate turn too
+            rows += [(f"b{i:02d}_n", 0, boiler), (f"b{i:02d}_n", 1, _flip(own[0], [i % 64])),
+                     (f"b{i:02d}_n", 2, _flip(own[1], [5, 6, 7]))]
+    rows += [(f"only{i}", 0, boiler) for i in range(4)]
+    return rows
+
+
+def _non_ascii_rows(rng):
+    rows = []
+    # the last pair's UTF-8 byte order is the reverse of its UTF-16 order
+    copies = {"é": "e", "Ω": "日本", "z": "ž", "｡x": "\U0001F600x"}
+    for c, copy in copies.items():
+        f0, f1 = _fp(rng), _fp(rng)
+        rows += [(c, 0, f0), (c, 1, f1), (copy, 0, _flip(f0, [2])), (copy, 1, f1)]
+    return rows
+
+
+def _regimes(spark, monkeypatch, rows, cfg=None):
+    """(driver metrics, driver pairs, distributed pairs) for one table."""
+    import dedup.simhash as sm
+
+    sh = spark.createDataFrame(rows, SH_SCHEMA)
+    out = []
+    for forced in (False, True):
+        if forced:  # no table fits, not even an empty one
+            monkeypatch.setattr(sm, "_DRIVER_TURNS", -1)
+        m = {}
+        pairs, overflow = sm.simhash_conv_pairs(sh, cfg, return_overflow=True, metrics_out=m)
+        out.append((m["simhash_driver"], pairs, overflow))
+    monkeypatch.undo()
+    return out
+
+
+def _pair_set(df):
+    return sorted((r.conv_a, r.conv_b, r.source) for r in df.collect())
+
+
+@pytest.mark.parametrize(
+    "make_rows", [_single_turn_rows, _boilerplate_rows, _non_ascii_rows]
+)
+def test_simhash_regimes_identical(spark, monkeypatch, make_rows):
+    import random
+
+    (drv, dp, _), (dist, xp, _) = _regimes(spark, monkeypatch, make_rows(random.Random(7)))
+    assert drv is True and dist is False
+    got = _pair_set(dp)
+    assert got and got == _pair_set(xp)
+    assert all(a.encode() < b.encode() for a, b, _ in got)
+
+
+def test_simhash_regimes_expected_pairs(spark, monkeypatch):
+    import random
+
+    (_, dp, _), _ = _regimes(spark, monkeypatch, _single_turn_rows(random.Random(7)))
+    assert {(a, b) for a, b, _ in _pair_set(dp)} == {("s0", "s1"), ("s2", "s3")}
+    (_, dp, _), _ = _regimes(spark, monkeypatch, _non_ascii_rows(random.Random(7)))
+    got = {(a, b) for a, b, _ in _pair_set(dp)}
+    assert got == {("e", "é"), ("z", "ž"), ("Ω", "日本"), ("｡x", "\U0001F600x")}
+
+
+def test_simhash_regimes_empty_input(spark, monkeypatch):
+    (drv, dp, dov), (dist, xp, xov) = _regimes(spark, monkeypatch, [])
+    assert drv is True and dist is False
+    assert dp.collect() == [] and xp.collect() == []
+    assert dov.collect() == [] and xov.collect() == []
+    strip = lambda df: [(f.name, f.dataType) for f in df.schema]  # noqa: E731
+    assert strip(dp) == strip(xp) and strip(dov) == strip(xov)
+
+
+def test_simhash_driver_falls_back_when_a_cap_binds(spark, monkeypatch):
+    """A boilerplate group larger than the cap needs star edges: the driver
+    kernel hands the table to the distributed path, overflow rows and all."""
+    import random
+
+    cfg = DedupConfig(band_bucket_cap=3)
+    (drv, dp, dov), (_, xp, xov) = _regimes(
+        spark, monkeypatch, _boilerplate_rows(random.Random(7)), cfg
+    )
+    assert drv is False
+    assert _pair_set(dp) == _pair_set(xp)
+    assert dov.count() == xov.count() > 0
+
+
+def test_simhash_driver_falls_back_over_pair_budget(spark, monkeypatch):
+    import random
+
+    import dedup.simhash as sm
+
+    rows = _boilerplate_rows(random.Random(7))
+    (_, ref, _), _ = _regimes(spark, monkeypatch, rows)
+    monkeypatch.setattr(sm, "_DRIVER_PAIRS", 10)
+    m = {}
+    got = sm.simhash_conv_pairs(spark.createDataFrame(rows, SH_SCHEMA), metrics_out=m)
+    assert m["simhash_driver"] is False
+    assert _pair_set(got) == _pair_set(ref)
