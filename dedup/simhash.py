@@ -51,14 +51,18 @@ from pyspark.sql import types as T
 
 from dedup.config import DedupConfig
 
-#: largest turn-fingerprint table paired on the driver (1M rows are ~25 MB
-#: of Arrow).
-_DRIVER_TURNS = 1_000_000
+#: largest turn-fingerprint table paired on the driver. Measured on a
+#: 4-core host with synth_spark turn tables: at 100k and 300k turns the
+#: driver regime took 0.6 s and 3 s against 7-13 s and 10-20 s distributed;
+#: at 500k and 1M turns a band bucket exceeded the default cap, so the
+#: kernel could only fall back (at 500k, ~1.3 s later than going
+#: distributed at once).
+_DRIVER_TURNS = 300_000
 #: most candidate pairs (fingerprint pairs from the band buckets plus turn
 #: pairs from the exact groups and their expansion) the driver kernel
-#: enumerates. Measured on one core: 300k random fingerprints enumerate
-#: ~2.7M band pairs in 0.6 s and 120 MB; memory is ~100 B per pair.
-_DRIVER_PAIRS = 8_000_000
+#: enumerates. The 300k-turn table above enumerates 22.8M band pairs in
+#: 2.4 s on one core and ~0.5 GB of driver memory.
+_DRIVER_PAIRS = 24_000_000
 
 
 def _hard_normalize(text: str) -> str:
@@ -603,14 +607,19 @@ def simhash_conv_pairs(
 
     ``metrics_out``: optional dict filled with ``simhash_driver`` (which
     regime ran).
+
+    The regime is picked by a row count of ``turns_sh``, so a table above
+    ``_DRIVER_TURNS`` is never collected; pass a checkpointed table (the
+    pipeline does) to keep that count one cheap job.
     """
     cfg = cfg or DedupConfig()
     spark = turns_sh.sparkSession
     t = turns_sh.select("conv_id", "turn_idx", "simhash")
-    table = t.limit(_DRIVER_TURNS + 1).toArrow()
     lifted = None
-    if table.num_rows <= _DRIVER_TURNS:
-        lifted = _driver_conv_pairs(table, cfg, min_shared_turn_frac, min_matched_turns)
+    if t.count() <= _DRIVER_TURNS:
+        lifted = _driver_conv_pairs(
+            t.toArrow(), cfg, min_shared_turn_frac, min_matched_turns
+        )
     if lifted is not None:
         out = spark.createDataFrame(lifted, "conv_a string, conv_b string").withColumn(
             "source", F.lit("simhash")
@@ -656,11 +665,11 @@ def _distributed_conv_pairs(
     return out, overflow
 
 
-_POPCOUNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.int64)
+_POPCOUNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
 
 
 def _popcount64(x: np.ndarray) -> np.ndarray:
-    return _POPCOUNT8[x.view(np.uint8).reshape(-1, 8)].sum(axis=1)
+    return _POPCOUNT8[x.view(np.uint8).reshape(-1, 8)].sum(axis=1, dtype=np.uint8)
 
 
 def _group_pairs(members: np.ndarray, sizes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -706,28 +715,35 @@ def _driver_conv_pairs(
     )
     if cnt.max(initial=0) > cap:
         return None
-    budget = _DRIVER_PAIRS
 
     # near fingerprint pairs: the distributed path's pigeonhole band buckets
-    # over the distinct fingerprints
+    # over the distinct fingerprints. Every bucket is sized before any pair
+    # is enumerated, so a binding cap or an exhausted budget costs the sorts
+    # only.
+    budget = _DRIVER_PAIRS - int((cnt * (cnt - 1) // 2).sum())
     nb = cfg.simhash_blocks
     if nb is None:
         nb = pick_simhash_blocks(max(fps.size, 1), cfg.simhash_bits, k)
     blocks, keys = _pigeonhole_layout(cfg.simhash_bits, k, nb)
     u = fps.view(np.uint64)
     blk = [(u >> np.uint64(off)) & np.uint64((1 << w) - 1) for off, w in blocks]
-    fa, fb = [], []
+    bands = []
     for key_parts in keys:
         key = np.zeros_like(u)
         for bi, shift in key_parts:
             key += blk[bi] << np.uint64(shift)
         order = np.argsort(key)
-        _, sizes = np.unique(key[order], return_counts=True)
+        key = key[order]
+        heads = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
+        sizes = np.diff(np.r_[heads, key.size])
         if sizes.max(initial=0) > cap:
             return None
         budget -= int((sizes * (sizes - 1) // 2).sum())
         if budget < 0:
             return None
+        bands.append((order, sizes))
+    fa, fb = [], []
+    for order, sizes in bands:
         a, b = _group_pairs(order, sizes)
         hit = _popcount64(u[a] ^ u[b]) <= k  # distinct fingerprints: never 0
         fa.append(np.minimum(a, b)[hit])
@@ -740,7 +756,7 @@ def _driver_conv_pairs(
 
     # turn pairs: every pair inside an exact group, every cross pair of a
     # near fingerprint pair
-    budget -= int((cnt * (cnt - 1) // 2).sum() + (cnt[fa] * cnt[fb]).sum())
+    budget -= int((cnt[fa] * cnt[fb]).sum())
     if budget < 0:
         return None
     rows = np.argsort(fpi)  # rows grouped by fingerprint

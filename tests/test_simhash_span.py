@@ -148,7 +148,7 @@ def _non_ascii_rows(rng):
     return rows
 
 
-def _regimes(spark, monkeypatch, rows, cfg=None):
+def _regimes(spark, monkeypatch, rows, cfg=None, **rules):
     """(driver metrics, driver pairs, distributed pairs) for one table."""
     import dedup.simhash as sm
 
@@ -158,7 +158,9 @@ def _regimes(spark, monkeypatch, rows, cfg=None):
         if forced:  # no table fits, not even an empty one
             monkeypatch.setattr(sm, "_DRIVER_TURNS", -1)
         m = {}
-        pairs, overflow = sm.simhash_conv_pairs(sh, cfg, return_overflow=True, metrics_out=m)
+        pairs, overflow = sm.simhash_conv_pairs(
+            sh, cfg, return_overflow=True, metrics_out=m, **rules
+        )
         out.append((m["simhash_driver"], pairs, overflow))
     monkeypatch.undo()
     return out
@@ -169,12 +171,23 @@ def _pair_set(df):
 
 
 @pytest.mark.parametrize(
+    "cfg, rules",
+    [
+        (None, {}),
+        (None, {"min_matched_turns": 1, "min_shared_turn_frac": 0.5}),
+        (DedupConfig(simhash_blocks=6), {}),
+    ],
+    ids=["default", "loose-rules", "blocks6"],
+)
+@pytest.mark.parametrize(
     "make_rows", [_single_turn_rows, _boilerplate_rows, _non_ascii_rows]
 )
-def test_simhash_regimes_identical(spark, monkeypatch, make_rows):
+def test_simhash_regimes_identical(spark, monkeypatch, make_rows, cfg, rules):
     import random
 
-    (drv, dp, _), (dist, xp, _) = _regimes(spark, monkeypatch, make_rows(random.Random(7)))
+    (drv, dp, _), (dist, xp, _) = _regimes(
+        spark, monkeypatch, make_rows(random.Random(7)), cfg, **rules
+    )
     assert drv is True and dist is False
     got = _pair_set(dp)
     assert got and got == _pair_set(xp)
@@ -225,4 +238,25 @@ def test_simhash_driver_falls_back_over_pair_budget(spark, monkeypatch):
     m = {}
     got = sm.simhash_conv_pairs(spark.createDataFrame(rows, SH_SCHEMA), metrics_out=m)
     assert m["simhash_driver"] is False
+    assert _pair_set(got) == _pair_set(ref)
+
+
+def test_simhash_table_above_the_bound_is_not_collected(spark, monkeypatch):
+    import random
+
+    import dedup.simhash as sm
+
+    rows = _single_turn_rows(random.Random(7))
+    sh = spark.createDataFrame(rows, SH_SCHEMA)
+    ref = sm.simhash_conv_pairs(sh)
+
+    def no_collect(self):
+        raise AssertionError("table above the driver bound was collected")
+
+    monkeypatch.setattr(sm, "_DRIVER_TURNS", len(rows) - 1)
+    monkeypatch.setattr(type(sh), "toArrow", no_collect)
+    m = {}
+    got = sm.simhash_conv_pairs(sh, metrics_out=m)
+    assert m["simhash_driver"] is False
+    monkeypatch.undo()
     assert _pair_set(got) == _pair_set(ref)
