@@ -281,7 +281,9 @@ def q_neardup_docs_minhash(spark, sf_dir):
 
     cfg = DedupConfig(exact_verify=True)
     conv = _conversations(spark, sf_dir)
-    sigs = with_minhash(conv, cfg).select("conv_id", "minhash")
+    # one cut: banding, the membership join and verify_pairs all read sigs,
+    # and without it the signature UDF would run once per consumer
+    sigs = with_minhash(conv, cfg).select("conv_id", "minhash").localCheckpoint()
     pairs, _ = candidate_pairs(sigs, cfg)
     edges = verify_pairs(pairs, sigs, cfg, conversations=conv)
     return edges.select("conv_a", "conv_b", F.round("similarity", 6).alias("similarity"))

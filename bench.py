@@ -1,7 +1,8 @@
 """Benchmark harness — one JSON line to stdout.
 
 Runs the headline dedup queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]:
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: every core this
+process may run on):
 
 - ``pipeline_synth``: the full near-dup pipeline (exact + MinHash/LSH +
   SimHash + span → verify → CC → keep) over a deterministic synthetic
@@ -25,7 +26,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 SEED = 42
 
 
@@ -200,16 +201,7 @@ def main() -> None:
         "conv_id",
         "left_semi",
     )
-    _noop_write(
-        DedupPipeline(
-            spark,
-            DedupConfig(),
-            fused=os.environ.get("SPARK_GRAFT_BENCH_FUSED", "1") == "1",
-            tier_metrics=False,
-        )
-        .run(wslice)
-        .clusters
-    )
+    _noop_write(DedupPipeline(spark, DedupConfig()).run(wslice).clusters)
     _fas(spark)
 
     # --- headline: full pipeline on synthetic transcripts ---------------
@@ -222,10 +214,6 @@ def main() -> None:
     # fact; each rep carries a SAME-MOMENT spin sample so the reported
     # best-rep wall has its own host-speed context in the JSON.
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-    # fused + no tier-metric jobs: the benchmark measures the dedup dataflow,
-    # not optional accounting; fused correctness is pinned by
-    # tests/test_pipeline.py::test_fused_run_identical_clusters
-    fused = os.environ.get("SPARK_GRAFT_BENCH_FUSED", "1") == "1"
     n_procs = int(CPUS) if str(CPUS).isdigit() else (os.cpu_count() or 8)
     # refuse-starved-hosts gate (VERDICT r04 #1): wait for a qualifying
     # window before the first rep; re-check (short budget) before later reps
@@ -237,9 +225,7 @@ def main() -> None:
         if rep:
             gates.append(host_gate(n_procs, budget_sec=GATE_MAX_WAIT_SEC / 3))
         t0 = time.monotonic()
-        result = DedupPipeline(
-            spark, DedupConfig(), fused=fused, tier_metrics=not fused
-        ).run(turns)
+        result = DedupPipeline(spark, DedupConfig()).run(turns)
         _noop_write(result.clusters)
         walls.append(time.monotonic() - t0)
         stage_walls.append(
@@ -270,7 +256,6 @@ def main() -> None:
         "qualified": all(g["qualified"] for g in gates),
         "reps": gates,
     }
-    extras["fused"] = fused
 
     if os.environ.get("SPARK_GRAFT_BENCH_ONLY") == "pipeline_synth":
         print(
@@ -297,9 +282,8 @@ def main() -> None:
     dres = DedupPipeline(spark, DedupConfig(min_span_len=150)).run(dturns)
     _noop_write(dres.clusters)
     timings["pipeline_testdata"] = round(time.monotonic() - t0, 3)
-    # attribution: this run is UNFUSED with tier metrics on (the accounting
-    # path), unlike the fused pipeline_synth — record its stage walls so a
-    # regression is decomposable from the JSON alone
+    # record its stage walls so a regression is decomposable from the JSON
+    # alone
     extras["pipeline_testdata_stage_walls"] = {
         s["stage"]: s["seconds"] for s in dres.metrics["stages"]
     }
@@ -314,7 +298,11 @@ def main() -> None:
     conv = assemble_conversations(turns).localCheckpoint()
 
     t0 = time.monotonic()
-    sigs = with_minhash(conv).select("conv_id", "minhash").localCheckpoint()
+    sigs = (
+        with_minhash(conv, repartition="auto")
+        .select("conv_id", "minhash")
+        .localCheckpoint()
+    )
     timings["minhash_signatures"] = round(time.monotonic() - t0, 3)
 
     t0 = time.monotonic()

@@ -79,15 +79,6 @@ class DedupConfig:
     #: cap on members of one LSH band bucket; bigger buckets are broken up
     #: deterministically and the overflow is logged (never silently dropped).
     band_bucket_cap: int = 2000
-    #: pair-kernel variant for the bucket stats pass, shared by the LSH /
-    #: SimHash / span tiers: "stats" (default — ONE wide aggregation, the
-    #: byte-and-wall winner for the narrow member structs these tiers carry,
-    #: tools/kernel_ab.py) or "counts" (count-only pass 1, members fetched
-    #: for duplicate buckets only — for genuinely wide member payloads).
-    #: A config field, not ambient env (VERDICT r05 #5): one pipeline run
-    #: can no longer mix kernels across tiers mid-session; CLI surfaces may
-    #: map an env var onto this field at construction time.
-    pairs_kernel: str = "stats"
 
     # ---- SimHash tier ----------------------------------------------------
     simhash_bits: int = 64
@@ -123,8 +114,6 @@ class DedupConfig:
     seed: int = 42
 
     # ---- execution --------------------------------------------------------
-    #: shuffle partitions; None ⇒ leave session default.
-    shuffle_partitions: int | None = None
     #: max connected-components iterations before declaring non-convergence.
     cc_max_iters: int = 25
 
@@ -134,10 +123,6 @@ class DedupConfig:
             raise ValueError(
                 f"num_perm ({self.num_perm}) must equal "
                 f"lsh_bands*lsh_rows ({self.lsh_bands}*{self.lsh_rows})"
-            )
-        if self.pairs_kernel not in ("stats", "counts"):
-            raise ValueError(
-                f"pairs_kernel must be 'stats' or 'counts', got {self.pairs_kernel!r}"
             )
 
 

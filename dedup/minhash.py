@@ -304,26 +304,18 @@ def with_minhash(
     first: signature cost scales with ROWS, while upstream AQE coalesces
     shuffle output by BYTES — without this, a text corpus that fits in a
     couple of 64 MB partitions runs the UDF on a couple of cores.
-    ``repartition="auto"`` (for MATERIALIZED inputs only — checkpointed or
-    parquet-backed) reads the real partition count and skips the full-text
-    shuffle when the input is already wide enough.
+    ``True`` always spreads the rows. ``"auto"`` (for MATERIALIZED inputs
+    only — checkpointed or parquet-backed) reads the real partition count
+    and skips the full-text shuffle when the input is already wide enough
+    (see ``util.spread_for_udf``).
     """
     from dedup.util import spread_for_udf
 
-    from dedup.util import narrow_plan
-
     cfg = cfg or DedupConfig()
     udf = make_minhash_udf(cfg)
-    if repartition == "auto":
-        conversations = spread_for_udf(conversations, materialized=True)
-    elif repartition:
-        # repartition=True callers may hand a MATERIALIZED frame (the bench
-        # micro passes a localCheckpoint): when the plan is narrow over
-        # materialized bytes, reading the real partition count is free and
-        # skips an unconditional full-doc-text shuffle (same contract —
-        # rows are spread to >= cluster parallelism either way)
+    if repartition:
         conversations = spread_for_udf(
-            conversations, materialized=narrow_plan(conversations)
+            conversations, materialized=repartition == "auto"
         )
     return conversations.withColumn("minhash", udf(F.col("doc")))
 

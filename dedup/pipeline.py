@@ -67,32 +67,17 @@ class DedupPipeline:
         enable_span: bool = True,
         keep_policy: str = "oldest",
         log=None,
-        fused: bool = False,
-        tier_metrics: bool = True,
-        concurrent: bool = True,
     ):
-        """``fused=True`` skips the tier-internal checkpoints (sized LSH
-        buckets, simhash turn/turn-pair tables, anchor tables): Spark's
-        exchange reuse computes each self-joined intermediate once per
-        action anyway, so a fused run collapses ~6 eager materializations
-        into the stage writes — lower fixed cost per job, at the price of
-        recomputing tier lineage if a stage-level retry or the
-        overflow-metrics job re-reads it (pair a fused benchmark run with
-        ``tier_metrics=False``). Stage checkpoints (and resume) are
-        unaffected.
-
-        ``concurrent=True`` (default) builds the independent fingerprint
-        tiers in parallel driver threads: the signature UDF + LSH stats,
-        the SimHash UDF + its pair kernel, and the span anchor UDF share no
-        inputs beyond the conversations stage, so their eager jobs are
-        submitted to the Spark scheduler concurrently. Serializing them
-        (concurrent=False — same DataFrames, same results, sequential
-        submission) leaves most task slots idle during every narrow stage
-        (stats aggregations, checkpoints, Arrow batch boundaries) — idle
-        slots cost nothing on a small cluster but scale linearly with
-        cluster width, which is precisely the N→4N scaling-efficiency
-        failure mode. Stage walls still sum to the run wall; attribution
-        follows stage completion order."""
+        """The independent fingerprint tiers are built in parallel driver
+        threads: the signature UDF + LSH stats, the SimHash UDF + its pair
+        kernel, and the span anchor UDF share no inputs beyond the
+        conversations stage, so their eager jobs are submitted to the Spark
+        scheduler concurrently. Serial submission would leave most task
+        slots idle during every narrow stage (stats aggregations,
+        checkpoints, Arrow batch boundaries) — idle slots cost nothing on a
+        small cluster but scale linearly with cluster width. Stage walls
+        still sum to the run wall; attribution follows stage completion
+        order."""
         self.spark = spark
         self.cfg = cfg or DedupConfig()
         self.run_dir = run_dir
@@ -100,9 +85,6 @@ class DedupPipeline:
         self.enable_span = enable_span
         self.keep_policy = keep_policy
         self.log = log or (lambda msg: None)
-        self.fused = fused
-        self.tier_metrics = tier_metrics
-        self.concurrent = concurrent
         self._lineage: list[dict] = []
         self._shuffle_snap: dict = {}
 
@@ -163,7 +145,7 @@ class DedupPipeline:
         # Same attribution rule as the walls: deltas follow stage COMPLETION
         # order, so with concurrent tier threads a section's bytes include
         # whatever other tiers' jobs finished during it — exact per-run
-        # totals, approximate per-stage split (exact when concurrent=False).
+        # totals, approximate per-stage split.
         snap = shuffle_totals(self.spark)
         if snap and self._shuffle_snap:
             entry["shuffle"] = shuffle_delta(self._shuffle_snap, snap)
@@ -179,20 +161,20 @@ class DedupPipeline:
     # ---- stages ---------------------------------------------------------
 
     def run(self, turns: DataFrame) -> PipelineResult:
-        from dedup.util import persistent_rdd_ids, unpersist_ids
+        from concurrent.futures import ThreadPoolExecutor
+
+        from dedup.util import persistent_rdd_ids, shuffle_totals
 
         cfg = self.cfg
         metrics: dict = {}
         self._section_t0 = time.monotonic()
-        from dedup.util import shuffle_totals
-
         self._shuffle_snap = shuffle_totals(self.spark)
         _pre_ids = persistent_rdd_ids(self.spark)
 
         # S8 ingest-reject accounting rides the assemble action via observe()
         # — no extra corpus scan; skipped on resume (the action never fires)
         rej_obs = None
-        if self.tier_metrics and not self._done("conversations"):
+        if not self._done("conversations"):
             conv_df, rej_obs = assemble_conversations(turns, cfg, observe_rejects=True)
         else:
             conv_df = assemble_conversations(turns, cfg)
@@ -203,13 +185,12 @@ class DedupPipeline:
 
         # Tier construction: the signature UDF (+LSH stats), the SimHash
         # UDF (+pair kernel) and the span anchor UDF are independent given
-        # the conversations stage. ``concurrent`` submits their EAGER jobs
-        # (stage writes, stats/UDF-table checkpoints) from parallel driver
+        # the conversations stage. Their EAGER jobs (stage writes,
+        # stats/UDF-table checkpoints) are submitted from parallel driver
         # threads so the Spark scheduler backfills idle task slots — the
         # narrow phases of one tier overlap the wide phases of another.
         # Resume guards unchanged: a tier's kernels are never even
         # constructed when the stage consuming them is already on disk.
-        mat = not self.fused
         pairs_done = self._done("pairs")
         edges_done = self._done("edges")
         span_needed = self.enable_span and not edges_done
@@ -226,9 +207,7 @@ class DedupPipeline:
                 # dedup=False: the strongest-source groupBy below is the
                 # single pair-dedup shuffle for every tier — a per-tier
                 # dropDuplicates would shuffle the same pair set twice
-                lsh_pairs, lsh_overflow = candidate_pairs(
-                    sigs, cfg, materialize=mat, dedup=False
-                )
+                lsh_pairs, lsh_overflow = candidate_pairs(sigs, cfg, dedup=False)
                 tier["lsh"] = lsh_pairs
                 overflow_dfs["lsh_overflow_buckets"] = lsh_overflow
 
@@ -252,22 +231,19 @@ class DedupPipeline:
             # cost matters), and an unconditional repartition would shuffle
             # the FULL raw text payload (measured: 1.3 GB moved for nothing
             # at 6.4M turns; walls equal at same-moment host speed).
-            # ALWAYS materialize the per-turn simhash table (fused or not):
-            # the stats-first pair kernel reads the banded rows from two
-            # subtrees (the stats agg + the s>2 membership join), and
-            # without a checkpoint the simhash UDF — the most expensive
+            # Checkpoint the per-turn simhash table: the pair kernel reads
+            # it from several subtrees (the stats agg + the s>2 membership
+            # join), and without a cut the simhash UDF — the most expensive
             # kernel in the stage — would run once per subtree
             sh = (
                 with_turn_simhash(turns_f, cfg)
                 .select("conv_id", "turn_idx", "simhash")
                 .localCheckpoint()
             )
-            # materialize=False in BOTH modes: the turn-pair table has
-            # exactly ONE consumer (the coverage aggregation inside
-            # simhash_conv_pairs) and its expensive inputs (the turn-simhash
-            # table above, the fp stats tables) are already checkpointed —
-            # the unfused path paid a ~1M-row write+read for nothing
-            # (OPTIMIZATION_r06.md §11; the fused path already elided it)
+            # materialize=False: the turn-pair table has exactly ONE
+            # consumer (the coverage aggregation inside simhash_conv_pairs)
+            # and its expensive inputs (the turn-simhash table above, the fp
+            # stats tables) are already checkpointed
             sh_pairs, sh_overflow = simhash_conv_pairs(
                 sh, cfg, materialize=False, return_overflow=True, metrics_out=metrics
             )
@@ -289,15 +265,9 @@ class DedupPipeline:
             tasks.append(t_simhash)
         if span_needed:
             tasks.append(t_span)
-        if self.concurrent and len(tasks) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=len(tasks)) as ex:
-                for f in [ex.submit(t) for t in tasks]:
-                    f.result()
-        else:
-            for t in tasks:
-                t()
+        with ThreadPoolExecutor(max_workers=len(tasks)) as ex:
+            for f in [ex.submit(t) for t in tasks]:
+                f.result()
         sigs = tier["sigs"]
 
         all_pairs = None
@@ -365,13 +335,8 @@ class DedupPipeline:
         # overflow counts are batched into ONE tiny union-agg job instead of
         # one standalone .count() per tier; it must run here, before the
         # end-of-run scratch-checkpoint cleanup frees the blocks the
-        # overflow lineage reads. ``tier_metrics=False`` (benchmark mode)
-        # skips the job and records the skip — the capped members still got
-        # star edges, so no DATA was dropped, only this count.
-        if not self.tier_metrics:
-            metrics["tier_metrics_skipped"] = sorted(overflow_dfs)
-            self.log("tier overflow metrics skipped: " + ", ".join(sorted(overflow_dfs)))
-        elif overflow_dfs:
+        # overflow lineage reads.
+        if overflow_dfs:
             aggs = None
             for name, df in overflow_dfs.items():
                 one = df.select(
@@ -402,9 +367,7 @@ class DedupPipeline:
             _before_clusters = persistent_rdd_ids(self.spark)
             clusters = self._materialize(
                 "clusters",
-                select_representatives(
-                    cc.withColumnRenamed("conv_id", "conv_id"), conv, self.keep_policy
-                ),
+                select_representatives(cc, conv, self.keep_policy),
             )
             # free every scratch checkpoint this run pinned (tier sized
             # tables, simhash/turn-pair tables, CC rounds, conv/sigs/...)

@@ -475,41 +475,19 @@ def simhash_turn_pairs(
 
     # One aggregation over the turn table feeds path 1 (duplicate
     # fingerprint groups), path 2 (the distinct-fingerprint list + its
-    # count), and the block picker. Default kernel is the one-pass stats
-    # aggregation: the count-first split saves only 3.7% shuffle bytes on
-    # this tier (330.9 vs 343.1 MB recorded, tools/kernel_ab.py — the
-    # (conv_id, turn_idx) member struct is narrow) while adding 15 stages
-    # and consistently worse walls (34.8 vs 23.7 s at comparable spins).
-    # ``counts`` stays selectable (cfg.pairs_kernel) for wide-member
-    # workloads and A/Bs.
+    # count), and the block picker.
     m0 = F.struct("conv_id", "turn_idx")
     keyed0 = t.select("simhash", m0.alias("m"))
-    if cfg.pairs_kernel == "counts":
-        fp_counts = (
-            t.groupBy("simhash").agg(F.count(F.lit(1)).alias("s")).localCheckpoint()
+    fp_counts = (
+        t.groupBy("simhash")
+        .agg(
+            F.count(F.lit(1)).alias("s"),
+            F.min(m0).alias("m0"),
+            F.max(m0).alias("m1"),
         )
-        dup_fps = fp_counts.where(F.col("s") > 1).select("simhash")
-        stats0 = (
-            keyed0.join(dup_fps, "simhash")
-            .groupBy("simhash")
-            .agg(
-                F.count(F.lit(1)).alias("s"),
-                F.min("m").alias("m0"),
-                F.max("m").alias("m1"),
-            )
-            .localCheckpoint()
-        )
-    else:
-        fp_counts = (
-            t.groupBy("simhash")
-            .agg(
-                F.count(F.lit(1)).alias("s"),
-                F.min(m0).alias("m0"),
-                F.max(m0).alias("m1"),
-            )
-            .localCheckpoint()
-        )
-        stats0 = fp_counts.where(F.col("s") > 1)
+        .localCheckpoint()
+    )
+    stats0 = fp_counts.where(F.col("s") > 1)
 
     # (1) exact fingerprint groups — no banding, one row per turn
     raw0, ov0 = route_bucket_pairs(
@@ -527,8 +505,7 @@ def simhash_turn_pairs(
         "simhash", F.explode(F.array(*_band_structs(cfg, nb))).alias("c")
     ).select("simhash", "c.chunk_id", "c.chunk_val")
     rawf, ovf = bucketed_pairs(
-        banded, ["chunk_id", "chunk_val"], ["simhash"], cfg.band_bucket_cap,
-        materialize=False, kernel=cfg.pairs_kernel,
+        banded, ["chunk_id", "chunk_val"], ["simhash"], cfg.band_bucket_cap
     )
     fp_pairs = (
         rawf.select(F.col("a.simhash").alias("fa"), F.col("b.simhash").alias("fb"))
@@ -543,8 +520,8 @@ def simhash_turn_pairs(
     # the fp pair, members = the turns carrying either fingerprint.
     # ``sides`` is CHECKPOINTED: it is tiny (two rows per true near-dup fp
     # pair) but its lineage contains the whole path-2 banding + dedup
-    # shuffle — the expansion join below is consumed by several eager
-    # passes (counts, stats, membership), and without a cut each pass
+    # shuffle — the expansion join below is read by two passes (bucket
+    # stats, membership join), and without a cut each pass
     # would re-run path 2 from scratch (no exchange reuse across actions)
     sides = fp_pairs.select(
         F.col("fa").alias("simhash"), "fa", "fb", "fham"
@@ -554,7 +531,7 @@ def simhash_turn_pairs(
     exp_rows = t.join(sides, "simhash")  # sides is small → AQE broadcast
     raw1, ov1 = bucketed_pairs(
         exp_rows, ["fa", "fb", "fham"], ["conv_id", "turn_idx", "simhash"],
-        cfg.band_bucket_cap, materialize=False, kernel=cfg.pairs_kernel,
+        cfg.band_bucket_cap,
     )
     pairs1 = _turn_pairs(
         # same-fp pairs inside an expansion bucket are path-1 territory

@@ -169,11 +169,11 @@ def span_candidate_pairs(
     pair table small: a true L-span shares ≈ L/mod anchors, so the threshold
     is conservative by 4× (alignment/normalization slack).
 
-    The anchor table is ALWAYS checkpointed: the stats-first pair kernel
-    reads the anchor rows from two subtrees (bucket stats + the s>2
-    membership join), and without a cut the anchor pandas UDF — the
-    expensive part of this tier — runs once per subtree (measured 58 s fused vs 14.5 s checkpointed at sf0.1
-    local[32]).
+    The anchor table is ALWAYS checkpointed: ``bucketed_pairs`` reads the
+    anchor rows twice (bucket stats + the s>2 membership join), and
+    without a cut the anchor pandas UDF — the expensive part of this
+    tier — runs once per read (measured 58 s uncut vs 14.5 s checkpointed
+    at sf0.1 local[32]).
     """
     from dedup.lsh import bucketed_pairs
 
@@ -189,8 +189,6 @@ def span_candidate_pairs(
         ["anchor_hash"],
         ["conv_id"],
         cfg.band_bucket_cap,
-        materialize=False,  # anchors above IS the cut; keyed re-read is free
-        kernel=cfg.pairs_kernel,
     )
     pairs = (
         raw.select(

@@ -83,31 +83,6 @@ def shuffle_delta(
     return {k: after[k] - before[k] for k in after if k in before}
 
 
-def narrow_plan(df) -> bool:
-    """True when re-computing ``df`` is a NARROW pass over already-scanned
-    bytes: no exchange, no Python evaluation, no join/aggregate/sort anywhere
-    in the physical plan. Such frames are cheap to evaluate once per consumer
-    and do not need a defensive localCheckpoint — e.g. LSH banding (project +
-    explode + xxhash64) over a checkpointed or parquet-backed signature
-    table. Planning only; nothing is executed. Conservative on error."""
-    try:
-        s = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-    except Exception:  # noqa: BLE001
-        return False
-    bad = (
-        "Exchange",
-        "EvalPython",
-        "MapInPandas",
-        "MapInArrow",
-        "Subquery",
-        "Join",
-        "Aggregate",
-        "Window",
-        "Sort",
-    )
-    return not any(b in s for b in bad)
-
-
 def spread_for_udf(df, materialized: bool = True):
     """Ensure a pandas-UDF input has ≥ cluster-parallelism partitions —
     WITHOUT a blanket repartition. UDF cost scales with ROWS, and upstream

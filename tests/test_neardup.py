@@ -135,7 +135,7 @@ def test_bucketed_pairs_array_agg_is_cap_bounded(spark):
         [(1, f"m{i}") for i in range(20)] + [(2, "x"), (2, "y"), (2, "z")],
         "bucket int, member string",
     )
-    pairs, _ = bucketed_pairs(rows, ["bucket"], ["member"], cap=5, materialize=False)
+    pairs, _ = bucketed_pairs(rows, ["bucket"], ["member"], cap=5)
     plan = pairs._jdf.queryExecution().optimizedPlan().treeString()
     lines = plan.splitlines()
     agg_idx = [i for i, l in enumerate(lines) if "collect_list" in l]
@@ -151,32 +151,3 @@ def test_bucketed_pairs_array_agg_is_cap_bounded(spark):
             re.search(r"<= 5\)?", l) for l in subtree
         ), "collect_list aggregate not gated by the cap filter:\n" + plan
 
-
-def test_pair_kernel_variants_identical(spark, turns_df):
-    """The one-pass stats (default, by recorded bytes — tools/kernel_ab.py)
-    and count-first pair kernels must emit identical pair sets — the
-    ``DedupConfig.pairs_kernel`` knob selects cost, never results."""
-    from dedup.assemble import assemble_conversations
-    from dedup.config import DedupConfig
-    from dedup.lsh import candidate_pairs
-    from dedup.minhash import with_minhash
-    from dedup.simhash import simhash_turn_pairs, with_turn_simhash
-
-    conv = assemble_conversations(turns_df).localCheckpoint()
-    sigs = with_minhash(conv).select("conv_id", "minhash").localCheckpoint()
-    sh = (
-        with_turn_simhash(turns_df.join(conv.select("conv_id"), "conv_id", "left_semi"))
-        .select("conv_id", "turn_idx", "simhash")
-        .localCheckpoint()
-    )
-    out = {}
-    for kern in ("counts", "stats"):
-        lp, _ = candidate_pairs(sigs, DedupConfig(pairs_kernel=kern))
-        tp, _ = simhash_turn_pairs(sh, DedupConfig(pairs_kernel=kern))
-        out[kern] = (
-            {(r.conv_a, r.conv_b) for r in lp.collect()},
-            {(r.conv_a, r.turn_a, r.conv_b, r.turn_b, r.hamming) for r in tp.collect()},
-        )
-    assert out["counts"][0] == out["stats"][0]
-    assert out["counts"][1] == out["stats"][1]
-    assert out["counts"][0] and out["counts"][1]

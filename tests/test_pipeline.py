@@ -1,4 +1,4 @@
-"""Full pipeline orchestration: all tiers fused, keep policy, checkpoint
+"""Full pipeline orchestration: all tiers together, keep policy, checkpoint
 resume (FIXTURES.md ``keep_policy`` and ``resume``)."""
 
 from __future__ import annotations
@@ -93,16 +93,6 @@ def test_checkpoint_resume_byte_identical(spark, turns_df, tmp_path_factory):
         (r.conv_id, r.cluster_id, r.is_representative) for r in r2.clusters.collect()
     )
     assert first == second
-
-
-def test_fused_run_identical_clusters(spark, turns_df, pipeline_run):
-    """fused=True (no tier-internal checkpoints, deferred tier metrics)
-    must produce byte-identical cluster assignments."""
-    fused = DedupPipeline(
-        spark, DedupConfig(), fused=True, tier_metrics=False
-    ).run(turns_df)
-    assert _cluster_map(fused) == _cluster_map(pipeline_run)
-    assert "tier_metrics_skipped" in fused.metrics
 
 
 def test_full_resume_runs_no_eager_tier_work(spark, turns_df, tmp_path):
@@ -264,6 +254,7 @@ def test_caps_audit_in_metrics(spark, turns_df, tmp_path_factory):
     disk = _json.loads(open(_os.path.join(run_dir, "metrics.json")).read())
     for k in (
         "caps", "lsh_overflow_buckets", "cc_edges", "cc_driver", "cc_rounds",
-        "simhash_driver", "stages",
+        "simhash_driver", "stages", "ingest_rejects", "simhash_overflow_buckets",
+        "span_overflow_anchors",
     ):
         assert k in disk, k

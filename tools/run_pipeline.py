@@ -40,9 +40,6 @@ def parse_args(argv):
     p.add_argument("--seed", type=int, default=42)
     p.add_argument("--no-simhash", action="store_true")
     p.add_argument("--no-span", action="store_true")
-    p.add_argument("--fused", action="store_true",
-                   help="skip tier-internal checkpoints (fastest; tier "
-                        "overflow metrics are skipped)")
     p.add_argument("--apply-delete", action="store_true",
                    help="also write the deduplicated turns table (<output>_turns)")
     return p.parse_args(argv)
@@ -88,8 +85,6 @@ def main(argv=None) -> int:
         enable_span=not args.no_span,
         keep_policy=args.keep_policy,
         log=lambda m: print(f"[dedup] {m}", file=sys.stderr),
-        fused=args.fused,
-        tier_metrics=not args.fused,
     )
     result = pipe.run(turns)
     result.clusters.write.mode("overwrite").parquet(args.output)
