@@ -100,60 +100,6 @@ def spin_calibration(procs: int, dur: float = 2.0, mem: bool = False) -> int:
     return sum(q.get() for _ in ps)
 
 
-#: host-qualification knobs (VERDICT r04 #1: the harness must refuse to
-#: record walls on a starved host rather than record-and-explain). The
-#: 1-proc 2 s spin floor default is 80% of the r03 measurement-days' median
-#: (~15.6k iters — BENCH/BASELINE.md 1p-spin columns); the r04 collapse
-#: that invalidated two runs measured 9.5-12k on the same code.
-SPIN_1P_ABS_FLOOR = int(os.environ.get("SPARK_GRAFT_SPIN_ABS_FLOOR", "12500"))
-SPIN_REL_FLOOR = float(os.environ.get("SPARK_GRAFT_SPIN_FLOOR_FRAC", "0.8"))
-GATE_MAX_WAIT_SEC = float(os.environ.get("SPARK_GRAFT_GATE_MAX_WAIT", "900"))
-GATE_RETRY_SLEEP_SEC = float(os.environ.get("SPARK_GRAFT_GATE_SLEEP", "20"))
-
-#: session-best spins, shared by every gate call in this process
-_gate_state: dict[str, int] = {}
-
-
-def host_gate(n_procs: int, budget_sec: float | None = None) -> dict:
-    """Block until the host qualifies (1-proc spin ≥ abs floor AND both the
-    1-proc and n-proc spins ≥ SPIN_REL_FLOOR of this process's session
-    best), or the wait budget runs out. Returns a self-describing record
-    for the bench JSON: every attempt's spins, the wait, and whether the
-    host QUALIFIED — a run that proceeds unqualified is stamped
-    ``qualified: false`` so no starved wall can masquerade as a software
-    number (VERDICT r04: two rounds of unadjudicable headlines)."""
-    budget = GATE_MAX_WAIT_SEC if budget_sec is None else budget_sec
-    t0 = time.monotonic()
-    attempts = []
-    while True:
-        s1 = spin_calibration(1, dur=2.0)
-        sn = spin_calibration(n_procs, dur=2.0)
-        # 1-proc STREAMING spin: absolute bus availability context. Not a
-        # floor (the gate's qualification stays cpu-steal-based), but
-        # recorded per attempt because r05 measured whole sessions where
-        # cpu spins were healthy while 4x workers got <1x aggregate
-        # bandwidth — a wall taken then needs this number beside it.
-        s1m = spin_calibration(1, dur=2.0, mem=True)
-        _gate_state["best1"] = max(_gate_state.get("best1", 0), s1)
-        _gate_state["bestN"] = max(_gate_state.get("bestN", 0), sn)
-        ok = (
-            s1 >= SPIN_1P_ABS_FLOOR
-            and s1 >= SPIN_REL_FLOOR * _gate_state["best1"]
-            and sn >= SPIN_REL_FLOOR * _gate_state["bestN"]
-        )
-        attempts.append({"spin_1p": s1, "spin_np": sn, "spin_mem_1p": s1m, "ok": ok})
-        waited = time.monotonic() - t0
-        if ok or waited >= budget:
-            return {
-                "qualified": ok,
-                "attempts": attempts,
-                "waited_sec": round(waited, 1),
-                "floor_1p_abs": SPIN_1P_ABS_FLOOR,
-                "floor_frac": SPIN_REL_FLOOR,
-            }
-        time.sleep(GATE_RETRY_SLEEP_SEC)
-
-
 def main() -> None:
     from pyspark.sql import functions as F
 
@@ -215,15 +161,10 @@ def main() -> None:
     # best-rep wall has its own host-speed context in the JSON.
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     n_procs = int(CPUS) if str(CPUS).isdigit() else (os.cpu_count() or 8)
-    # refuse-starved-hosts gate (VERDICT r04 #1): wait for a qualifying
-    # window before the first rep; re-check (short budget) before later reps
-    gates = [host_gate(n_procs)]
-    extras["spin_iters_before"] = gates[0]["attempts"][-1]["spin_np"]
+    extras["spin_iters_before"] = spin_calibration(n_procs)
     extras["spin_mem_iters_before"] = spin_calibration(n_procs, mem=True)
     walls, stage_walls, stage_shuffle, rep_spins = [], [], [], []
     for rep in range(reps):
-        if rep:
-            gates.append(host_gate(n_procs, budget_sec=GATE_MAX_WAIT_SEC / 3))
         t0 = time.monotonic()
         result = DedupPipeline(spark, DedupConfig()).run(turns)
         _noop_write(result.clusters)
@@ -252,10 +193,6 @@ def main() -> None:
         v["shuffle_write_bytes"] for v in shuf
     )
     extras["pipeline_shuffle_read_bytes"] = sum(v["shuffle_read_bytes"] for v in shuf)
-    extras["host_gate"] = {
-        "qualified": all(g["qualified"] for g in gates),
-        "reps": gates,
-    }
 
     if os.environ.get("SPARK_GRAFT_BENCH_ONLY") == "pipeline_synth":
         print(

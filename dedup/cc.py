@@ -75,11 +75,18 @@ def connected_components(
     return out
 
 
+def dense_index(values: pa.Array) -> tuple[pa.Array, np.ndarray]:
+    """(ids, idx): the distinct ``values`` in ascending order, and each
+    value's int64 index into ``ids`` — so index order is value order."""
+    ids = pc.unique(values)
+    ids = ids.take(pc.array_sort_indices(ids))
+    return ids, pc.index_in(values, value_set=ids).to_numpy(zero_copy_only=False).astype(np.int64)
+
+
 def _driver_labels(table: pa.Table) -> tuple[pa.Table, int]:
-    ends = pa.concat_arrays([table.column(c).combine_chunks() for c in ("conv_a", "conv_b")])
-    ids = pc.unique(ends)
-    ids = ids.take(pc.array_sort_indices(ids))  # index order == conv_id order
-    idx = pc.index_in(ends, value_set=ids).to_numpy(zero_copy_only=False)
+    ids, idx = dense_index(
+        pa.concat_arrays([table.column(c).combine_chunks() for c in ("conv_a", "conv_b")])
+    )
     m = table.num_rows
     root, rounds = _union_find(idx[:m], idx[m:], len(ids))
     return pa.table({"conv_id": ids, "cluster_id": ids.take(pa.array(root))}), rounds

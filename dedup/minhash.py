@@ -101,26 +101,29 @@ def _pow_series(base: np.uint64, n: int) -> np.ndarray:
     return arr[:n]
 
 
-def _window_hashes_1d(arr_u64: np.ndarray, k: int) -> np.ndarray:
-    """UNMIXED polynomial hashes of every k-element window, O(n).
+def _roll_prefix(arr_u64: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Prefix step of the rolling hash: ``(S, B^i)``, S[j] = Σ_{i<j} a[i]·B^{-i}.
 
-    Uses the invertible-base prefix trick: with odd base B (invertible mod
-    2^64), prefix sums of a[j]·B^{-j} give every window hash in six
-    vectorized passes — the naive sliding_window_view @ weights matmul runs
-    ~50× slower on the strided view. Values equal poly(window)·B^{-i}
-    (i = window start): a fixed bijection per position that the mix64
-    finalizer absorbs; equal windows at different positions still collide
-    only per the hash, because the B^{-i} factor is cancelled by b_pow.
+    With odd base B (invertible mod 2^64) a window's hash is a difference of
+    two prefix sums, so each window length costs one ``_roll_windows`` pass
+    — the naive sliding_window_view @ weights matmul runs ~50× slower.
     """
     n = arr_u64.size
+    s = np.zeros(n + 1, dtype=np.uint64)
+    with np.errstate(over="ignore"):
+        np.cumsum(arr_u64 * _pow_series(_ROLL_BASE_INV, n), out=s[1:])
+    return s, _pow_series(_ROLL_BASE, n)
+
+
+def _roll_windows(s: np.ndarray, b_pow: np.ndarray, k: int) -> np.ndarray:
+    """Window step: UNMIXED polynomial hashes of every k-element window,
+    O(n), from ``_roll_prefix``'s arrays. Window i's value is
+    (S[i+k]-S[i])·B^i = Σ_t a[i+t]·B^{-t}: multiplying back B^i cancels the
+    B^{-i} factors, so equal windows hash equally at any position."""
+    n = b_pow.size
     if n < k:
         return np.empty(0, dtype=np.uint64)
     with np.errstate(over="ignore"):
-        binv_pow = _pow_series(_ROLL_BASE_INV, n)
-        b_pow = _pow_series(_ROLL_BASE, n)
-        c = arr_u64 * binv_pow
-        s = np.zeros(n + 1, dtype=np.uint64)
-        np.cumsum(c, out=s[1:])
         return (s[k:] - s[: n - k + 1]) * b_pow[: n - k + 1]
 
 
@@ -141,17 +144,18 @@ def shingle_hashes(text: str, k: int) -> np.ndarray:
         if arr.size < k:
             h = (arr * _roll_weights(int(arr.size))).sum(dtype=np.uint64)[None]
         else:
-            h = _window_hashes_1d(arr, k)
+            h = _roll_windows(*_roll_prefix(arr), k)
         # finalize: polynomial-mod-2^64 hashes have structured low bits
         return np.unique(_mix64(h))
 
 
 def batch_window_hashes(texts: list[str | bytes], k: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Mixed uint64 k-byte-window hashes for a WHOLE batch of texts in one
-    vectorized pass: all bytes are concatenated, one sliding-window matmul
-    computes every window hash, and windows crossing document boundaries are
-    dropped with a ragged-range index. Texts shorter than k contribute one
-    whole-text hash (same convention as shingle_hashes).
+    vectorized pass: all bytes are concatenated, one prefix-sum rolling hash
+    (``_roll_prefix`` + ``_roll_windows``) computes every window hash, and
+    windows crossing document boundaries are dropped with a ragged-range
+    index. Texts shorter than k contribute one whole-text hash (same
+    convention as shingle_hashes).
 
     Elements may be ``str`` (UTF-8-encoded here) or already-encoded
     ``bytes`` — callers that normalize in vectorized byte space (simhash's
@@ -176,14 +180,10 @@ def batch_window_hashes(texts: list[str | bytes], k: int) -> tuple[np.ndarray, n
     with np.errstate(over="ignore"):
         long_mask = lens >= k
         if long_mask.any():
-            arr = (
-                np.frombuffer(b"".join(bufs), dtype=np.uint8).astype(np.uint64)
-                if lens.sum()
-                else np.zeros(0, np.uint64)
-            )
+            arr = np.frombuffer(b"".join(bufs), dtype=np.uint8).astype(np.uint64)
             offs = np.zeros(n_docs, dtype=np.int64)
             np.cumsum(lens[:-1], out=offs[1:])
-            h_all = _window_hashes_1d(arr, k)
+            h_all = _roll_windows(*_roll_prefix(arr), k)
 
             lcounts = counts[long_mask]
             total_long = int(lcounts.sum())
@@ -330,26 +330,25 @@ def py_normalize(text: str) -> str:
     return re.sub(NORM_PATTERN, " ", text.lower())
 
 
+_LOWER_LUT = np.arange(256, dtype=np.uint8)
+_LOWER_LUT[65:91] += 32  # A-Z → a-z
 #: ASCII bytes matched by NORM_PATTERN: \t\n\v\f\r, \x1c-\x1f, space
 _WS_BYTES = np.zeros(256, dtype=bool)
 _WS_BYTES[[9, 10, 11, 12, 13, 28, 29, 30, 31, 32]] = True
-_LOWER_LUT = np.arange(256, dtype=np.uint8)
-_LOWER_LUT[65:91] += 32  # A-Z → a-z
 
 
-def batch_ws_normalize_bytes(texts, cap: int | None = None) -> list[bytes]:
-    """UTF-8 bytes of ``py_normalize(t)[:cap]`` for every text, vectorized.
+def _collapse_runs(
+    texts, sep_lut: np.ndarray, strip: bool, slow, cap: int | None = None
+) -> list[bytes]:
+    """UTF-8 bytes of ``slow(t)[:cap]`` for every text, vectorized.
 
-    ASCII texts (the overwhelming majority) take ONE numpy pass over the
-    concatenated byte buffer: lowercase via LUT, every whitespace run —
-    including leading/trailing runs; py_normalize does not strip — collapses
-    to a single space. Non-ASCII texts fall back to the per-doc regex.
-    Bit-identity with the regex is pinned by test. The per-doc ``re.sub``
-    loop this replaces was ~0.15 s per 5 MB of docs in the span-anchor and
-    fingerprint UDFs.
+    ``slow`` is a regex normalizer of one shape: lowercase, every run of
+    separator characters becomes one space, and with ``strip`` the leading
+    and trailing runs are dropped. ``sep_lut`` marks its separator class
+    over ASCII bytes. ASCII texts (the overwhelming majority) take ONE numpy
+    pass over the concatenated byte buffer; non-ASCII texts call ``slow``.
     """
-    n = len(texts)
-    out: list[bytes | None] = [None] * n
+    out: list[bytes | None] = [None] * len(texts)
     ascii_idx: list[int] = []
     bufs: list[bytes] = []
     for i, t in enumerate(texts):
@@ -358,41 +357,36 @@ def batch_ws_normalize_bytes(texts, cap: int | None = None) -> list[bytes]:
             ascii_idx.append(i)
             bufs.append(t.encode("ascii"))
         else:
-            s = py_normalize(t)
-            if cap is not None:
-                s = s[:cap]
-            out[i] = s.encode("utf-8", "surrogatepass")
-    if not bufs:
-        return out
-    lens = np.fromiter((len(b) for b in bufs), dtype=np.int64, count=len(bufs))
-    if int(lens.sum()) == 0:
-        for i in ascii_idx:
-            out[i] = b""
-        return out
+            out[i] = slow(t)[:cap].encode("utf-8", "surrogatepass")
     buf = np.frombuffer(b"".join(bufs), dtype=np.uint8)
-    offs = np.zeros(lens.size, dtype=np.int64)
-    np.cumsum(lens[:-1], out=offs[1:])
-    low = _LOWER_LUT[buf]
-    ws = _WS_BYTES[buf]
-    # keep all non-whitespace, plus the HEAD of every whitespace run (the
-    # previous char in the SAME doc is non-whitespace or absent)
-    prev_ws = np.empty_like(ws)
-    prev_ws[0] = False
-    prev_ws[1:] = ws[:-1]
-    prev_ws[offs[offs < buf.size]] = False  # empty trailing docs: offs == size
-    keep = (~ws) | (~prev_ws)
-    low[ws] = 32  # in place: low is this function's own temporary
-    raw = low[keep].tobytes()
-    kc = np.cumsum(keep, dtype=np.int64)
-    ends = offs + lens
-    kept_end = np.where(ends > 0, kc[np.maximum(ends - 1, 0)], 0)
+    ends = np.cumsum(np.fromiter(map(len, bufs), dtype=np.int64, count=len(bufs)))
+    sep = np.take(sep_lut, buf)
+    # drop every separator byte that continues a run in the SAME doc: the
+    # run's head survives as the one space
+    drop = np.zeros_like(sep)
+    np.logical_and(sep[1:], sep[:-1], out=drop[1:])
+    starts = ends[:-1]
+    drop[starts[starts < buf.size]] = False  # empty trailing docs start at size
+    raw = np.take(np.where(sep_lut, np.uint8(32), _LOWER_LUT), buf)[~drop].tobytes()
+    kept_ends = ends - np.searchsorted(np.flatnonzero(drop), ends)
     prev = 0
-    for j, i in enumerate(ascii_idx):
-        e = int(kept_end[j])
+    for i, e in zip(ascii_idx, kept_ends.tolist()):
         b = raw[prev:e]
-        out[i] = b[:cap] if cap is not None else b
+        # only a run maps to a space, and each run is one space by now
+        out[i] = (b.strip(b" ") if strip else b)[:cap]
         prev = e
     return out
+
+
+def batch_ws_normalize_bytes(texts, cap: int | None = None) -> list[bytes]:
+    """UTF-8 bytes of ``py_normalize(t)[:cap]`` for every text, vectorized:
+    lowercase, every whitespace run — including leading/trailing runs;
+    py_normalize does not strip — collapses to a single space (see
+    ``_collapse_runs``). Bit-identity with the regex is pinned by test. The
+    per-doc ``re.sub`` loop this replaces was ~0.15 s per 5 MB of docs in
+    the span-anchor and fingerprint UDFs.
+    """
+    return _collapse_runs(texts, _WS_BYTES, False, py_normalize, cap)
 
 
 def py_minhash(text: str, cfg: DedupConfig) -> np.ndarray:

@@ -44,12 +44,13 @@ import sys
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dedup.cc import dense_index
 from dedup.config import DedupConfig
+from dedup.minhash import _collapse_runs, batch_window_hashes
 
 #: largest turn-fingerprint table paired on the driver. Measured on a
 #: 4-core host with synth_spark turn tables: at 100k and 300k turns the
@@ -63,6 +64,9 @@ _DRIVER_TURNS = 300_000
 #: enumerates. The 300k-turn table above enumerates 22.8M band pairs in
 #: 2.4 s on one core and ~0.5 GB of driver memory.
 _DRIVER_PAIRS = 24_000_000
+#: fingerprint width: batch_simhash, with_turn_simhash_md5 and _popcount64
+#: all produce or read 64-bit fingerprints
+_FP_BITS = 64
 
 
 def _hard_normalize(text: str) -> str:
@@ -71,67 +75,20 @@ def _hard_normalize(text: str) -> str:
     return re.sub(r"[^a-z0-9]+", " ", text.lower()).strip()
 
 
-_LOWER_LUT = np.arange(256, dtype=np.uint8)
-_LOWER_LUT[65:91] += 32  # A-Z → a-z
+#: ASCII bytes outside [a-z0-9] once lowercased: _hard_normalize's separators
+_NON_ALNUM_BYTES = np.ones(256, dtype=bool)
+_NON_ALNUM_BYTES[48:58] = _NON_ALNUM_BYTES[65:91] = _NON_ALNUM_BYTES[97:123] = False
 
 
 def batch_hard_normalize_bytes(texts) -> list[bytes]:
-    """UTF-8 bytes of ``_hard_normalize(t)`` for every text, vectorized.
-
-    ASCII texts (the overwhelming majority of any tokenised corpus) take ONE
-    numpy pass over the concatenated byte buffer: lowercase via LUT, runs of
-    non-[a-z0-9] collapse to a single space, leading/trailing runs dropped
-    (the regex + strip semantics, bit-identical — pinned by test). Non-ASCII
-    texts fall back to the per-doc regex. The per-doc ``re.sub`` loop this
-    replaces was 29% of the simhash UDF kernel (measured 0.21 s vs 0.02 s
-    per 20k turns).
+    """UTF-8 bytes of ``_hard_normalize(t)`` for every text, vectorized:
+    lowercase, runs of non-[a-z0-9] collapse to a single space, leading and
+    trailing runs dropped (see ``minhash._collapse_runs``; bit-identity with
+    the regex is pinned by test). The per-doc ``re.sub`` loop this replaces
+    was 29% of the simhash UDF kernel (measured 0.21 s vs 0.02 s per 20k
+    turns).
     """
-    n = len(texts)
-    out: list[bytes | None] = [None] * n
-    ascii_idx: list[int] = []
-    bufs: list[bytes] = []
-    for i, t in enumerate(texts):
-        t = t or ""
-        if t.isascii():
-            ascii_idx.append(i)
-            bufs.append(t.encode("ascii"))
-        else:
-            out[i] = _hard_normalize(t).encode("utf-8", "surrogatepass")
-    if not bufs:
-        return out
-    lens = np.fromiter((len(b) for b in bufs), dtype=np.int64, count=len(bufs))
-    if int(lens.sum()) == 0:
-        for i in ascii_idx:
-            out[i] = b""
-        return out
-    buf = np.frombuffer(b"".join(bufs), dtype=np.uint8)
-    offs = np.zeros(lens.size, dtype=np.int64)
-    np.cumsum(lens[:-1], out=offs[1:])
-
-    low = _LOWER_LUT[buf]
-    is_al = ((low >= 97) & (low <= 122)) | ((low >= 48) & (low <= 57))
-    # a space survives only at a run head (previous char in the SAME doc is
-    # alnum) with an alnum still ahead in the doc (strip of trailing runs)
-    prev_al = np.empty_like(is_al)
-    prev_al[0] = False
-    prev_al[1:] = is_al[:-1]
-    prev_al[offs[offs < buf.size]] = False  # empty trailing docs: offs == size
-    c = np.cumsum(is_al, dtype=np.int64)  # alnum count through position i
-    ends = offs + lens  # exclusive doc ends
-    doc_idx = np.repeat(np.arange(lens.size), lens)
-    tot_by_doc = c[np.maximum(ends - 1, 0)]
-    after = tot_by_doc[doc_idx] - c > 0
-    keep = is_al | ((~is_al) & prev_al & after)
-    low[~is_al] = 32  # in place: low is this function's own temporary
-    raw = low[keep].tobytes()
-    kc = np.cumsum(keep, dtype=np.int64)
-    kept_end = np.where(ends > 0, kc[np.maximum(ends - 1, 0)], 0)
-    prev = 0
-    for j, i in enumerate(ascii_idx):
-        e = int(kept_end[j])
-        out[i] = raw[prev:e]
-        prev = e
-    return out
+    return _collapse_runs(texts, _NON_ALNUM_BYTES, True, _hard_normalize)
 
 
 def batch_simhash(texts: list[str], k: int = 4) -> np.ndarray:
@@ -146,8 +103,6 @@ def batch_simhash(texts: list[str], k: int = 4) -> np.ndarray:
     MULTISET (frequency-weighted SimHash). Bit order is a fixed bijection
     of feature-hash bits; any fixed permutation preserves Hamming distances
     and chunk banding."""
-    from dedup.minhash import batch_window_hashes
-
     H, starts, counts = batch_window_hashes(batch_hard_normalize_bytes(texts), k)
     n_docs = starts.size
     if n_docs == 0:
@@ -344,7 +299,7 @@ tsim AS (
 
 
 def pick_simhash_blocks(
-    n_distinct: int, bits: int = 64, hamming: int = 3, max_blocks: int = 10
+    n_distinct: int, bits: int = _FP_BITS, hamming: int = 3, max_blocks: int = 10
 ) -> int:
     """Block count minimizing the MEASURED cost model of the banding kernel
     at this corpus size.
@@ -410,7 +365,7 @@ def _band_structs(cfg: DedupConfig, nb: int, col: str = "simhash") -> list:
     """JVM band-key exprs: one struct (chunk_id, chunk_val) per
     (nb - hamming)-subset of the fingerprint's nb bit blocks, the subset's
     block values packed into one long (shift/mask only, no Python)."""
-    blocks, keys = _pigeonhole_layout(cfg.simhash_bits, cfg.simhash_hamming, nb)
+    blocks, keys = _pigeonhole_layout(_FP_BITS, cfg.simhash_hamming, nb)
     blk = [
         F.shiftrightunsigned(F.col(col), off).bitwiseAND(F.lit((1 << w) - 1))
         for off, w in blocks
@@ -500,7 +455,7 @@ def simhash_turn_pairs(
     nb = cfg.simhash_blocks
     if nb is None:
         n_fp = fp_counts.count()  # count of the checkpointed table — free-ish
-        nb = pick_simhash_blocks(max(n_fp, 1), cfg.simhash_bits, k)
+        nb = pick_simhash_blocks(max(n_fp, 1), _FP_BITS, k)
     banded = fps.select(
         "simhash", F.explode(F.array(*_band_structs(cfg, nb))).alias("c")
     ).select("simhash", "c.chunk_id", "c.chunk_val")
@@ -682,10 +637,7 @@ def _driver_conv_pairs(
     cap, k = cfg.band_bucket_cap, cfg.simhash_hamming
     if cap < 2 or any(c.null_count for c in table.columns):
         return None  # the distributed path rejects cap < 2; nulls stay there too
-    conv = table.column("conv_id").combine_chunks()
-    ids = pc.unique(conv)
-    ids = ids.take(pc.array_sort_indices(ids))  # index order == conv_id order
-    ci = pc.index_in(conv, value_set=ids).to_numpy(zero_copy_only=False).astype(np.int64)
+    ids, ci = dense_index(table.column("conv_id").combine_chunks())
     turn = table.column("turn_idx").to_numpy()
     fps, fpi, cnt = np.unique(
         table.column("simhash").to_numpy(), return_inverse=True, return_counts=True
@@ -700,8 +652,8 @@ def _driver_conv_pairs(
     budget = _DRIVER_PAIRS - int((cnt * (cnt - 1) // 2).sum())
     nb = cfg.simhash_blocks
     if nb is None:
-        nb = pick_simhash_blocks(max(fps.size, 1), cfg.simhash_bits, k)
-    blocks, keys = _pigeonhole_layout(cfg.simhash_bits, k, nb)
+        nb = pick_simhash_blocks(max(fps.size, 1), _FP_BITS, k)
+    blocks, keys = _pigeonhole_layout(_FP_BITS, k, nb)
     u = fps.view(np.uint64)
     blk = [(u >> np.uint64(off)) & np.uint64((1 << w) - 1) for off, w in blocks]
     bands = []

@@ -17,13 +17,13 @@ Two stages, mirroring the engine's universal block→fingerprint→verify spine:
 
 2. **Pair verification** (Arrow-batched pandas UDF): exact longest-common-
    substring length via binary search over span length L — for each probe L,
-   intersect the sets of rolling L-window hashes of both docs (O(n) per probe
-   using an invertible-base prefix-hash trick; numpy-vectorized). Pairs with
-   LCS ≥ ``min_span_len`` become span edges.
+   intersect the sets of rolling L-window hashes of both docs (O(n) per probe;
+   numpy-vectorized). Pairs with LCS ≥ ``min_span_len`` become span edges.
 
-The prefix-hash trick: polynomial hash mod 2^64 with ODD base B is
-invertible (B has a multiplicative inverse mod 2^64), so window hashes of
-ANY length come from two cumulative arrays in O(n) — no per-window loop.
+Both stages hash windows with ``minhash``'s invertible-base prefix-sum
+rolling hash (``_roll_prefix`` / ``_roll_windows``): the prefix arrays are
+built once per doc, and each window length is then one O(n) pass — no
+per-window loop.
 """
 
 from __future__ import annotations
@@ -35,40 +35,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dedup.config import DedupConfig
-from dedup.minhash import _ROLL_BASE, _mix64
-
-_B = _ROLL_BASE
-_BINV = np.uint64(pow(int(_B), -1, 1 << 64))
-
-
-def _prefix_arrays(arr_u64: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """S, P arrays such that hash of window [i, i+L) = (S[i+L]-S[i]) * P[i']
-    for a fixed per-L factor; see _window_hashes."""
-    from dedup.minhash import _pow_series
-
-    n = arr_u64.size
-    with np.errstate(over="ignore"):
-        binv_pow = _pow_series(_BINV, n)  # BINV^i (process-cached series)
-        c = arr_u64 * binv_pow
-        s = np.zeros(n + 1, dtype=np.uint64)
-        np.cumsum(c, out=s[1:])  # wraparound cumsum
-        b_pow = _pow_series(_B, n)  # B^i
-    return s, b_pow
-
-
-def _window_hashes(s: np.ndarray, b_pow: np.ndarray, L: int) -> np.ndarray:
-    """Mixed hashes of every L-char window, O(n). hash_i = (S[i+L]-S[i])·B^?:
-    window poly = sum_{j=0..L-1} a[i+j]·B^{L-1-j} = (S[i+L]-S[i])·B^{L-1+i'}
-    with the BINV^i factors cancelled by multiplying back B^i — constant
-    offset per i, absorbed by multiplying (S[i+L]-S[i]) by B^(n-1-i)."""
-    n = b_pow.size
-    if L > n:
-        return np.empty(0, dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        diff = s[L:] - s[: n - L + 1]
-        # multiply by B^i to cancel BINV^i inside diff → alignment-free value
-        h = diff * b_pow[: n - L + 1]
-    return _mix64(h)
+from dedup.minhash import _roll_prefix, _roll_windows, batch_window_hashes, batch_ws_normalize_bytes
+from dedup.verify import join_pair_docs
 
 
 def longest_common_substring_len(a: str, b: str, lo: int = 1) -> int:
@@ -85,14 +53,13 @@ def longest_common_substring_len(a: str, b: str, lo: int = 1) -> int:
     xb = np.frombuffer(b, dtype=np.uint8).astype(np.uint64)
     if xa.size == 0 or xb.size == 0:
         return 0
-    sa, pa = _prefix_arrays(xa)
-    sb, pb = _prefix_arrays(xb)
+    pre_a, pre_b = _roll_prefix(xa), _roll_prefix(xb)
     hi = int(min(xa.size, xb.size))
 
     def common_at(L: int) -> bool:
-        ha = _window_hashes(sa, pa, L)
-        hb = _window_hashes(sb, pb, L)
-        return np.intersect1d(ha, hb).size > 0
+        # unmixed hashes: mix64 is a bijection, so it cannot change whether
+        # the two window sets intersect
+        return np.intersect1d(_roll_windows(*pre_a, L), _roll_windows(*pre_b, L)).size > 0
 
     if not common_at(max(lo, 1)):
         return 0
@@ -128,12 +95,9 @@ def doc_anchors(
     def anchors_udf(docs: pd.Series) -> pd.Series:
         # ONE vectorized pass for the whole batch (was a per-doc loop of
         # ~10 small numpy calls — fixed overhead dominated at ~2 KB/doc).
-        # batch_window_hashes window values are position-independent and
-        # use the same base + mix64 as the per-doc _window_hashes, so the
-        # emitted anchor hashes are bit-identical to the loop's. The
+        # batch_window_hashes window values are position-independent, so
+        # a window's anchor hash does not depend on where it sits. The
         # normalize pass is vectorized too (regex-parity pinned by test).
-        from dedup.minhash import batch_window_hashes, batch_ws_normalize_bytes
-
         normed = batch_ws_normalize_bytes(list(docs), cap)
         n = len(normed)
         if n == 0:
@@ -211,20 +175,11 @@ def verify_span_pairs(
     substring ≥ min_span_len chars. Returns (conv_a, conv_b, source,
     span_len)."""
     cfg = cfg or DedupConfig()
-    docs = conversations.select("conv_id", "doc")
-    joined = (
-        pairs.join(docs.withColumnsRenamed({"conv_id": "conv_a", "doc": "doc_a"}), "conv_a")
-        .join(docs.withColumnsRenamed({"conv_id": "conv_b", "doc": "doc_b"}), "conv_b")
-        # LCS cost ∝ candidate rows; AQE coalesces this small join output to
-        # a few byte-sized partitions, which would serialize the UDF
-        .repartition(conversations.sparkSession.sparkContext.defaultParallelism)
-    )
+    joined = join_pair_docs(pairs, conversations)
     cap, min_len = cfg.span_doc_cap, cfg.min_span_len
 
     @F.pandas_udf(T.IntegerType())
     def lcs_udf(doc_a: pd.Series, doc_b: pd.Series) -> pd.Series:
-        from dedup.minhash import batch_ws_normalize_bytes
-
         na_l = batch_ws_normalize_bytes(list(doc_a), cap)
         nb_l = batch_ws_normalize_bytes(list(doc_b), cap)
         out = np.zeros(len(doc_a), dtype=np.int32)

@@ -32,6 +32,19 @@ def _agreement(col_a, col_b, num_perm: int):
     return matches.cast("double") / F.lit(float(num_perm))
 
 
+def join_pair_docs(pairs: DataFrame, conversations: DataFrame) -> DataFrame:
+    """``pairs`` with both sides' text attached as ``doc_a``/``doc_b``,
+    spread over the default parallelism: a pair-verifying UDF costs per
+    row, and AQE would coalesce this small-bytes join output into a few
+    partitions, serializing the UDF."""
+    docs = conversations.select("conv_id", "doc")
+    return (
+        pairs.join(docs.withColumnsRenamed({"conv_id": "conv_a", "doc": "doc_a"}), "conv_a")
+        .join(docs.withColumnsRenamed({"conv_id": "conv_b", "doc": "doc_b"}), "conv_b")
+        .repartition(conversations.sparkSession.sparkContext.defaultParallelism)
+    )
+
+
 def verify_pairs(
     pairs: DataFrame,
     signatures: DataFrame,
@@ -62,13 +75,7 @@ def verify_pairs(
     if cfg.exact_verify:
         if conversations is None:
             raise ValueError("exact_verify requires the conversations DataFrame")
-        docs = conversations.select("conv_id", "doc")
-        joined = (
-            cand.join(docs.withColumnsRenamed({"conv_id": "conv_a", "doc": "doc_a"}), "conv_a")
-            .join(docs.withColumnsRenamed({"conv_id": "conv_b", "doc": "doc_b"}), "conv_b")
-            # UDF cost ∝ rows; spread the (small-bytes) pair table wide
-            .repartition(conversations.sparkSession.sparkContext.defaultParallelism)
-        )
+        joined = join_pair_docs(cand, conversations)
         k = cfg.shingle_k
 
         @F.pandas_udf(T.DoubleType())

@@ -4,7 +4,7 @@ whose correctness everything else leans on. No Spark session needed."""
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from dedup.config import DedupConfig
@@ -86,6 +86,8 @@ def _lcs_brute(a: str, b: str) -> int:
     st.text(alphabet="abc", min_size=0, max_size=40),
     st.text(alphabet="abc", min_size=0, max_size=40),
 )
+@example("abc", "")
+@example("aaaaa", "aaa")
 def test_lcs_matches_bruteforce(a, b):
     assert longest_common_substring_len(a, b) == _lcs_brute(a, b)
 
@@ -113,6 +115,10 @@ from dedup.simhash import _hard_normalize, batch_hard_normalize_bytes
 
 @settings(max_examples=60, deadline=None)
 @given(st.lists(TEXT, min_size=0, max_size=16))
+@example([])
+@example([""])
+@example([None, "  "])
+@example(["A,,b ", "é x"])
 def test_batch_hard_normalize_matches_regex(texts):
     """The vectorized ASCII fast path + fallback must be BIT-identical to
     the per-doc regex (lower, non-alnum runs → one space, strip)."""
@@ -126,6 +132,11 @@ def test_batch_hard_normalize_matches_regex(texts):
     st.lists(TEXT, min_size=0, max_size=16),
     st.one_of(st.none(), st.integers(0, 50)),
 )
+@example([], None)
+@example([""], None)
+@example([None, "  "], None)
+@example(["A,,b ", "é x"], None)
+@example(["A,,b ", "é x"], 0)
 def test_batch_ws_normalize_matches_regex(texts, cap):
     """Vectorized whitespace-collapse normalize == py_normalize()[:cap]
     per doc, including the char-space cap slice the span tier applies."""

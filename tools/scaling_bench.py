@@ -79,9 +79,6 @@ def run_bench(cpus: int, sf_dir: str) -> dict:
     # per-leg wall for the scaling ratio.
     env["SPARK_GRAFT_BENCH_REPS"] = os.environ.get("SCALE_LEG_REPS", "2")
     env["SPARK_GRAFT_BENCH_ONLY"] = "pipeline_synth"
-    # the ROUND is already host-gated here; don't double-wait inside the leg
-    # (budget 0 → bench records its gate spins but proceeds immediately)
-    env["SPARK_GRAFT_GATE_MAX_WAIT"] = "0"
     out = subprocess.run(
         [sys.executable, os.path.join(REPO, "bench.py")],
         capture_output=True,
