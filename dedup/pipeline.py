@@ -207,7 +207,9 @@ class DedupPipeline:
                 # dedup=False: the strongest-source groupBy below is the
                 # single pair-dedup shuffle for every tier — a per-tier
                 # dropDuplicates would shuffle the same pair set twice
-                lsh_pairs, lsh_overflow = candidate_pairs(sigs, cfg, dedup=False)
+                lsh_pairs, lsh_overflow = candidate_pairs(
+                    sigs, cfg, dedup=False, metrics_out=metrics
+                )
                 tier["lsh"] = lsh_pairs
                 overflow_dfs["lsh_overflow_buckets"] = lsh_overflow
 
@@ -255,7 +257,7 @@ class DedupPipeline:
             # later, anti-joined against the already-accepted edge set, so
             # building candidates early costs nothing extra
             span_cand, span_overflow = span_candidate_pairs(
-                conv, cfg, input_materialized=True
+                conv, cfg, input_materialized=True, metrics_out=metrics
             )
             tier["span_cand"] = span_cand
             overflow_dfs["span_overflow_anchors"] = span_overflow

@@ -50,6 +50,7 @@ from pyspark.sql import types as T
 
 from dedup.cc import dense_index
 from dedup.config import DedupConfig
+from dedup.lsh import _group_pairs, bucketed_pairs, route_bucket_pairs
 from dedup.minhash import _collapse_runs, batch_window_hashes
 
 #: largest turn-fingerprint table paired on the driver. Measured on a
@@ -409,9 +410,9 @@ def simhash_turn_pairs(
 
     Star edges still face the exact cross-conv/hamming filters; a capped
     member's pairs beyond its anchor flow through connected components.
+    Paths 2 and 3 pair through ``lsh.bucketed_pairs``, which pairs small
+    bucket tables on the driver without a shuffle.
     """
-    from dedup.lsh import bucketed_pairs, route_bucket_pairs
-
     cfg = cfg or DedupConfig()
     k = cfg.simhash_hamming
     t = turns_sh.select("conv_id", "turn_idx", "simhash")
@@ -517,12 +518,15 @@ def simhash_conv_pairs(
     """Lift turn pairs to conversation candidate pairs (source='simhash').
 
     A pair qualifies when matched turns cover ≥ min_shared_turn_frac of
-    BOTH conversations' turns AND at least ``min_matched_turns`` turns
-    matched. Both-sides coverage is this tier's verification: it asserts
-    mutual near-duplication, so a short conversation containing one common
-    boilerplate turn cannot bridge unrelated conversations into one
-    connected component (single-turn conversations pair only with other
-    single-turn conversations, and only when min_matched_turns allows).
+    BOTH conversations' turns AND the larger side's matched-turn count is
+    at least ``least(min_matched_turns, n_a, n_b)``. Both-sides coverage
+    is this tier's verification: it asserts mutual near-duplication, so a
+    short conversation containing one common boilerplate turn cannot
+    bridge unrelated long conversations into one connected component.
+    The matched-turn minimum is capped at the shorter side's turn count,
+    so when either side has one turn a single match is enough: two
+    one-turn conversations pair on one near-identical turn even at the
+    default ``min_matched_turns=2``.
 
     Two regimes, chosen by input size (as in ``dedup.cc``):
 
@@ -602,18 +606,6 @@ _POPCOUNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
 
 def _popcount64(x: np.ndarray) -> np.ndarray:
     return _POPCOUNT8[x.view(np.uint8).reshape(-1, 8)].sum(axis=1, dtype=np.uint8)
-
-
-def _group_pairs(members: np.ndarray, sizes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Every unordered pair inside each group, for ``members`` laid out
-    group after group with the given ``sizes``."""
-    ends = np.repeat(np.cumsum(sizes), sizes)
-    pos = np.arange(members.size)
-    reps = ends - pos - 1  # partners after each member in its group
-    left = np.repeat(pos, reps)
-    seg = np.repeat(np.cumsum(reps) - reps, reps)
-    right = left + 1 + (np.arange(left.size) - seg)
-    return members[left], members[right]
 
 
 def _distinct_per_group(g: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:

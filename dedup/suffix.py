@@ -126,6 +126,7 @@ def span_candidate_pairs(
     conversations: DataFrame,
     cfg: DedupConfig | None = None,
     input_materialized: bool = False,
+    metrics_out: dict | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Anchor-join candidates: pairs sharing ≥ min_span_len/(4·mod) anchors.
 
@@ -133,11 +134,15 @@ def span_candidate_pairs(
     pair table small: a true L-span shares ≈ L/mod anchors, so the threshold
     is conservative by 4× (alignment/normalization slack).
 
-    The anchor table is ALWAYS checkpointed: ``bucketed_pairs`` reads the
-    anchor rows twice (bucket stats + the s>2 membership join), and
+    The anchor table is ALWAYS checkpointed: both ``bucketed_pairs``
+    regimes read the anchor rows twice (row count + Arrow collect on the
+    driver; bucket stats + the s>2 membership join distributed), and
     without a cut the anchor pandas UDF — the expensive part of this
     tier — runs once per read (measured 58 s uncut vs 14.5 s checkpointed
     at sf0.1 local[32]).
+
+    ``metrics_out``: optional dict filled with ``span_driver`` (which
+    ``bucketed_pairs`` regime ran).
     """
     from dedup.lsh import bucketed_pairs
 
@@ -153,6 +158,8 @@ def span_candidate_pairs(
         ["anchor_hash"],
         ["conv_id"],
         cfg.band_bucket_cap,
+        metrics_out,
+        "span_driver",
     )
     pairs = (
         raw.select(

@@ -802,16 +802,19 @@ def test_cc_chain_graph_labels(spark):
     assert out["p0"] == "p0" and out["p1"] == "p0"
 
 
-def test_bucketed_pairs_checkpoint_elision(spark):
-    """bucketed_pairs never cuts its input rows: it pins exactly one RDD
-    (its bucket stats table) whether the rows are a narrow pass over
-    materialized bytes or carry Python evaluation, and both give equal
-    pairs. Cutting an expensive lineage is the caller's job."""
+def test_bucketed_pairs_checkpoint_elision(spark, monkeypatch):
+    """bucketed_pairs never cuts its input rows: the distributed regime
+    pins exactly one RDD (its bucket stats table) whether the rows are a
+    narrow pass over materialized bytes or carry Python evaluation, and
+    both give equal pairs; the driver regime pins none. Cutting an
+    expensive lineage is the caller's job."""
     from pyspark.sql import functions as F
 
+    import dedup.lsh as lsh
     from dedup.lsh import bucketed_pairs
     from dedup.util import free_all_scratch, persistent_rdd_ids
 
+    monkeypatch.setattr(lsh, "_DRIVER_ROWS", -1)
     free_all_scratch(spark)
     rows = spark.createDataFrame(
         [(i % 3, f"m{i}") for i in range(30)], "b int, conv_id string"
@@ -829,6 +832,14 @@ def test_bucketed_pairs_checkpoint_elision(spark):
         assert len(persistent_rdd_ids(spark) - pre) == 1  # the stats table
         got.append({(r["a"]["conv_id"], r["b"]["conv_id"]) for r in pairs.collect()})
     assert got[0] == got[1] and got[0]
+
+    monkeypatch.undo()  # the driver regime
+    pre = persistent_rdd_ids(spark)
+    m = {}
+    pairs, _ = bucketed_pairs(udf_rows, ["b"], ["conv_id"], 100, m)
+    assert m["driver"] is True
+    assert persistent_rdd_ids(spark) == pre
+    assert {(r["a"]["conv_id"], r["b"]["conv_id"]) for r in pairs.collect()} == got[0]
     free_all_scratch(spark)
 
 

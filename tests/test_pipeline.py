@@ -249,12 +249,15 @@ def test_caps_audit_in_metrics(spark, turns_df, tmp_path_factory):
     # which a cap binds to the distributed path, so the driver regime ran
     # exactly when no SimHash bucket overflowed
     assert m["simhash_driver"] is (m["simhash_overflow_buckets"] == 0)
+    # the LSH and span bucket tables are small: both paired on the driver,
+    # whose star edges keep a binding cap exact
+    assert m["lsh_driver"] is True and m["span_driver"] is True
 
     # all of it persisted next to the lineage
     disk = _json.loads(open(_os.path.join(run_dir, "metrics.json")).read())
     for k in (
         "caps", "lsh_overflow_buckets", "cc_edges", "cc_driver", "cc_rounds",
         "simhash_driver", "stages", "ingest_rejects", "simhash_overflow_buckets",
-        "span_overflow_anchors",
+        "span_overflow_anchors", "lsh_driver", "span_driver",
     ):
         assert k in disk, k

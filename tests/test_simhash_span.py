@@ -244,7 +244,10 @@ def test_simhash_driver_falls_back_over_pair_budget(spark, monkeypatch):
 def test_simhash_table_above_the_bound_is_not_collected(spark, monkeypatch):
     import random
 
+    import dedup.lsh as lsh
     import dedup.simhash as sm
+
+    monkeypatch.setattr(lsh, "_DRIVER_ROWS", -1)  # its buckets are small too
 
     rows = _single_turn_rows(random.Random(7))
     sh = spark.createDataFrame(rows, SH_SCHEMA)
