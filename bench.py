@@ -12,8 +12,8 @@ process may run on):
 - component micro-benches: signatures, LSH pairs, exact tier, ANN top-k.
 
 The synthetic corpus parquet is cached under /tmp keyed by (sf, seed) so
-repeated runs — and the local[8]-vs-local[32] scaling experiment
-(tools/scaling_bench.py) — share byte-identical input.
+repeated runs share byte-identical input. The two-parallelism scaling
+record these runs once fed is kept in BENCH/SCALING.md.
 """
 
 from __future__ import annotations
@@ -193,23 +193,6 @@ def main() -> None:
         v["shuffle_write_bytes"] for v in shuf
     )
     extras["pipeline_shuffle_read_bytes"] = sum(v["shuffle_read_bytes"] for v in shuf)
-
-    if os.environ.get("SPARK_GRAFT_BENCH_ONLY") == "pipeline_synth":
-        print(
-            json.dumps(
-                {
-                    "metric": "dedup_pipeline_total",
-                    "value": timings["pipeline_synth"],
-                    "unit": "sec",
-                    "queries": timings,
-                    "sf": sf,
-                    "cpus": CPUS,
-                    **extras,
-                }
-            )
-        )
-        spark.stop()
-        return
 
     # --- pipeline on driver-testdata-derived transcripts ----------------
     from dedup.driver_tables import derive_transcripts

@@ -2,15 +2,16 @@
 
 Generalizes the reference's per-record ``FileState::SwProcessed`` marker
 (reference: /root/reference/src/fileinfo.rs:12-16) into per-STAGE idempotent
-table writes: each stage materializes to ``<run_dir>/<stage>`` (Iceberg in
-production, parquet here — same read/write API via io helpers), records a
-lineage row, and a re-run loads any stage whose _SUCCESS marker exists
-instead of recomputing it. Killing the job after stage k and re-running
-yields byte-identical clusters (resume test).
+table writes: each stage materializes to ``<run_dir>/<stage>`` (parquet,
+written and read back by ``_materialize``), records a lineage row, and a
+re-run loads any stage whose _SUCCESS marker exists instead of recomputing
+it. Killing the job after stage k and re-running yields byte-identical
+clusters (resume test).
 
 Metrics are first-class (north rule): every stage logs row counts; the LSH
 and anchor overflow paths log how many mega-buckets were demoted to star
-edges — no silent caps anywhere.
+edges — no silent caps anywhere; the edge stage counts its edges per
+source tier (``edges_by_source``).
 """
 
 from __future__ import annotations
@@ -20,7 +21,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from dedup.assemble import assemble_conversations
@@ -33,6 +34,9 @@ from dedup.minhash import with_minhash
 from dedup.simhash import simhash_conv_pairs, with_turn_simhash
 from dedup.suffix import span_candidate_pairs, verify_span_pairs
 from dedup.verify import verify_pairs
+
+#: every edge ``source`` a tier emits; ``metrics["edges_by_source"]`` counts each
+_SOURCES = ("exact", "lsh", "simhash", "span")
 
 
 @dataclass
@@ -204,7 +208,7 @@ class DedupPipeline:
             )
             tier["sigs"] = sigs
             if not pairs_done:
-                # dedup=False: the strongest-source groupBy below is the
+                # dedup=False: the pair-union groupBy below is the
                 # single pair-dedup shuffle for every tier — a per-tier
                 # dropDuplicates would shuffle the same pair set twice
                 lsh_pairs, lsh_overflow = candidate_pairs(
@@ -304,30 +308,26 @@ class DedupPipeline:
             )
             cheap_edges = cheap_edges.unionByName(span_edges)
 
-        edges = self._materialize("edges", cheap_edges)
+        # the per-source edge funnel rides the edge stage's own action
+        edge_obs = Observation("edges_by_source")
+        edges = self._materialize(
+            "edges",
+            cheap_edges.observe(
+                edge_obs,
+                *(F.count(F.when(F.col("source") == s, 1)).alias(s) for s in _SOURCES),
+            ),
+        )
+        metrics["edges_by_source"] = edge_obs.get
         return self._finish(edges, conv, metrics, overflow_dfs, _pre_ids)
 
     def _dedup_pair_union(self, pair_dfs):
         all_pairs = pair_dfs[0]
         for p in pair_dfs[1:]:
             all_pairs = all_pairs.unionByName(p)
-        # One row per undirected pair, keeping the STRONGEST source: exact
-        # and simhash pairs are pre-verified by their tier and bypass the
-        # Jaccard re-check in verify_pairs, so a pair also found by LSH must
-        # not be demoted to 'lsh' (Jaccard could wrongly reject it).
-        prio = (
-            F.when(F.col("source") == "exact", 0)
-            .when(F.col("source") == "simhash", 1)
-            .otherwise(2)
-        )
-        names = F.array(F.lit("exact"), F.lit("simhash"), F.lit("lsh"))
-        return (
-            all_pairs.withColumn("_prio", prio)
-            .groupBy("conv_a", "conv_b")
-            .agg(F.min("_prio").alias("_prio"))
-            .withColumn("source", F.element_at(names, F.col("_prio") + 1))
-            .drop("_prio")
-        )
+        # One row per undirected pair. Only 'exact' pairs skip verify_pairs,
+        # so a pair exact proposed must keep that source: min() does,
+        # because "exact" sorts before "lsh" and "simhash".
+        return all_pairs.groupBy("conv_a", "conv_b").agg(F.min("source").alias("source"))
 
     def _finish(self, edges, conv, metrics, overflow_dfs, _pre_ids):
         from dedup.util import persistent_rdd_ids, unpersist_ids

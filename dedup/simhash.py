@@ -1,11 +1,11 @@
 """Per-turn SimHash for near-exact turn matching (operator N8).
 
-Catches what MinHash-over-whole-conversations can miss: two conversations
-sharing individual turns that are byte-near-identical (whitespace/punctuation
-variants — FIXTURES.md ``near_exact_turn``). This is the per-page analog of
-the reference's per-file prefix hash (reference: /root/reference/src/
-fileinfo.rs:42-48): a cheap fixed-width fingerprint whose equality implies
-near-equality of content.
+Proposes conversation candidates from individual turns that are
+byte-near-identical (whitespace/punctuation variants — FIXTURES.md
+``near_exact_turn``); ``verify.verify_pairs`` decides which candidates
+become edges, as for LSH. This is the per-page analog of the reference's
+per-file prefix hash (reference: /root/reference/src/fileinfo.rs:42-48): a
+cheap fixed-width fingerprint that blocks likely near-duplicates together.
 
 Dataflow (fingerprints in one pandas UDF; pairing in the JVM, or on the
 driver for small tables):
@@ -19,14 +19,11 @@ driver for small tables):
    and bucket-grouping on (chunk_id, chunk_val) finds all such pairs
    without O(n²) compare — key width sets collision volume (see
    DedupConfig.simhash_blocks; ``_pigeonhole_layout`` is the one layout);
-4. verify Hamming ≤ ``simhash_hamming`` via xor + bit_count;
-5. lift turn pairs to conversation pairs: conversations where matched turns
-   cover ≥ ``min_shared_turn_frac`` of BOTH sides' turns AND at least
-   ``min_matched_turns`` turns matched become pairs (source='simhash').
-   Both-sides coverage IS this tier's verification — it asserts mutual
-   near-duplication, so a 1-turn conversation holding a common boilerplate
-   turn ("thanks") cannot act as an unverified bridge that connected
-   components would use to merge unrelated long conversations.
+4. keep fingerprint pairs within Hamming ``simhash_hamming`` (xor +
+   bit_count);
+5. lift turn pairs to conversation candidates (source='simhash') by a
+   both-sides turn-coverage filter (``simhash_conv_pairs``); it is not
+   verification — ``verify.verify_pairs`` checks them.
 
 Steps 3-5 run in one of two regimes (``simhash_conv_pairs``): up to
 ``_DRIVER_TURNS`` turns they run as one Arrow collect plus a numpy kernel
@@ -68,6 +65,9 @@ _DRIVER_PAIRS = 24_000_000
 #: fingerprint width: batch_simhash, with_turn_simhash_md5 and _popcount64
 #: all produce or read 64-bit fingerprints
 _FP_BITS = 64
+#: the conversation-lift coverage filter (see ``simhash_conv_pairs``)
+_MIN_SHARED_TURN_FRAC = 0.8
+_MIN_MATCHED_TURNS = 2
 
 
 def _hard_normalize(text: str) -> str:
@@ -509,24 +509,21 @@ def simhash_turn_pairs(
 def simhash_conv_pairs(
     turns_sh: DataFrame,
     cfg: DedupConfig | None = None,
-    min_shared_turn_frac: float = 0.8,
-    min_matched_turns: int = 2,
     materialize: bool = True,
     return_overflow: bool = False,
     metrics_out: dict | None = None,
 ):
     """Lift turn pairs to conversation candidate pairs (source='simhash').
 
-    A pair qualifies when matched turns cover ≥ min_shared_turn_frac of
-    BOTH conversations' turns AND the larger side's matched-turn count is
-    at least ``least(min_matched_turns, n_a, n_b)``. Both-sides coverage
-    is this tier's verification: it asserts mutual near-duplication, so a
-    short conversation containing one common boilerplate turn cannot
-    bridge unrelated long conversations into one connected component.
-    The matched-turn minimum is capped at the shorter side's turn count,
-    so when either side has one turn a single match is enough: two
-    one-turn conversations pair on one near-identical turn even at the
-    default ``min_matched_turns=2``.
+    A pair qualifies when matched turns cover ≥ ``_MIN_SHARED_TURN_FRAC``
+    of BOTH conversations' turns AND the larger side's matched-turn count
+    is at least ``least(_MIN_MATCHED_TURNS, n_a, n_b)``. This is a
+    candidate filter, not verification: it keeps a short conversation
+    holding one common boilerplate turn from proposing a pair with every
+    conversation that holds it too, and ``verify.verify_pairs`` checks
+    what remains. The matched-turn minimum is capped at the shorter
+    side's turn count, so two one-turn conversations become a candidate
+    on one matched turn.
 
     Two regimes, chosen by input size (as in ``dedup.cc``):
 
@@ -553,26 +550,20 @@ def simhash_conv_pairs(
     t = turns_sh.select("conv_id", "turn_idx", "simhash")
     lifted = None
     if t.count() <= _DRIVER_TURNS:
-        lifted = _driver_conv_pairs(
-            t.toArrow(), cfg, min_shared_turn_frac, min_matched_turns
-        )
+        lifted = _driver_conv_pairs(t.toArrow(), cfg)
     if lifted is not None:
         out = spark.createDataFrame(lifted, "conv_a string, conv_b string").withColumn(
             "source", F.lit("simhash")
         )
         overflow = spark.createDataFrame([], "path string, bucket_n bigint")
     else:
-        out, overflow = _distributed_conv_pairs(
-            turns_sh, cfg, min_shared_turn_frac, min_matched_turns, materialize
-        )
+        out, overflow = _distributed_conv_pairs(turns_sh, cfg, materialize)
     if metrics_out is not None:
         metrics_out["simhash_driver"] = lifted is not None
     return (out, overflow) if return_overflow else out
 
 
-def _distributed_conv_pairs(
-    turns_sh, cfg, min_shared_turn_frac, min_matched_turns, materialize
-) -> tuple[DataFrame, DataFrame]:
+def _distributed_conv_pairs(turns_sh, cfg, materialize) -> tuple[DataFrame, DataFrame]:
     tp, overflow = simhash_turn_pairs(turns_sh, cfg)
     if materialize:
         tp = tp.localCheckpoint()
@@ -589,11 +580,11 @@ def _distributed_conv_pairs(
         .where(
             (
                 F.least(F.col("m_a") / F.col("n_a"), F.col("m_b") / F.col("n_b"))
-                >= F.lit(min_shared_turn_frac)
+                >= F.lit(_MIN_SHARED_TURN_FRAC)
             )
             & (
                 F.greatest("m_a", "m_b")
-                >= F.least(F.lit(min_matched_turns), F.least("n_a", "n_b"))
+                >= F.least(F.lit(_MIN_MATCHED_TURNS), F.least("n_a", "n_b"))
             )
         )
         .select("conv_a", "conv_b", F.lit("simhash").alias("source"))
@@ -617,9 +608,7 @@ def _distinct_per_group(g: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:
     return np.bincount(g[new], minlength=n)
 
 
-def _driver_conv_pairs(
-    table: pa.Table, cfg: DedupConfig, min_frac: float, min_matched: int
-) -> pa.Table | None:
+def _driver_conv_pairs(table: pa.Table, cfg: DedupConfig) -> pa.Table | None:
     """(conv_id, turn_idx, simhash) → (conv_a, conv_b) with conv_a < conv_b
     in byte order; the same pairs the distributed path lifts. ``None`` when
     a cap would bind there (an exact-fingerprint group, a band bucket or an
@@ -702,8 +691,8 @@ def _driver_conv_pairs(
     ca, cb = pairs // n_conv, pairs % n_conv
     n_turns = np.bincount(ci, minlength=len(ids))
     n_a, n_b = n_turns[ca], n_turns[cb]
-    keep = (np.minimum(m[0] / n_a, m[1] / n_b) >= min_frac) & (
-        np.maximum(m[0], m[1]) >= np.minimum(min_matched, np.minimum(n_a, n_b))
+    keep = (np.minimum(m[0] / n_a, m[1] / n_b) >= _MIN_SHARED_TURN_FRAC) & (
+        np.maximum(m[0], m[1]) >= np.minimum(_MIN_MATCHED_TURNS, np.minimum(n_a, n_b))
     )
     return pa.table(
         {"conv_a": ids.take(pa.array(ca[keep])), "conv_b": ids.take(pa.array(cb[keep]))}

@@ -54,23 +54,23 @@ def verify_pairs(
     """pairs(conv_a, conv_b, source) → verified edges with a ``similarity``
     column, filtered to similarity ≥ jaccard_threshold.
 
-    Only 'lsh' candidates are (re)verified here: every other tier arrives
-    pre-verified by its own stronger check — 'exact' by full-content hash
-    equality, 'span' by exact LCS length (suffix.verify_span_pairs),
-    'simhash' by per-turn Hamming + coverage. Re-checking a span pair
-    against GLOBAL Jaccard would be wrong by design: sharing one long span
-    does not make two conversations globally similar.
+    This is the one place that decides which candidates skip verification:
+    only 'exact' pairs pass through (similarity 1.0), pre-verified by
+    full-content hash equality. Every other candidate — 'lsh' and 'simhash'
+    alike — gets the Jaccard check. A SimHash match is not a Jaccard
+    bound: SimHash estimates cosine, so two long texts drawn from one small
+    vocabulary sit within a few Hamming bits while sharing few shingles.
+    Span pairs never come here: they are verified by exact LCS length
+    (suffix.verify_span_pairs), and sharing one long span does not make two
+    conversations globally similar.
 
     Signature joins broadcast when small; at scale they are plain
     shuffle-hash joins on conv_id, the same key the signature table is
     already partitioned by.
     """
     cfg = cfg or DedupConfig()
-    exact_edges = pairs.where(F.col("source") != "lsh").withColumn(
-        "similarity",
-        F.when(F.col("source") == "exact", F.lit(1.0)).otherwise(F.lit(None).cast("double")),
-    )
-    cand = pairs.where(F.col("source") == "lsh")
+    exact_edges = pairs.where(F.col("source") == "exact").withColumn("similarity", F.lit(1.0))
+    cand = pairs.where(F.col("source") != "exact")
 
     if cfg.exact_verify:
         if conversations is None:

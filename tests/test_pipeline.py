@@ -258,6 +258,9 @@ def test_caps_audit_in_metrics(spark, turns_df, tmp_path_factory):
     for k in (
         "caps", "lsh_overflow_buckets", "cc_edges", "cc_driver", "cc_rounds",
         "simhash_driver", "stages", "ingest_rejects", "simhash_overflow_buckets",
-        "span_overflow_anchors", "lsh_driver", "span_driver",
+        "span_overflow_anchors", "lsh_driver", "span_driver", "edges_by_source",
     ):
         assert k in disk, k
+    # the per-source edge funnel accounts for every row of the edge stage
+    edge_rows = next(s["rows"] for s in disk["stages"] if s["stage"] == "edges")
+    assert sum(disk["edges_by_source"].values()) == edge_rows > 0
