@@ -35,8 +35,8 @@ _TC = TRANSCRIPTS_SQL + CONVERSATIONS_SQL
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: full near-dup pipeline (exact+MinHash/LSH+SimHash+span →
-    verify → connected components → keep policy) on sf0.001 transcripts."""
+    """Flagship: full near-dup pipeline (exact+MinHash/LSH+span → verify →
+    connected components → keep policy) on sf0.001 transcripts."""
     from dedup.pipeline import DedupPipeline
 
     turns = derive_transcripts(spark, "/root/testdata/sf0.001")

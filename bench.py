@@ -5,7 +5,7 @@ Runs the headline dedup queries at $SPARK_GRAFT_SF_DIR (default
 process may run on):
 
 - ``pipeline_synth``: the full near-dup pipeline (exact + MinHash/LSH +
-  SimHash + span → verify → CC → keep) over a deterministic synthetic
+  span → verify → CC → keep) over a deterministic synthetic
   transcript corpus scaled to the SF — the throughput (turns/sec) headline;
 - ``pipeline_testdata``: same pipeline over transcripts derived from the
   driver's documents table;
@@ -136,7 +136,7 @@ def main() -> None:
     # alone leaves the first timed rep JIT-dominated (measured r05 on a
     # qualifying host: reps 253.9/102.0/50.9 s — ~200 s of first-rep cost
     # that is compilation and worker spin-up for the tiers the minhash
-    # warmup never touches: simhash UDF, band/bucket kernels, CC label
+    # warmup never touches: band/bucket kernels, span anchors, CC label
     # loop, keep policy). A 2%-of-corpus pipeline run compiles every
     # codegen path and warms every Python worker pool at ~seconds of cost.
     from dedup.util import free_all_scratch as _fas

@@ -8,10 +8,16 @@ re-run loads any stage whose _SUCCESS marker exists instead of recomputing
 it. Killing the job after stage k and re-running yields byte-identical
 clusters (resume test).
 
-Metrics are first-class (north rule): every stage logs row counts; the LSH
-and anchor overflow paths log how many mega-buckets were demoted to star
-edges — no silent caps anywhere; the edge stage counts its edges per
-source tier (``edges_by_source``).
+The candidate tiers are exact, MinHash/LSH and span. The SimHash tier
+(``dedup.simhash``) stays a library and contract operator, not a pipeline
+tier: with its candidates verified like LSH ones it added no edge on any
+measured corpus, so a pass no longer pays for its UDF and pairing jobs.
+
+Metrics are first-class (north rule): every stage logs its row count,
+observed on the stage's own write or checkpoint; the LSH and anchor
+overflow paths log how many mega-buckets were demoted to star edges — no
+silent caps anywhere; the edge stage counts its edges per source tier
+(``edges_by_source``).
 """
 
 from __future__ import annotations
@@ -31,12 +37,11 @@ from dedup.exact import exact_pairs
 from dedup.keep import select_representatives
 from dedup.lsh import candidate_pairs
 from dedup.minhash import with_minhash
-from dedup.simhash import simhash_conv_pairs, with_turn_simhash
 from dedup.suffix import span_candidate_pairs, verify_span_pairs
 from dedup.verify import verify_pairs
 
 #: every edge ``source`` a tier emits; ``metrics["edges_by_source"]`` counts each
-_SOURCES = ("exact", "lsh", "simhash", "span")
+_SOURCES = ("exact", "lsh", "span")
 
 
 @dataclass
@@ -67,25 +72,22 @@ class DedupPipeline:
         spark: SparkSession,
         cfg: DedupConfig | None = None,
         run_dir: str | None = None,
-        enable_simhash: bool = True,
         enable_span: bool = True,
         keep_policy: str = "oldest",
         log=None,
     ):
         """The independent fingerprint tiers are built in parallel driver
-        threads: the signature UDF + LSH stats, the SimHash UDF + its pair
-        kernel, and the span anchor UDF share no inputs beyond the
-        conversations stage, so their eager jobs are submitted to the Spark
-        scheduler concurrently. Serial submission would leave most task
-        slots idle during every narrow stage (stats aggregations,
-        checkpoints, Arrow batch boundaries) — idle slots cost nothing on a
-        small cluster but scale linearly with cluster width. Stage walls
+        threads: the signature UDF + LSH pairing and the span anchor UDF
+        share no inputs beyond the conversations stage, so their eager jobs
+        are submitted to the Spark scheduler concurrently. Serial submission
+        would leave most task slots idle during every narrow stage (stats
+        aggregations, checkpoints, Arrow batch boundaries) — idle slots cost
+        nothing on a small cluster but scale linearly with cluster width. Stage walls
         still sum to the run wall; attribution follows stage completion
         order."""
         self.spark = spark
         self.cfg = cfg or DedupConfig()
         self.run_dir = run_dir
-        self.enable_simhash = enable_simhash
         self.enable_span = enable_span
         self.keep_policy = keep_policy
         self.log = log or (lambda msg: None)
@@ -121,15 +123,16 @@ class DedupPipeline:
             n = out.count()
             self._record(stage, n, time.monotonic() - t0, resumed=True)
             return out
+        # the row count rides the stage's own action (write or checkpoint)
+        # instead of a count() job over the result
+        obs = Observation()
+        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         if p:
             df.write.mode("overwrite").parquet(p)
             out = self.spark.read.parquet(p)
-            n = out.count()
         else:
             out = df.localCheckpoint()
-            # row counts are free from the persisted files above, but an
-            # in-memory run would pay one extra job per stage — skip (-1)
-            n = -1
+        n = obs.get["rows"]
         self._record(stage, n, time.monotonic() - t0, resumed=False)
         return out
 
@@ -187,12 +190,12 @@ class DedupPipeline:
             metrics["ingest_rejects"] = rej_obs.get
             self.log(f"ingest rejects: {metrics['ingest_rejects']}")
 
-        # Tier construction: the signature UDF (+LSH stats), the SimHash
-        # UDF (+pair kernel) and the span anchor UDF are independent given
-        # the conversations stage. Their EAGER jobs (stage writes,
-        # stats/UDF-table checkpoints) are submitted from parallel driver
-        # threads so the Spark scheduler backfills idle task slots — the
-        # narrow phases of one tier overlap the wide phases of another.
+        # Tier construction: the signature UDF (+LSH pairing) and the span
+        # anchor UDF are independent given the conversations stage. Their
+        # EAGER jobs (stage writes, stats/UDF-table checkpoints) are
+        # submitted from parallel driver threads so the Spark scheduler
+        # backfills idle task slots — the narrow phases of one tier overlap
+        # the wide phases of another.
         # Resume guards unchanged: a tier's kernels are never even
         # constructed when the stage consuming them is already on disk.
         pairs_done = self._done("pairs")
@@ -217,45 +220,6 @@ class DedupPipeline:
                 tier["lsh"] = lsh_pairs
                 overflow_dfs["lsh_overflow_buckets"] = lsh_overflow
 
-        def t_simhash():
-            from dedup.assemble import turn_filters
-
-            turns_f = turns
-            pred = turn_filters(cfg)
-            if pred is not None:
-                turns_f = turns_f.where(pred)
-            # all tiers must see the same filtered population: conversations
-            # dropped by min_size (applied in assemble_conversations) must
-            # not re-enter through simhash turn edges — semi-join against
-            # the assembled (already materialized) conversations table.
-            # (no broadcast hint: the conv_id set is corpus-sized at scale;
-            # AQE picks broadcast itself when it is actually small)
-            turns_f = turns_f.join(conv.select("conv_id"), "conv_id", "left_semi")
-            # No repartition before the UDF: this input is scan-fed
-            # (session maxPartitionBytes=16MB guarantees ≥ corpus_bytes/16MB
-            # splits — already ≥ parallelism for any corpus where the UDF
-            # cost matters), and an unconditional repartition would shuffle
-            # the FULL raw text payload (measured: 1.3 GB moved for nothing
-            # at 6.4M turns; walls equal at same-moment host speed).
-            # Checkpoint the per-turn simhash table: the pair kernel reads
-            # it from several subtrees (the stats agg + the s>2 membership
-            # join), and without a cut the simhash UDF — the most expensive
-            # kernel in the stage — would run once per subtree
-            sh = (
-                with_turn_simhash(turns_f, cfg)
-                .select("conv_id", "turn_idx", "simhash")
-                .localCheckpoint()
-            )
-            # materialize=False: the turn-pair table has exactly ONE
-            # consumer (the coverage aggregation inside simhash_conv_pairs)
-            # and its expensive inputs (the turn-simhash table above, the fp
-            # stats tables) are already checkpointed
-            sh_pairs, sh_overflow = simhash_conv_pairs(
-                sh, cfg, materialize=False, return_overflow=True, metrics_out=metrics
-            )
-            tier["simhash"] = sh_pairs
-            overflow_dfs["simhash_overflow_buckets"] = sh_overflow
-
         def t_span():
             # Span candidates are anchor joins only — the LCS verifier runs
             # later, anti-joined against the already-accepted edge set, so
@@ -267,8 +231,6 @@ class DedupPipeline:
             overflow_dfs["span_overflow_anchors"] = span_overflow
 
         tasks = [t_signatures]
-        if not pairs_done and self.enable_simhash:
-            tasks.append(t_simhash)
         if span_needed:
             tasks.append(t_span)
         with ThreadPoolExecutor(max_workers=len(tasks)) as ex:
@@ -278,10 +240,7 @@ class DedupPipeline:
 
         all_pairs = None
         if not pairs_done:
-            pair_dfs = [exact_pairs(conv, cfg), tier["lsh"]]
-            if self.enable_simhash:
-                pair_dfs.append(tier["simhash"])
-            all_pairs = self._dedup_pair_union(pair_dfs)
+            all_pairs = self._dedup_pair_union([exact_pairs(conv, cfg), tier["lsh"]])
         pairs = self._materialize("pairs", all_pairs)
 
         if edges_done:
@@ -326,7 +285,7 @@ class DedupPipeline:
             all_pairs = all_pairs.unionByName(p)
         # One row per undirected pair. Only 'exact' pairs skip verify_pairs,
         # so a pair exact proposed must keep that source: min() does,
-        # because "exact" sorts before "lsh" and "simhash".
+        # because "exact" sorts before every other tier's name.
         return all_pairs.groupBy("conv_a", "conv_b").agg(F.min("source").alias("source"))
 
     def _finish(self, edges, conv, metrics, overflow_dfs, _pre_ids):
@@ -352,17 +311,15 @@ class DedupPipeline:
         if self._done("clusters"):
             clusters = self._materialize("clusters", None)  # loads from disk
         else:
-            # edge count from the stage lineage (exact when the stage was
-            # written+counted; -1 for in-memory runs): above CC's driver
-            # bound it skips the driver-regime probe
-            n_edges = next(
-                (e["rows"] for e in self._lineage if e["stage"] == "edges"), None
-            )
+            # edge count from the stage lineage (observed on the edge stage's
+            # own action, or counted on resume): above CC's driver bound it
+            # skips the driver-regime probe
+            n_edges = next(e["rows"] for e in self._lineage if e["stage"] == "edges")
             cc = connected_components(
                 edges.select("conv_a", "conv_b"),
                 cfg.cc_max_iters,
                 log=self.log,
-                n_edges=None if n_edges is None or n_edges < 0 else n_edges,
+                n_edges=n_edges,
                 input_deduped=True,  # edge stage is one row per pair
                 metrics_out=metrics,  # cc_edges / cc_driver / cc_rounds
             )
@@ -372,9 +329,9 @@ class DedupPipeline:
                 select_representatives(cc, conv, self.keep_policy),
             )
             # free every scratch checkpoint this run pinned (tier sized
-            # tables, simhash/turn-pair tables, CC rounds, conv/sigs/...)
-            # EXCEPT the blocks backing the returned clusters DataFrame —
-            # leaked blocks measurably slow the session's next job.
+            # tables, CC rounds, conv/sigs/...) EXCEPT the blocks backing the
+            # returned clusters DataFrame — leaked blocks measurably slow the
+            # session's next job.
             _cluster_ids = persistent_rdd_ids(self.spark) - _before_clusters
             scratch = (persistent_rdd_ids(self.spark) - _pre_ids) - _cluster_ids
             freed = unpersist_ids(self.spark, scratch)

@@ -97,10 +97,9 @@ def test_checkpoint_resume_byte_identical(spark, turns_df, tmp_path_factory):
 
 def test_full_resume_runs_no_eager_tier_work(spark, turns_df, tmp_path):
     """Resuming a fully-materialized run must not construct the tier
-    kernels: their eager localCheckpoints (bucket stats, simhash table,
-    span anchors) would otherwise recompute tier work the parquet stages
-    already hold. Detectable as zero new persistent RDDs across the
-    resumed run."""
+    kernels: their eager localCheckpoints (bucket stats, span anchors)
+    would otherwise recompute tier work the parquet stages already hold.
+    Detectable as zero new persistent RDDs across the resumed run."""
     from dedup.config import DedupConfig
     from dedup.pipeline import DedupPipeline
     from dedup.util import persistent_rdd_ids
@@ -166,9 +165,9 @@ def test_select_representatives_matches_window_ordering(spark):
 def test_span_union_stable_when_lsh_rejects(spark):
     """VERDICT r04 #6: a pair that is an LSH CANDIDATE but fails Jaccard
     verification must still reach the final edge set when the span tier
-    accepts it — the two-path flow (pair-priority union for exact/simhash/
-    lsh, span edges anti-joined after verification) is union-stable
-    regardless of which tier sees the pair first."""
+    accepts it — the two-path flow (pair union for exact/lsh, span edges
+    anti-joined after verification) is union-stable regardless of which
+    tier sees the pair first."""
     import numpy as np
 
     from dedup.lsh import candidate_pairs
@@ -203,16 +202,13 @@ def test_span_union_stable_when_lsh_rejects(spark):
     }
     assert ("pa", "pb") not in accepted, accepted
 
-    # span tier accepts → same final cluster (simhash off: the identical
-    # turn 0 would otherwise accept the pair before span ever runs)
-    r_span = DedupPipeline(spark, cfg, enable_simhash=False).run(turns)
+    # span tier accepts → same final cluster
+    r_span = DedupPipeline(spark, cfg).run(turns)
     m = {r.conv_id: r.cluster_id for r in r_span.clusters.collect()}
     assert m.get("pa") is not None and m.get("pa") == m.get("pb"), m
 
     # and WITHOUT the span tier the lsh rejection stands: no cluster
-    r_nospan = DedupPipeline(
-        spark, cfg, enable_simhash=False, enable_span=False
-    ).run(turns)
+    r_nospan = DedupPipeline(spark, cfg, enable_span=False).run(turns)
     m2 = {r.conv_id: r.cluster_id for r in r_nospan.clusters.collect()}
     assert m2.get("pa") is None or m2.get("pa") != m2.get("pb"), m2
 
@@ -240,15 +236,10 @@ def test_caps_audit_in_metrics(spark, turns_df, tmp_path_factory):
     # the caps BOUND: overflow counters are present and non-zero for lsh
     # (exact-copy groups make >2-member band buckets by construction)
     assert m["lsh_overflow_buckets"] > 0
-    for k in ("simhash_overflow_buckets", "span_overflow_anchors"):
-        assert k in m and m[k] >= 0
+    assert m["span_overflow_anchors"] >= 0
     # CC reported which regime ran: a small edge table finishes on the
     # driver, with no distributed rounds
     assert m["cc_driver"] is True and m["cc_edges"] > 0 and m["cc_rounds"] == 0
-    # SimHash reported its regime: the driver kernel hands any input on
-    # which a cap binds to the distributed path, so the driver regime ran
-    # exactly when no SimHash bucket overflowed
-    assert m["simhash_driver"] is (m["simhash_overflow_buckets"] == 0)
     # the LSH and span bucket tables are small: both paired on the driver,
     # whose star edges keep a binding cap exact
     assert m["lsh_driver"] is True and m["span_driver"] is True
@@ -257,10 +248,13 @@ def test_caps_audit_in_metrics(spark, turns_df, tmp_path_factory):
     disk = _json.loads(open(_os.path.join(run_dir, "metrics.json")).read())
     for k in (
         "caps", "lsh_overflow_buckets", "cc_edges", "cc_driver", "cc_rounds",
-        "simhash_driver", "stages", "ingest_rejects", "simhash_overflow_buckets",
-        "span_overflow_anchors", "lsh_driver", "span_driver", "edges_by_source",
+        "stages", "ingest_rejects", "span_overflow_anchors", "lsh_driver",
+        "span_driver", "edges_by_source",
     ):
         assert k in disk, k
+    # SimHash is not a pipeline tier: no SimHash key, no SimHash edges
+    assert not [k for k in disk if k.startswith("simhash")], sorted(disk)
+    assert set(disk["edges_by_source"]) == {"exact", "lsh", "span"}
     # the per-source edge funnel accounts for every row of the edge stage
     edge_rows = next(s["rows"] for s in disk["stages"] if s["stage"] == "edges")
     assert sum(disk["edges_by_source"].values()) == edge_rows > 0

@@ -4,7 +4,8 @@
 - turn-level predicates reach the parquet scan (PushedFilters);
 - column pruning: the scan reads only referenced columns (ReadSchema);
 - the delete rewrite broadcasts the small loser set;
-- the exact tier stays inside WholeStageCodegen (no Python in the hot path).
+- the exact tier stays inside WholeStageCodegen (no Python in the hot path);
+- a small in-memory pipeline pass stays within its Spark job budget.
 """
 
 from __future__ import annotations
@@ -170,3 +171,27 @@ def test_keep_policy_deskewed_no_window(spark, turns_parquet):
         plan = _plan(select_representatives(clusters, conv, policy))
         assert "Window" not in plan, (policy, plan)
         assert "HashAggregate" in plan, (policy, plan)
+
+
+#: Spark jobs one in-memory ``DedupPipeline`` pass runs on the shared test
+#: corpus (120 base conversations), as measured when the SimHash tier left
+#: the pipeline (the pass ran 43 before). At this input size the cold pass
+#: is mostly fixed cost per job, so the count must not creep back up.
+PIPELINE_JOB_BUDGET = 37
+
+
+def test_pipeline_job_budget(spark, turns_df):
+    from dedup.pipeline import DedupPipeline
+
+    def n_jobs():
+        # the status store is fed by the async listener bus: drain it first
+        sc = spark.sparkContext._jsc.sc()  # noqa: SLF001
+        sc.listenerBus().waitUntilEmpty()
+        return sc.statusStore().jobsList(spark._jvm.java.util.ArrayList()).size()  # noqa: SLF001
+
+    before = n_jobs()
+    res = DedupPipeline(spark, DedupConfig()).run(turns_df)
+    jobs = n_jobs() - before
+    assert jobs <= PIPELINE_JOB_BUDGET, jobs
+    # each stage's row count rides its own checkpoint: real counts, no job
+    assert all(s.rows > 0 for s in res.stages), res.stages

@@ -77,16 +77,29 @@ def test_one_vocabulary_long_turns_stay_apart(spark):
     """SimHash estimates cosine, so long texts drawn from one small
     vocabulary land within Hamming 3 of each other (8 of these 190 pairs do)
     while their shingle Jaccard is ~0.07. Such a SimHash candidate must fail
-    verification, not merge unrelated conversations."""
+    verification, and the pipeline must not merge unrelated conversations."""
+    from dedup.assemble import assemble_conversations
+    from dedup.minhash import with_minhash
     from dedup.pipeline import DedupPipeline
     from dedup.synth_spark import _VOCAB
+    from dedup.verify import verify_pairs
 
     rng = np.random.default_rng(7)
     rows = []
     for i in range(20):
         rows += _conv(f"v{i:02d}", [" ".join(rng.choice(_VOCAB, 900))])
     turns = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
-    clusters = DedupPipeline(spark, DedupConfig()).run(turns).clusters
+    cfg = DedupConfig()
+
+    # the library tier proposes such pairs, and verification rejects them all
+    sh = with_turn_simhash(turns, cfg).select("conv_id", "turn_idx", "simhash")
+    cand = simhash_conv_pairs(sh, cfg)
+    assert cand.count() >= 1
+    conv = assemble_conversations(turns, cfg)
+    sigs = with_minhash(conv, cfg).select("conv_id", "minhash")
+    assert verify_pairs(cand, sigs, cfg, conversations=conv).collect() == []
+
+    clusters = DedupPipeline(spark, cfg).run(turns).clusters
     # clusters lists only conversations that have an edge: any row is a merge
     assert clusters.select("conv_id").collect() == []
 

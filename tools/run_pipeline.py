@@ -38,7 +38,6 @@ def parse_args(argv):
     p.add_argument("--jaccard-threshold", type=float, default=0.7)
     p.add_argument("--min-span-len", type=int, default=4096)
     p.add_argument("--seed", type=int, default=42)
-    p.add_argument("--no-simhash", action="store_true")
     p.add_argument("--no-span", action="store_true")
     p.add_argument("--apply-delete", action="store_true",
                    help="also write the deduplicated turns table (<output>_turns)")
@@ -81,7 +80,6 @@ def main(argv=None) -> int:
         spark,
         cfg,
         run_dir=args.run_dir,
-        enable_simhash=not args.no_simhash,
         enable_span=not args.no_span,
         keep_policy=args.keep_policy,
         log=lambda m: print(f"[dedup] {m}", file=sys.stderr),
