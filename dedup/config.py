@@ -81,24 +81,10 @@ class DedupConfig:
     band_bucket_cap: int = 2000
 
     # ---- SimHash tier ----------------------------------------------------
-    #: max Hamming distance for a SimHash near-exact match.
+    #: max Hamming distance for a SimHash near-exact match; the banding's
+    #: block count follows the distinct-fingerprint count
+    #: (simhash.pick_band_blocks) and never changes the pair set.
     simhash_hamming: int = 3
-    #: pigeonhole blocks for Hamming banding (Manku/Das/Sarma-style): the
-    #: 64-bit fingerprint (every SimHash kernel fixes that width) splits into
-    #: this many blocks; a pair within simhash_hamming differs in ≤ hamming
-    #: blocks, so it matches exactly on at least (blocks - hamming) of them →
-    #: band key = every (blocks-hamming)-subset of blocks. Must exceed
-    #: simhash_hamming (simhash._pigeonhole_layout raises otherwise — fewer
-    #: blocks break the pigeonhole recall guarantee). Fewer blocks ⇒
-    #: fewer/wider tables but exponentially more random same-key
-    #: collisions; more blocks ⇒ more banded rows. The FINAL pair set is
-    #: identical for every valid value (the exact Hamming filter decides);
-    #: only candidate volume changes. Default None ⇒ adapt to the measured
-    #: distinct-fingerprint count via simhash.pick_simhash_blocks's
-    #: measured cost model (streamed candidate ≈ 1/300 of a shuffled band
-    #: row): up to ~10⁷ distinct → 4 blocks / 4 tables; ~10⁹ → 5 blocks /
-    #: 10 tables; ~10¹¹ → 6 blocks / 20 tables.
-    simhash_blocks: int | None = None
 
     # ---- suffix / shared-span tier ---------------------------------------
     #: minimum shared-substring length (chars) the span stage reports.

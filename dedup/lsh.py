@@ -8,9 +8,9 @@ int slice — no Python), and rows sharing a (band_id, band_hash) bucket are
 paired by ``bucketed_pairs``, which the SimHash and span tiers use too.
 
 ``bucketed_pairs`` has two regimes, chosen by input size (as in
-``dedup.cc`` and ``dedup.simhash``). Up to ``_DRIVER_ROWS`` rows the bucket
-table is collected as Arrow and paired in numpy on the driver — the same
-blocking-in-memory-by-key the reference does — with no shuffle at all.
+``dedup.cc``). Up to ``_DRIVER_ROWS`` rows the bucket table is collected as
+Arrow and paired in numpy on the driver — the same blocking-in-memory-by-key
+the reference does — with no shuffle at all.
 Larger tables, tables with nulls or with columns that are neither strings
 nor integers, and tables whose pairs would exceed ``_DRIVER_PAIRS`` take
 the distributed path: a bucket-stats aggregation, a membership join and a

@@ -30,7 +30,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from dedup.assemble import assemble_conversations
+from dedup.assemble import assemble_conversations, reject_metrics_exprs
 from dedup.cc import connected_components
 from dedup.config import DedupConfig
 from dedup.exact import exact_pairs
@@ -187,7 +187,15 @@ class DedupPipeline:
             conv_df = assemble_conversations(turns, cfg)
         conv = self._materialize("conversations", conv_df)
         if rej_obs is not None:
-            metrics["ingest_rejects"] = rej_obs.get
+            # an empty input can be optimized down to an empty relation that
+            # never reports the observation, so reading it would fail: count
+            # with the same exprs in a plain aggregation instead
+            if self._lineage[-1]["rows"] > 0:
+                metrics["ingest_rejects"] = rej_obs.get
+            else:
+                metrics["ingest_rejects"] = (
+                    turns.agg(*reject_metrics_exprs(cfg)).first().asDict()
+                )
             self.log(f"ingest rejects: {metrics['ingest_rejects']}")
 
         # Tier construction: the signature UDF (+LSH pairing) and the span

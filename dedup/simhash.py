@@ -7,31 +7,22 @@ become edges, as for LSH. This is the per-page analog of the reference's
 per-file prefix hash (reference: /root/reference/src/fileinfo.rs:42-48): a
 cheap fixed-width fingerprint that blocks likely near-duplicates together.
 
-Dataflow (fingerprints in one pandas UDF; pairing in the JVM, or on the
-driver for small tables):
+Dataflow (fingerprints in one pandas UDF; pairing in the JVM):
 1. normalize turn text hard (lowercase, strip punctuation) — so pure
    whitespace/punct variants hash IDENTICALLY;
 2. 64-bit SimHash per turn in one Arrow-batched pandas UDF (numpy bit-count
    over shingle hashes);
-3. pigeonhole banding (Manku-style): the 64 bits split into
-   ``simhash_blocks`` blocks; Hamming ≤ k ⇒ at least (blocks-k) blocks
-   match exactly, so every (blocks-k)-subset of blocks becomes a band key
-   and bucket-grouping on (chunk_id, chunk_val) finds all such pairs
-   without O(n²) compare — key width sets collision volume (see
-   DedupConfig.simhash_blocks; ``_pigeonhole_layout`` is the one layout);
+3. pigeonhole banding (Manku-style): the 64 bits split into b blocks;
+   Hamming ≤ k ⇒ at least (b-k) blocks match exactly, so every
+   (b-k)-subset of blocks becomes a band key and bucket-grouping on
+   (chunk_id, chunk_val) finds all such pairs without O(n²) compare — key
+   width sets collision volume, so b follows the distinct-fingerprint
+   count (``pick_band_blocks``; ``_band_structs`` builds the keys);
 4. keep fingerprint pairs within Hamming ``simhash_hamming`` (xor +
    bit_count);
 5. lift turn pairs to conversation candidates (source='simhash') by a
    both-sides turn-coverage filter (``simhash_conv_pairs``); it is not
    verification — ``verify.verify_pairs`` checks them.
-
-Steps 3-5 run in one of two regimes (``simhash_conv_pairs``): up to
-``_DRIVER_TURNS`` turns they run as one Arrow collect plus a numpy kernel
-on the driver, which saves the distributed kernel's dozens of stages and
-several exchanges on small tables; larger tables, and any table on which a
-bucket cap would bind, take the distributed DataFrame path
-(``simhash_turn_pairs``), whose capped buckets become star edges plus
-overflow rows.
 """
 
 from __future__ import annotations
@@ -40,30 +31,16 @@ import sys
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from dedup.cc import dense_index
 from dedup.config import DedupConfig
-from dedup.lsh import _group_pairs, bucketed_pairs, route_bucket_pairs
+from dedup.lsh import bucketed_pairs, route_bucket_pairs
 from dedup.minhash import _collapse_runs, batch_window_hashes
 
-#: largest turn-fingerprint table paired on the driver. Measured on a
-#: 4-core host with synth_spark turn tables: at 100k and 300k turns the
-#: driver regime took 0.6 s and 3 s against 7-13 s and 10-20 s distributed;
-#: at 500k and 1M turns a band bucket exceeded the default cap, so the
-#: kernel could only fall back (at 500k, ~1.3 s later than going
-#: distributed at once).
-_DRIVER_TURNS = 300_000
-#: most candidate pairs (fingerprint pairs from the band buckets plus turn
-#: pairs from the exact groups and their expansion) the driver kernel
-#: enumerates. The 300k-turn table above enumerates 22.8M band pairs in
-#: 2.4 s on one core and ~0.5 GB of driver memory.
-_DRIVER_PAIRS = 24_000_000
-#: fingerprint width: batch_simhash, with_turn_simhash_md5 and _popcount64
-#: all produce or read 64-bit fingerprints
+#: fingerprint width: batch_simhash and with_turn_simhash_md5 both produce
+#: 64-bit fingerprints
 _FP_BITS = 64
 #: the conversation-lift coverage filter (see ``simhash_conv_pairs``)
 _MIN_SHARED_TURN_FRAC = 0.8
@@ -192,7 +169,7 @@ def with_turn_simhash_md5(
     DuckDB, no signed-shift pitfalls.
 
     Slower than the batched numpy kernel (one md5 per gram) — the numpy
-    path remains the pipeline default; this variant is the driver-oracle
+    kernel stays the library default; this variant is the driver-contract
     surface exercising the same banding/pairing dataflow downstream.
     Output: (conv_id, turn_idx, simhash) — same contract as
     ``with_turn_simhash``, so ``simhash_turn_pairs`` runs unchanged.
@@ -299,7 +276,7 @@ tsim AS (
 """
 
 
-def pick_simhash_blocks(
+def pick_band_blocks(
     n_distinct: int, bits: int = _FP_BITS, hamming: int = 3, max_blocks: int = 10
 ) -> int:
     """Block count minimizing the MEASURED cost model of the banding kernel
@@ -336,46 +313,34 @@ def pick_simhash_blocks(
     return best_b
 
 
-def _pigeonhole_layout(bits: int, k: int, nb: int) -> tuple[list, list]:
-    """The banding layout both SimHash regimes share: ``blocks`` lists
-    (offset, width) of the fingerprint's nb bit blocks; ``keys`` lists, per
-    (nb - k)-subset of blocks, the (block, left shift) pairs whose sum packs
-    the subset's block values into one 64-bit band key."""
+def _band_structs(cfg: DedupConfig, nb: int) -> list:
+    """JVM band-key exprs: one struct (chunk_id, chunk_val) per
+    (nb - hamming)-subset of the fingerprint's nb bit blocks, the subset's
+    block values packed into one long (shift/mask only, no Python)."""
     from itertools import combinations
 
+    k = cfg.simhash_hamming
     if nb <= k:
         # with nb <= hamming blocks, a pair within Hamming k can differ in
         # EVERY block — no subset key is guaranteed equal and the pigeonhole
         # recall guarantee silently breaks (clamping to 1-block subsets
         # would just miss those pairs with no error or overflow row)
         raise ValueError(
-            f"simhash_blocks={nb} must exceed simhash_hamming={k}: "
+            f"{nb} blocks must exceed simhash_hamming={k}: "
             f"pigeonhole banding needs >= hamming+1 blocks for full recall"
         )
-    widths = [bits // nb + (1 if i < bits % nb else 0) for i in range(nb)]
-    blocks = [(sum(widths[:i]), widths[i]) for i in range(nb)]
-    wmax = max(widths)
-    keys = [
-        [(bi, pos * wmax) for pos, bi in enumerate(combo)]
-        for combo in combinations(range(nb), nb - k)
-    ]
-    return blocks, keys
-
-
-def _band_structs(cfg: DedupConfig, nb: int, col: str = "simhash") -> list:
-    """JVM band-key exprs: one struct (chunk_id, chunk_val) per
-    (nb - hamming)-subset of the fingerprint's nb bit blocks, the subset's
-    block values packed into one long (shift/mask only, no Python)."""
-    blocks, keys = _pigeonhole_layout(_FP_BITS, cfg.simhash_hamming, nb)
+    widths = [_FP_BITS // nb + (1 if i < _FP_BITS % nb else 0) for i in range(nb)]
+    offsets = [sum(widths[:i]) for i in range(nb)]
     blk = [
-        F.shiftrightunsigned(F.col(col), off).bitwiseAND(F.lit((1 << w) - 1))
-        for off, w in blocks
+        F.shiftrightunsigned(F.col("simhash"), off).bitwiseAND(F.lit((1 << w) - 1))
+        for off, w in zip(offsets, widths)
     ]
+    wmax = max(widths)
     structs = []
-    for ci, key_parts in enumerate(keys):
-        key = blk[key_parts[0][0]]
-        for bi, shift in key_parts[1:]:
-            key = key + F.shiftleft(blk[bi], shift)
+    for ci, combo in enumerate(combinations(range(nb), nb - k)):
+        key = blk[combo[0]]
+        for pos, bi in enumerate(combo[1:], start=1):
+            key = key + F.shiftleft(blk[bi], pos * wmax)
         structs.append(F.struct(F.lit(ci).alias("chunk_id"), key.alias("chunk_val")))
     return structs
 
@@ -400,7 +365,7 @@ def simhash_turn_pairs(
        the stats-first kernel (s==2 direct, cap→star for mega-groups) and
        NEVER enter the Hamming banding.
     2. NEAR fingerprint pairs (1..k): pigeonhole banding (Manku-style, see
-       DedupConfig.simhash_blocks) over the DISTINCT fingerprints only —
+       ``pick_band_blocks``) over the DISTINCT fingerprints only —
        members are bare longs (codegen min/max, no struct aggregation),
        tables × distinct rows, never tables × turns. Block count adapts to
        the measured distinct count so random-collision pairs stay ~O(n).
@@ -453,10 +418,8 @@ def simhash_turn_pairs(
 
     # (2) near pairs over DISTINCT fingerprints
     fps = fp_counts.select("simhash")
-    nb = cfg.simhash_blocks
-    if nb is None:
-        n_fp = fp_counts.count()  # count of the checkpointed table — free-ish
-        nb = pick_simhash_blocks(max(n_fp, 1), _FP_BITS, k)
+    n_fp = fp_counts.count()  # count of the checkpointed table — free-ish
+    nb = pick_band_blocks(max(n_fp, 1), _FP_BITS, k)
     banded = fps.select(
         "simhash", F.explode(F.array(*_band_structs(cfg, nb))).alias("c")
     ).select("simhash", "c.chunk_id", "c.chunk_val")
@@ -511,7 +474,6 @@ def simhash_conv_pairs(
     cfg: DedupConfig | None = None,
     materialize: bool = True,
     return_overflow: bool = False,
-    metrics_out: dict | None = None,
 ):
     """Lift turn pairs to conversation candidate pairs (source='simhash').
 
@@ -525,45 +487,12 @@ def simhash_conv_pairs(
     side's turn count, so two one-turn conversations become a candidate
     on one matched turn.
 
-    Two regimes, chosen by input size (as in ``dedup.cc``):
-
-    - **Driver** (up to ``_DRIVER_TURNS`` turns): one Arrow collect of the
-      turn-fingerprint table and a vectorized numpy kernel
-      (``_driver_conv_pairs``) that enumerates the same buckets as the
-      distributed path. It falls back to the distributed path when any
-      bucket cap would bind or the enumeration would exceed
-      ``_DRIVER_PAIRS``, so star edges and overflow rows have one
-      implementation; the driver regime's overflow frame is empty.
-    - **Distributed**: ``simhash_turn_pairs`` plus a coverage aggregation.
-      ``materialize`` checkpoints its turn-pair table; with it off, Spark's
-      exchange reuse still computes the chunk self-join once per action.
-
-    ``metrics_out``: optional dict filled with ``simhash_driver`` (which
-    regime ran).
-
-    The regime is picked by a row count of ``turns_sh``, so a table above
-    ``_DRIVER_TURNS`` is never collected; pass a checkpointed table (the
-    pipeline does) to keep that count one cheap job.
+    The turn pairs come from ``simhash_turn_pairs``; ``materialize``
+    checkpoints them, and with it off Spark's exchange reuse still computes
+    the chunk self-join once per action. ``return_overflow`` also returns
+    the capped-bucket rows (path, bucket_n).
     """
     cfg = cfg or DedupConfig()
-    spark = turns_sh.sparkSession
-    t = turns_sh.select("conv_id", "turn_idx", "simhash")
-    lifted = None
-    if t.count() <= _DRIVER_TURNS:
-        lifted = _driver_conv_pairs(t.toArrow(), cfg)
-    if lifted is not None:
-        out = spark.createDataFrame(lifted, "conv_a string, conv_b string").withColumn(
-            "source", F.lit("simhash")
-        )
-        overflow = spark.createDataFrame([], "path string, bucket_n bigint")
-    else:
-        out, overflow = _distributed_conv_pairs(turns_sh, cfg, materialize)
-    if metrics_out is not None:
-        metrics_out["simhash_driver"] = lifted is not None
-    return (out, overflow) if return_overflow else out
-
-
-def _distributed_conv_pairs(turns_sh, cfg, materialize) -> tuple[DataFrame, DataFrame]:
     tp, overflow = simhash_turn_pairs(turns_sh, cfg)
     if materialize:
         tp = tp.localCheckpoint()
@@ -589,111 +518,4 @@ def _distributed_conv_pairs(turns_sh, cfg, materialize) -> tuple[DataFrame, Data
         )
         .select("conv_a", "conv_b", F.lit("simhash").alias("source"))
     )
-    return out, overflow
-
-
-_POPCOUNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
-
-
-def _popcount64(x: np.ndarray) -> np.ndarray:
-    return _POPCOUNT8[x.view(np.uint8).reshape(-1, 8)].sum(axis=1, dtype=np.uint8)
-
-
-def _distinct_per_group(g: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:
-    """Number of distinct values ``v`` in each of the ``n`` groups ``g``."""
-    o = np.lexsort((v, g))
-    g, v = g[o], v[o]
-    new = np.ones(g.size, dtype=bool)
-    new[1:] = (g[1:] != g[:-1]) | (v[1:] != v[:-1])
-    return np.bincount(g[new], minlength=n)
-
-
-def _driver_conv_pairs(table: pa.Table, cfg: DedupConfig) -> pa.Table | None:
-    """(conv_id, turn_idx, simhash) → (conv_a, conv_b) with conv_a < conv_b
-    in byte order; the same pairs the distributed path lifts. ``None`` when
-    a cap would bind there (an exact-fingerprint group, a band bucket or an
-    expansion bucket above ``band_bucket_cap``), when the enumeration would
-    exceed ``_DRIVER_PAIRS``, or on null values, so the caller falls back.
-    """
-    cap, k = cfg.band_bucket_cap, cfg.simhash_hamming
-    if cap < 2 or any(c.null_count for c in table.columns):
-        return None  # the distributed path rejects cap < 2; nulls stay there too
-    ids, ci = dense_index(table.column("conv_id").combine_chunks())
-    turn = table.column("turn_idx").to_numpy()
-    fps, fpi, cnt = np.unique(
-        table.column("simhash").to_numpy(), return_inverse=True, return_counts=True
-    )
-    if cnt.max(initial=0) > cap:
-        return None
-
-    # near fingerprint pairs: the distributed path's pigeonhole band buckets
-    # over the distinct fingerprints. Every bucket is sized before any pair
-    # is enumerated, so a binding cap or an exhausted budget costs the sorts
-    # only.
-    budget = _DRIVER_PAIRS - int((cnt * (cnt - 1) // 2).sum())
-    nb = cfg.simhash_blocks
-    if nb is None:
-        nb = pick_simhash_blocks(max(fps.size, 1), _FP_BITS, k)
-    blocks, keys = _pigeonhole_layout(_FP_BITS, k, nb)
-    u = fps.view(np.uint64)
-    blk = [(u >> np.uint64(off)) & np.uint64((1 << w) - 1) for off, w in blocks]
-    bands = []
-    for key_parts in keys:
-        key = np.zeros_like(u)
-        for bi, shift in key_parts:
-            key += blk[bi] << np.uint64(shift)
-        order = np.argsort(key)
-        key = key[order]
-        heads = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
-        sizes = np.diff(np.r_[heads, key.size])
-        if sizes.max(initial=0) > cap:
-            return None
-        budget -= int((sizes * (sizes - 1) // 2).sum())
-        if budget < 0:
-            return None
-        bands.append((order, sizes))
-    fa, fb = [], []
-    for order, sizes in bands:
-        a, b = _group_pairs(order, sizes)
-        hit = _popcount64(u[a] ^ u[b]) <= k  # distinct fingerprints: never 0
-        fa.append(np.minimum(a, b)[hit])
-        fb.append(np.maximum(a, b)[hit])
-    n_fp = max(fps.size, 1)
-    near = np.unique(np.concatenate(fa) * n_fp + np.concatenate(fb))
-    fa, fb = near // n_fp, near % n_fp
-    if (cnt[fa] + cnt[fb] > cap).any():
-        return None  # an expansion bucket would be capped
-
-    # turn pairs: every pair inside an exact group, every cross pair of a
-    # near fingerprint pair
-    budget -= int((cnt[fa] * cnt[fb]).sum())
-    if budget < 0:
-        return None
-    rows = np.argsort(fpi)  # rows grouped by fingerprint
-    start = np.cumsum(cnt) - cnt
-    r0, r1 = _group_pairs(rows, cnt)
-    width = cnt[fb]
-    n_cross = cnt[fa] * width
-    within = np.arange(n_cross.sum()) - np.repeat(np.cumsum(n_cross) - n_cross, n_cross)
-    width = np.repeat(width, n_cross)
-    r0 = np.concatenate([r0, rows[np.repeat(start[fa], n_cross) + within // width]])
-    r1 = np.concatenate([r1, rows[np.repeat(start[fb], n_cross) + within % width]])
-
-    # conversation lift: distinct matched turns per side of each conv pair
-    c0, c1 = ci[r0], ci[r1]
-    cross = c0 != c1
-    r0, r1, c0, c1 = r0[cross], r1[cross], c0[cross], c1[cross]
-    swap = c0 > c1
-    ra, rb = np.where(swap, r1, r0), np.where(swap, r0, r1)
-    n_conv = max(len(ids), 1)
-    pairs, p = np.unique(ci[ra] * n_conv + ci[rb], return_inverse=True)
-    m = [_distinct_per_group(p, turn[r], pairs.size) for r in (ra, rb)]
-    ca, cb = pairs // n_conv, pairs % n_conv
-    n_turns = np.bincount(ci, minlength=len(ids))
-    n_a, n_b = n_turns[ca], n_turns[cb]
-    keep = (np.minimum(m[0] / n_a, m[1] / n_b) >= _MIN_SHARED_TURN_FRAC) & (
-        np.maximum(m[0], m[1]) >= np.minimum(_MIN_MATCHED_TURNS, np.minimum(n_a, n_b))
-    )
-    return pa.table(
-        {"conv_a": ids.take(pa.array(ca[keep])), "conv_b": ids.take(pa.array(cb[keep]))}
-    )
+    return (out, overflow) if return_overflow else out

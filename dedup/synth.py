@@ -179,13 +179,17 @@ def corpus_to_spark(spark, corpus: Corpus):
 
 
 def write_corpus(path: str, n_convs: int, seed: int = 42, **kw) -> pd.DataFrame:
-    """Materialize a corpus to parquet (bench input); returns truth pairs."""
+    """Materialize a corpus to parquet (a pipeline input); returns truth pairs."""
     corpus = make_corpus(n_convs=n_convs, seed=seed, **kw)
-    # Spark cannot read TIMESTAMP(NANOS) parquet — write microseconds.
+    # Spark cannot read TIMESTAMP(NANOS) parquet — write microseconds, and
+    # UTC-adjusted: Spark reads a tz-naive parquet timestamp as
+    # TIMESTAMP_NTZ, not the ``timestamp`` the transcripts schema declares.
     # Small row groups keep the single file SPLITTABLE: Spark parallelizes
     # a scan at row-group granularity, and one giant row group would pin
     # the whole map side to one task.
-    turns = corpus.turns.assign(ts=corpus.turns["ts"].astype("datetime64[us]"))
+    turns = corpus.turns.assign(
+        ts=corpus.turns["ts"].astype("datetime64[us]").dt.tz_localize("UTC")
+    )
     turns.to_parquet(f"{path}/transcripts.parquet", index=False, row_group_size=50_000)
     corpus.truth_pairs.to_parquet(f"{path}/truth_pairs.parquet", index=False)
     return corpus.truth_pairs

@@ -573,7 +573,7 @@ def test_simhash_block_guards():
     """ADVICE r03 (medium): nb <= hamming must raise, not silently band on
     1-block subsets with broken pigeonhole recall."""
     from dedup.config import DedupConfig
-    from dedup.simhash import _band_structs, pick_simhash_blocks
+    from dedup.simhash import _band_structs, pick_band_blocks
 
     cfg = DedupConfig(simhash_hamming=3)
     with pytest.raises(ValueError, match="pigeonhole"):
@@ -582,8 +582,8 @@ def test_simhash_block_guards():
         _band_structs(cfg, nb=2)
     assert len(_band_structs(cfg, nb=4)) == 4  # C(4,1) valid
     with pytest.raises(ValueError, match="no block count"):
-        pick_simhash_blocks(1000, hamming=5, max_blocks=5)
-    assert pick_simhash_blocks(1000, hamming=3, max_blocks=4) == 4
+        pick_band_blocks(1000, hamming=5, max_blocks=5)
+    assert pick_band_blocks(1000, hamming=3, max_blocks=4) == 4
 
 
 def test_bucket_cap_guard(spark):

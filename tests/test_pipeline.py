@@ -258,3 +258,38 @@ def test_caps_audit_in_metrics(spark, turns_df, tmp_path_factory):
     # the per-source edge funnel accounts for every row of the edge stage
     edge_rows = next(s["rows"] for s in disk["stages"] if s["stage"] == "edges")
     assert sum(disk["edges_by_source"].values()) == edge_rows > 0
+
+
+def test_empty_input_runs_to_zero_clusters(spark, turns_df, tmp_path):
+    """An empty input (empty relation or ``limit(0)``) finishes with no
+    clusters and zero ingest rows, in memory and with a run dir."""
+    empty = spark.createDataFrame([], TRANSCRIPTS_SCHEMA)
+    for turns, run_dir in ((empty, None), (turns_df.limit(0), str(tmp_path / "run"))):
+        res = DedupPipeline(spark, DedupConfig(), run_dir=run_dir).run(turns)
+        assert res.clusters.count() == 0
+        assert res.metrics["ingest_rejects"]["raw_rows"] == 0
+
+
+def test_run_pipeline_entry_point(spark, tmp_path):
+    """The spark-submit script runs end to end on a parquet input: clusters,
+    a run dir and the rewritten turns table; then without the span tier and
+    with a byte-size ``--min-size``."""
+    from dedup.synth import write_corpus
+    from tools import run_pipeline
+
+    src = tmp_path / "in"
+    src.mkdir()
+    write_corpus(str(src), n_convs=30)
+    inp = str(src / "transcripts.parquet")
+    out, run_dir = str(tmp_path / "clusters"), tmp_path / "run"
+    argv = ["--input", inp, "--output", out, "--run-dir", str(run_dir), "--apply-delete"]
+    assert run_pipeline.main(argv) == 0
+    assert (run_dir / "lineage.jsonl").exists()
+    assert spark.read.parquet(out).count() > 0
+    n_in = spark.read.parquet(inp).count()
+    assert 0 < spark.read.parquet(out + "_turns").count() < n_in
+
+    out2 = str(tmp_path / "clusters_nospan")
+    argv = ["--input", inp, "--output", out2, "--no-span", "--min-size", "1kb"]
+    assert run_pipeline.main(argv) == 0
+    assert spark.read.parquet(out2).count() > 0

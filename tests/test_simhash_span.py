@@ -133,7 +133,7 @@ def test_shared_span_pipeline(spark, turns_df, corpus):
         assert r.span_len >= cfg.min_span_len
 
 
-# --- driver vs distributed regime of simhash_conv_pairs ---------------------
+# --- simhash_conv_pairs on hand-built fingerprint tables ------------------
 
 SH_SCHEMA = "conv_id string, turn_idx int, simhash long"
 
@@ -179,112 +179,55 @@ def _non_ascii_rows(rng):
     return rows
 
 
-def _regimes(spark, monkeypatch, rows, cfg=None):
-    """(driver metrics, driver pairs, distributed pairs) for one table."""
-    import dedup.simhash as sm
-
-    sh = spark.createDataFrame(rows, SH_SCHEMA)
-    out = []
-    for forced in (False, True):
-        if forced:  # no table fits, not even an empty one
-            monkeypatch.setattr(sm, "_DRIVER_TURNS", -1)
-        m = {}
-        pairs, overflow = sm.simhash_conv_pairs(
-            sh, cfg, return_overflow=True, metrics_out=m
-        )
-        out.append((m["simhash_driver"], pairs, overflow))
-    monkeypatch.undo()
-    return out
+_ONLY = [f"only{i}" for i in range(4)]
+_EXPECTED_PAIRS = {
+    "_single_turn_rows": {("s0", "s1"), ("s2", "s3")},
+    # each near copy pairs with its original; the one-turn conversations
+    # holding only the boilerplate turn pair with each other, not with the
+    # three-turn conversations that hold it too
+    "_boilerplate_rows": {(f"b{i:02d}", f"b{i:02d}_n") for i in range(0, 30, 3)}
+    | {(a, b) for a in _ONLY for b in _ONLY if a < b},
+    "_non_ascii_rows": {("e", "é"), ("z", "ž"), ("Ω", "日本"), ("｡x", "\U0001F600x")},
+}
 
 
-def _pair_set(df):
-    return sorted((r.conv_a, r.conv_b, r.source) for r in df.collect())
+def _conv_pairs(spark, rows, cfg=None):
+    return simhash_conv_pairs(
+        spark.createDataFrame(rows, SH_SCHEMA), cfg, return_overflow=True
+    )
 
 
-@pytest.mark.parametrize(
-    "cfg", [None, DedupConfig(simhash_blocks=6)], ids=["default", "blocks6"]
-)
 @pytest.mark.parametrize(
     "make_rows", [_single_turn_rows, _boilerplate_rows, _non_ascii_rows]
 )
-def test_simhash_regimes_identical(spark, monkeypatch, make_rows, cfg):
+def test_simhash_conv_pairs_expected(spark, make_rows):
     import random
 
-    (drv, dp, _), (dist, xp, _) = _regimes(
-        spark, monkeypatch, make_rows(random.Random(7)), cfg
+    pairs, overflow = _conv_pairs(spark, make_rows(random.Random(7)))
+    got = [(r.conv_a, r.conv_b, r.source) for r in pairs.collect()]
+    assert {(a, b) for a, b, _ in got} == _EXPECTED_PAIRS[make_rows.__name__]
+    assert len(got) == len(set(got))  # one row per pair
+    # conv_a < conv_b in byte order, the order every tier emits
+    assert all(a.encode() < b.encode() and s == "simhash" for a, b, s in got)
+    assert overflow.collect() == []
+
+
+def test_simhash_conv_pairs_empty_input(spark):
+    pairs, overflow = _conv_pairs(spark, [])
+    assert pairs.collect() == [] and overflow.collect() == []
+    strip = lambda df: [(f.name, f.dataType.simpleString()) for f in df.schema]  # noqa: E731
+    assert strip(pairs) == [("conv_a", "string"), ("conv_b", "string"), ("source", "string")]
+    assert strip(overflow) == [("path", "string"), ("bucket_n", "bigint")]
+
+
+def test_simhash_capped_bucket_overflows(spark):
+    """A boilerplate group larger than the cap becomes star edges plus an
+    overflow row instead of every pair inside it."""
+    import random
+
+    pairs, overflow = _conv_pairs(
+        spark, _boilerplate_rows(random.Random(7)), DedupConfig(band_bucket_cap=3)
     )
-    assert drv is True and dist is False
-    got = _pair_set(dp)
-    assert got and got == _pair_set(xp)
-    assert all(a.encode() < b.encode() for a, b, _ in got)
-
-
-def test_simhash_regimes_expected_pairs(spark, monkeypatch):
-    import random
-
-    (_, dp, _), _ = _regimes(spark, monkeypatch, _single_turn_rows(random.Random(7)))
-    assert {(a, b) for a, b, _ in _pair_set(dp)} == {("s0", "s1"), ("s2", "s3")}
-    (_, dp, _), _ = _regimes(spark, monkeypatch, _non_ascii_rows(random.Random(7)))
-    got = {(a, b) for a, b, _ in _pair_set(dp)}
-    assert got == {("e", "é"), ("z", "ž"), ("Ω", "日本"), ("｡x", "\U0001F600x")}
-
-
-def test_simhash_regimes_empty_input(spark, monkeypatch):
-    (drv, dp, dov), (dist, xp, xov) = _regimes(spark, monkeypatch, [])
-    assert drv is True and dist is False
-    assert dp.collect() == [] and xp.collect() == []
-    assert dov.collect() == [] and xov.collect() == []
-    strip = lambda df: [(f.name, f.dataType) for f in df.schema]  # noqa: E731
-    assert strip(dp) == strip(xp) and strip(dov) == strip(xov)
-
-
-def test_simhash_driver_falls_back_when_a_cap_binds(spark, monkeypatch):
-    """A boilerplate group larger than the cap needs star edges: the driver
-    kernel hands the table to the distributed path, overflow rows and all."""
-    import random
-
-    cfg = DedupConfig(band_bucket_cap=3)
-    (drv, dp, dov), (_, xp, xov) = _regimes(
-        spark, monkeypatch, _boilerplate_rows(random.Random(7)), cfg
-    )
-    assert drv is False
-    assert _pair_set(dp) == _pair_set(xp)
-    assert dov.count() == xov.count() > 0
-
-
-def test_simhash_driver_falls_back_over_pair_budget(spark, monkeypatch):
-    import random
-
-    import dedup.simhash as sm
-
-    rows = _boilerplate_rows(random.Random(7))
-    (_, ref, _), _ = _regimes(spark, monkeypatch, rows)
-    monkeypatch.setattr(sm, "_DRIVER_PAIRS", 10)
-    m = {}
-    got = sm.simhash_conv_pairs(spark.createDataFrame(rows, SH_SCHEMA), metrics_out=m)
-    assert m["simhash_driver"] is False
-    assert _pair_set(got) == _pair_set(ref)
-
-
-def test_simhash_table_above_the_bound_is_not_collected(spark, monkeypatch):
-    import random
-
-    import dedup.lsh as lsh
-    import dedup.simhash as sm
-
-    monkeypatch.setattr(lsh, "_DRIVER_ROWS", -1)  # its buckets are small too
-
-    rows = _single_turn_rows(random.Random(7))
-    sh = spark.createDataFrame(rows, SH_SCHEMA)
-    ref = sm.simhash_conv_pairs(sh)
-
-    def no_collect(self):
-        raise AssertionError("table above the driver bound was collected")
-
-    monkeypatch.setattr(sm, "_DRIVER_TURNS", len(rows) - 1)
-    monkeypatch.setattr(type(sh), "toArrow", no_collect)
-    m = {}
-    got = sm.simhash_conv_pairs(sh, metrics_out=m)
-    assert m["simhash_driver"] is False
-    monkeypatch.undo()
-    assert _pair_set(got) == _pair_set(ref)
+    assert {(r.conv_a, r.conv_b) for r in pairs.collect()} == {("b00", "b00_n")}
+    # the 44 turns that hold the boilerplate fingerprint
+    assert [tuple(r) for r in overflow.collect()] == [("exact_fp", 44)]
