@@ -133,7 +133,7 @@ def test_shared_span_pipeline(spark, turns_df, corpus):
         assert r.span_len >= cfg.min_span_len
 
 
-# --- simhash_conv_pairs on hand-built fingerprint tables ------------------
+# --- driver vs distributed bucket pairing in simhash_conv_pairs ------------
 
 SH_SCHEMA = "conv_id string, turn_idx int, simhash long"
 
@@ -197,27 +197,69 @@ def _conv_pairs(spark, rows, cfg=None):
     )
 
 
+def _regimes(spark, monkeypatch, rows, cfg=None):
+    """(pairs, overflow) of ``simhash_conv_pairs`` with its bucket tables
+    paired on the driver, then with them forced through the distributed
+    path of ``lsh.bucketed_pairs``."""
+    import dedup.lsh as lsh
+
+    driver_runs = []
+    kernel = lsh._driver_bucket_pairs
+
+    def counted(*args):
+        out = kernel(*args)
+        driver_runs.append(out is not None)
+        return out
+
+    monkeypatch.setattr(lsh, "_driver_bucket_pairs", counted)
+    drv = _conv_pairs(spark, rows, cfg)
+    assert driver_runs and all(driver_runs)  # both banded paths paired on the driver
+    monkeypatch.setattr(lsh, "_DRIVER_ROWS", -1)  # no table fits, not even an empty one
+    driver_runs.clear()
+    dist = _conv_pairs(spark, rows, cfg)
+    monkeypatch.undo()
+    assert driver_runs == []
+    return drv, dist
+
+
+def _pair_rows(df):
+    return sorted((r.conv_a, r.conv_b, r.source) for r in df.collect())
+
+
+@pytest.mark.parametrize(
+    "cfg", [None, DedupConfig(band_bucket_cap=3)], ids=["default", "cap3"]
+)
 @pytest.mark.parametrize(
     "make_rows", [_single_turn_rows, _boilerplate_rows, _non_ascii_rows]
 )
-def test_simhash_conv_pairs_expected(spark, make_rows):
+def test_simhash_regimes_identical(spark, monkeypatch, make_rows, cfg):
     import random
 
-    pairs, overflow = _conv_pairs(spark, make_rows(random.Random(7)))
-    got = [(r.conv_a, r.conv_b, r.source) for r in pairs.collect()]
-    assert {(a, b) for a, b, _ in got} == _EXPECTED_PAIRS[make_rows.__name__]
+    (dp, dov), (xp, xov) = _regimes(spark, monkeypatch, make_rows(random.Random(7)), cfg)
+    got = _pair_rows(dp)
+    assert got and got == _pair_rows(xp)
     assert len(got) == len(set(got))  # one row per pair
     # conv_a < conv_b in byte order, the order every tier emits
     assert all(a.encode() < b.encode() and s == "simhash" for a, b, s in got)
-    assert overflow.collect() == []
+    assert sorted(dov.collect()) == sorted(xov.collect())
 
 
-def test_simhash_conv_pairs_empty_input(spark):
-    pairs, overflow = _conv_pairs(spark, [])
-    assert pairs.collect() == [] and overflow.collect() == []
+def test_simhash_regimes_expected_pairs(spark, monkeypatch):
+    import random
+
+    for make_rows, want in _EXPECTED_PAIRS.items():
+        rows = globals()[make_rows](random.Random(7))
+        for pairs, overflow in _regimes(spark, monkeypatch, rows):
+            assert {(a, b) for a, b, _ in _pair_rows(pairs)} == want, make_rows
+            assert overflow.collect() == []
+
+
+def test_simhash_regimes_empty_input(spark, monkeypatch):
     strip = lambda df: [(f.name, f.dataType.simpleString()) for f in df.schema]  # noqa: E731
-    assert strip(pairs) == [("conv_a", "string"), ("conv_b", "string"), ("source", "string")]
-    assert strip(overflow) == [("path", "string"), ("bucket_n", "bigint")]
+    for pairs, overflow in _regimes(spark, monkeypatch, []):
+        assert pairs.collect() == [] and overflow.collect() == []
+        assert strip(pairs) == [("conv_a", "string"), ("conv_b", "string"), ("source", "string")]
+        assert strip(overflow) == [("path", "string"), ("bucket_n", "bigint")]
 
 
 def test_simhash_capped_bucket_overflows(spark):
