@@ -532,7 +532,7 @@ def _span_pairs_oracle() -> str:
     octets via the hex encoding — substr(hex, 2i-1, 300) is the i-th
     150-byte window — byte-exact for non-ASCII text (no char=byte fixture
     assumption). Scope constraints mirrored from the Spark side:
-    - span_doc_cap: doc_anchors truncates each normalized doc to 1M CHARS
+    - span_doc_cap: suffix.doc_anchor_hashes truncates each normalized doc to 1M CHARS
       (py_normalize(doc)[:cap] — a Python char slice, before encoding);
       the substr(nd, 1, 1000000) below is DuckDB's char-based substr, the
       same slice, so a shared span past the cap diverges in NEITHER

@@ -114,8 +114,11 @@ def assemble_conversations(
     # Defensive: TURN_SEP must not occur in text or the doc round-trip breaks.
     clean_text = F.coalesce(F.replace(F.col("text"), F.lit(TURN_SEP), F.lit(" ")), F.lit(""))
 
+    # tz-naive input (TIMESTAMP_NTZ, e.g. pandas datetime64) becomes a
+    # session-zone timestamp: the keep policies order by unix_micros
+    ts = F.col("ts").cast("timestamp").alias("ts")
     conv = (
-        turns.select("conv_id", "turn_idx", "ts", clean_text.alias("text"))
+        turns.select("conv_id", "turn_idx", ts, clean_text.alias("text"))
         .groupBy("conv_id")
         .agg(
             F.count("*").cast("int").alias("n_turns"),

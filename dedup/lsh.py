@@ -14,7 +14,9 @@ the reference does — with no shuffle at all.
 Larger tables, tables with nulls or with columns that are neither strings
 nor integers, and tables whose pairs would exceed ``_DRIVER_PAIRS`` take
 the distributed path: a bucket-stats aggregation, a membership join and a
-bounded ``collect_list`` per bucket.
+bounded ``collect_list`` per bucket. The two regimes are also callable on
+their own (``driver_bucket_pairs``, ``distributed_bucket_pairs``): the span
+tier's driver placement hands its anchor arrays straight to the first.
 
 Skew strategy (north rule: explicit handling, no silent caps):
 - AQE skew-join is on session-wide (session.py) so runtime mega-partitions
@@ -124,38 +126,68 @@ def bucketed_pairs(
     with a ≤ b in member-struct order (first member column ascending).
     """
     _check_cap(cap)  # before any job runs
-    m = F.struct(*[F.col(c) for c in member_cols])
-    keyed = rows.select(*bucket_cols, m.alias("m"))
     out = None
     if rows.count() <= _DRIVER_ROWS:
-        out = _driver_bucket_pairs(
+        out = driver_bucket_pairs(
+            rows.sparkSession,
             rows.select(*bucket_cols, *member_cols).toArrow(),
-            bucket_cols, member_cols, cap,
+            rows.schema,
+            bucket_cols,
+            member_cols,
+            cap,
         )
-    if out is not None:
-        spark = rows.sparkSession
-        member_t = keyed.schema["m"].dataType
-        pairs = spark.createDataFrame(out[0], T.StructType(
-            [T.StructField("a", member_t), T.StructField("b", member_t)]
-        ))
-        overflow = spark.createDataFrame(out[1], T.StructType(
-            [keyed.schema[c] for c in bucket_cols]
-            + [T.StructField("bucket_n", T.LongType(), False)]
-        ))
-    else:
-        stats = (
-            keyed.groupBy(*bucket_cols)
-            .agg(
-                F.count(F.lit(1)).alias("s"),
-                F.min("m").alias("m0"),
-                F.max("m").alias("m1"),
-            )
-            .where(F.col("s") > 1)  # singleton buckets can't pair (≈ F3)
-        ).localCheckpoint()
-        pairs, overflow = route_bucket_pairs(keyed, stats, bucket_cols, cap)
     if metrics_out is not None:
         metrics_out[driver_key] = out is not None
+    if out is None:
+        out = distributed_bucket_pairs(rows, bucket_cols, member_cols, cap)
+    return out
+
+
+def driver_bucket_pairs(
+    spark,
+    table: pa.Table,
+    schema: T.StructType,
+    bucket_cols: list[str],
+    member_cols: list[str],
+    cap: int,
+) -> tuple[DataFrame, DataFrame] | None:
+    """``bucketed_pairs``' driver regime over an already-collected Arrow
+    ``table`` whose Spark columns are ``schema``: the (pairs, overflow)
+    frames, or ``None`` when the table must go distributed (nulls, a column
+    without order-preserving codes, or more than ``_DRIVER_PAIRS`` pairs)."""
+    _check_cap(cap)
+    out = _driver_bucket_pairs(table, bucket_cols, member_cols, cap)
+    if out is None:
+        return None
+    member_t = T.StructType([schema[c] for c in member_cols])
+    pairs = spark.createDataFrame(out[0], T.StructType(
+        [T.StructField("a", member_t), T.StructField("b", member_t)]
+    ))
+    overflow = spark.createDataFrame(out[1], T.StructType(
+        [schema[c] for c in bucket_cols]
+        + [T.StructField("bucket_n", T.LongType(), False)]
+    ))
     return pairs, overflow
+
+
+def distributed_bucket_pairs(
+    rows: DataFrame, bucket_cols: list[str], member_cols: list[str], cap: int
+) -> tuple[DataFrame, DataFrame]:
+    """``bucketed_pairs``' distributed regime: the bucket-stats aggregation
+    (checkpointed) and ``route_bucket_pairs``."""
+    _check_cap(cap)
+    m = F.struct(*[F.col(c) for c in member_cols])
+    keyed = rows.select(*bucket_cols, m.alias("m"))
+    stats = (
+        keyed.groupBy(*bucket_cols)
+        .agg(
+            F.count(F.lit(1)).alias("s"),
+            F.min("m").alias("m0"),
+            F.max("m").alias("m1"),
+        )
+        .where(F.col("s") > 1)  # singleton buckets can't pair (≈ F3)
+    ).localCheckpoint()
+    return route_bucket_pairs(keyed, stats, bucket_cols, cap)
 
 
 def _order_codes(col: pa.ChunkedArray) -> np.ndarray | None:

@@ -7,7 +7,9 @@ MinHash signature has the same one-sided property (identical docs ⇒ identical
 signatures at ANY seed/config) while also catching near-duplicates, which is
 what the north rule requires.
 
-All compute is a single Arrow-batched pandas UDF (no per-row Python):
+All compute is one numpy batch kernel, ``doc_signatures`` (no per-row
+Python), run in an Arrow-batched pandas UDF or, for a small input, on the
+driver (``signatures``):
 - shingling = numpy sliding-window polynomial rolling hash over UTF-8 bytes
   of the normalized doc, finalized with a 64-bit mixer (N2);
 - signature position i = min over shingles x of mix64(x XOR salt_i), where
@@ -28,6 +30,7 @@ from functools import lru_cache
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -95,6 +98,8 @@ def _pow_series(base: np.uint64, n: int) -> np.ndarray:
     """First ``n`` powers of ``base`` mod 2^64 (cached up to ``_POW_CACHE_MAX``)."""
     if n > _POW_CACHE_MAX:
         return _pow_fill(base, n)
+    # unlocked on purpose: the pipeline's driver threads may both fill the
+    # entry, and either array holds the same powers
     arr = _POW_CACHE.get(int(base))
     if arr is None or arr.size < n:
         _POW_CACHE[int(base)] = arr = _pow_fill(base, min(max(n, 1 << 20), _POW_CACHE_MAX))
@@ -281,17 +286,15 @@ def minhash_signature(shingles_u64: np.ndarray, num_perm: int, seed: int) -> np.
 NORM_PATTERN = "[\\s\\x1c-\\x1f]+"
 
 
-def make_minhash_udf(cfg: DedupConfig):
-    k, num_perm, seed = cfg.shingle_k, cfg.num_perm, cfg.seed
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def minhash_udf(docs: pd.Series) -> pd.Series:
-        # normalized here, not in the JVM: Java's \s and lower() disagree
-        # with py_normalize on Unicode whitespace (U+00A0, U+2003, U+3000)
-        sigs = batch_minhash(batch_ws_normalize_bytes(list(docs)), k, num_perm, seed)
-        return pd.Series(list(sigs))
-
-    return minhash_udf
+def doc_signatures(docs: list[str], cfg: DedupConfig) -> np.ndarray:
+    """(len(docs) × num_perm) int32 signatures of ``py_normalize(doc)`` —
+    the one signature kernel, run by the pandas UDF and by the pipeline's
+    driver placement alike. Normalized here, not in the JVM: Java's \\s
+    and lower() disagree with py_normalize on Unicode whitespace (U+00A0,
+    U+2003, U+3000)."""
+    return batch_minhash(
+        batch_ws_normalize_bytes(docs), cfg.shingle_k, cfg.num_perm, cfg.seed
+    )
 
 
 def with_minhash(
@@ -312,12 +315,41 @@ def with_minhash(
     from dedup.util import spread_for_udf
 
     cfg = cfg or DedupConfig()
-    udf = make_minhash_udf(cfg)
+
+    @F.pandas_udf(T.ArrayType(T.IntegerType()))
+    def minhash_udf(docs: pd.Series) -> pd.Series:
+        return pd.Series(list(doc_signatures(list(docs), cfg)))
+
     if repartition:
         conversations = spread_for_udf(
             conversations, materialized=repartition == "auto"
         )
-    return conversations.withColumn("minhash", udf(F.col("doc")))
+    return conversations.withColumn("minhash", minhash_udf(F.col("doc")))
+
+
+def signatures(
+    conversations: DataFrame, cfg: DedupConfig | None = None, docs: pa.Table | None = None
+) -> DataFrame:
+    """(conv_id, minhash) for every conversation, in one of two placements.
+
+    With ``docs`` — the conversations' ``(conv_id, doc)`` already collected
+    as Arrow — ``doc_signatures`` runs on the driver and the table comes
+    back through ``createDataFrame``: no Python worker starts. Without it
+    the same kernel runs in the pandas UDF (``with_minhash``) over the
+    materialized ``conversations``. The caller picks the placement by size.
+    """
+    cfg = cfg or DedupConfig()
+    if docs is None:
+        return with_minhash(conversations, cfg, repartition="auto").select("conv_id", "minhash")
+    sig = doc_signatures(docs.column("doc").to_pylist(), cfg)
+    minhash = pa.ListArray.from_arrays(
+        pa.array(np.arange(0, sig.size + 1, cfg.num_perm, dtype=np.int32)),
+        pa.array(sig.reshape(-1)),
+    )
+    return conversations.sparkSession.createDataFrame(
+        pa.table({"conv_id": docs.column("conv_id"), "minhash": minhash}),
+        "conv_id string, minhash array<int>",
+    )
 
 
 # ---------------------------------------------------------------------------

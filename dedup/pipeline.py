@@ -13,6 +13,14 @@ The candidate tiers are exact, MinHash/LSH and span. The SimHash tier
 tier: with its candidates verified like LSH ones it added no edge on any
 measured corpus, so a pass no longer pays for its UDF and pairing jobs.
 
+The three Python kernels (MinHash signatures, span anchors, span LCS) have
+two placements, picked once per run by the conversations stage's doc bytes
+(observed on its own action): up to ``_DRIVER_DOC_BYTES`` the stage's
+``(conv_id, doc)`` is collected as Arrow once and every kernel runs on the
+driver, so a small pass starts no Python worker; above it they run in
+pandas UDFs. The same rule as the ``cc`` and ``lsh`` driver regimes: one
+kernel, two placements, picked by size.
+
 Metrics are first-class (north rule): every stage logs its row count,
 observed on the stage's own write or checkpoint; the LSH and anchor
 overflow paths log how many mega-buckets were demoted to star edges — no
@@ -36,12 +44,24 @@ from dedup.config import DedupConfig
 from dedup.exact import exact_pairs
 from dedup.keep import select_representatives
 from dedup.lsh import candidate_pairs
-from dedup.minhash import with_minhash
+from dedup.minhash import signatures
 from dedup.suffix import span_candidate_pairs, verify_span_pairs
 from dedup.verify import verify_pairs
 
 #: every edge ``source`` a tier emits; ``metrics["edges_by_source"]`` counts each
 _SOURCES = ("exact", "lsh", "span")
+
+#: largest conversations stage (UTF-8 bytes of ``doc``, summed) whose
+#: signature, anchor and LCS kernels run on the driver; a larger one runs
+#: them in pandas UDFs. Measured on a 4-core host, local[4], synth_spark
+#: corpora, signatures + span candidates, driver vs UDF placement: warm
+#: session 0.94-1.19 s vs 1.59-1.88 s at 2.2 MB, 2.07-2.39 vs 2.08-2.20 at
+#: 5.3 MB, 3.66-3.95 vs 2.33-2.51 at 10.5 MB; a session's first pass
+#: (the UDF side pays the Python worker start) 2.3-2.5 vs 5.2-6.0 at
+#: 2.2 MB, 3.7-3.8 vs 5.6-6.2 at 5.3 MB, 5.2-5.6 vs 6.8-7.2 at 10.5 MB,
+#: 7.7-9.3 vs 7.5-8.5 at 20.9 MB. The bound sits at the warm crossover, so
+#: the driver placement is never the slower one.
+_DRIVER_DOC_BYTES = 5_000_000
 
 
 @dataclass
@@ -77,14 +97,14 @@ class DedupPipeline:
         log=None,
     ):
         """The independent fingerprint tiers are built in parallel driver
-        threads: the signature UDF + LSH pairing and the span anchor UDF
-        share no inputs beyond the conversations stage, so their eager jobs
-        are submitted to the Spark scheduler concurrently. Serial submission
-        would leave most task slots idle during every narrow stage (stats
-        aggregations, checkpoints, Arrow batch boundaries) — idle slots cost
-        nothing on a small cluster but scale linearly with cluster width. Stage walls
-        still sum to the run wall; attribution follows stage completion
-        order."""
+        threads: the signatures + LSH pairing and the span anchors share no
+        inputs beyond the conversations stage, so their eager jobs (and,
+        under the driver placement, their numpy kernels) run concurrently.
+        Serial submission would leave most task slots idle during every
+        narrow stage (stats aggregations, checkpoints, Arrow batch
+        boundaries) — idle slots cost nothing on a small cluster but scale
+        linearly with cluster width. Stage walls still sum to the run wall;
+        attribution follows stage completion order."""
         self.spark = spark
         self.cfg = cfg or DedupConfig()
         self.run_dir = run_dir
@@ -103,7 +123,7 @@ class DedupPipeline:
         p = self._path(stage)
         return bool(p) and os.path.exists(os.path.join(p, "_SUCCESS"))
 
-    def _materialize(self, stage: str, df: DataFrame) -> DataFrame:
+    def _materialize(self, stage: str, df: DataFrame | None, aggs=()) -> DataFrame:
         """Write-then-read a stage (checkpoint) or localCheckpoint in-memory.
 
         The write is the lineage cut AND the resume point; reading back means
@@ -115,28 +135,32 @@ class DedupPipeline:
         while the stage's DataFrame is constructed (tier stats/UDF-table
         localCheckpoints) is attributed to the stage that triggered it and
         per-stage walls sum to the run wall.
+
+        ``aggs``: extra named aggregate columns observed with the row count
+        (one ``agg`` job on resume); their values join the lineage row.
         """
         t0 = getattr(self, "_section_t0", None) or time.monotonic()
         p = self._path(stage)
+        exprs = (F.count(F.lit(1)).alias("rows"), *aggs)
         if self._done(stage):
             out = self.spark.read.parquet(p)
-            n = out.count()
-            self._record(stage, n, time.monotonic() - t0, resumed=True)
+            seen = out.agg(*exprs).first().asDict()
+            self._record(stage, seen.pop("rows"), time.monotonic() - t0, True, **seen)
             return out
         # the row count rides the stage's own action (write or checkpoint)
         # instead of a count() job over the result
         obs = Observation()
-        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        df = df.observe(obs, *exprs)
         if p:
             df.write.mode("overwrite").parquet(p)
             out = self.spark.read.parquet(p)
         else:
             out = df.localCheckpoint()
-        n = obs.get["rows"]
-        self._record(stage, n, time.monotonic() - t0, resumed=False)
+        seen = dict(obs.get)
+        self._record(stage, seen.pop("rows"), time.monotonic() - t0, False, **seen)
         return out
 
-    def _record(self, stage: str, rows: int, seconds: float, resumed: bool):
+    def _record(self, stage: str, rows: int, seconds: float, resumed: bool, **observed):
         from dedup.util import shuffle_delta, shuffle_totals
 
         self._section_t0 = time.monotonic()  # next stage's section starts now
@@ -146,6 +170,7 @@ class DedupPipeline:
             "seconds": round(seconds, 3),
             "resumed": resumed,
             "n_partitions": self.spark.conf.get("spark.sql.shuffle.partitions"),
+            **observed,
         }
         # Per-SECTION shuffle/IO byte deltas from the app status store
         # (VERDICT r04 #2: bytes are host-noise-immune where walls are not).
@@ -185,7 +210,8 @@ class DedupPipeline:
             conv_df, rej_obs = assemble_conversations(turns, cfg, observe_rejects=True)
         else:
             conv_df = assemble_conversations(turns, cfg)
-        conv = self._materialize("conversations", conv_df)
+        doc_bytes = F.coalesce(F.sum(F.octet_length("doc")), F.lit(0)).alias("doc_bytes")
+        conv = self._materialize("conversations", conv_df, [doc_bytes])
         if rej_obs is not None:
             # an empty input can be optimized down to an empty relation that
             # never reports the observation, so reading it would fail: count
@@ -198,24 +224,35 @@ class DedupPipeline:
                 )
             self.log(f"ingest rejects: {metrics['ingest_rejects']}")
 
-        # Tier construction: the signature UDF (+LSH pairing) and the span
-        # anchor UDF are independent given the conversations stage. Their
+        # Tier construction: the signatures (+LSH pairing) and the span
+        # anchors are independent given the conversations stage. Their
         # EAGER jobs (stage writes, stats/UDF-table checkpoints) are
         # submitted from parallel driver threads so the Spark scheduler
         # backfills idle task slots — the narrow phases of one tier overlap
         # the wide phases of another.
         # Resume guards unchanged: a tier's kernels are never even
         # constructed when the stage consuming them is already on disk.
+        sigs_done = self._done("signatures")
         pairs_done = self._done("pairs")
         edges_done = self._done("edges")
         span_needed = self.enable_span and not edges_done
         overflow_dfs: dict[str, DataFrame] = {}
         tier: dict[str, DataFrame] = {}
 
+        # Kernel placement, picked once from the observed doc bytes: a
+        # small conversations stage is collected as Arrow and the
+        # signature, anchor and LCS kernels run on the driver, so the pass
+        # starts no Python worker; a larger one runs them in pandas UDFs.
+        # The docs are collected only when a stage that reads them runs.
+        metrics["doc_bytes"] = self._lineage[-1]["doc_bytes"]
+        docs = None
+        if (not sigs_done or span_needed) and metrics["doc_bytes"] <= _DRIVER_DOC_BYTES:
+            docs = conv.select("conv_id", "doc").toArrow()
+        metrics["kernels_driver"] = docs is not None
+
         def t_signatures():
             sigs = self._materialize(
-                "signatures",
-                with_minhash(conv, cfg, repartition="auto").select("conv_id", "minhash"),
+                "signatures", None if sigs_done else signatures(conv, cfg, docs)
             )
             tier["sigs"] = sigs
             if not pairs_done:
@@ -233,7 +270,7 @@ class DedupPipeline:
             # later, anti-joined against the already-accepted edge set, so
             # building candidates early costs nothing extra
             span_cand, span_overflow = span_candidate_pairs(
-                conv, cfg, input_materialized=True, metrics_out=metrics
+                conv, cfg, input_materialized=True, metrics_out=metrics, docs=docs
             )
             tier["span_cand"] = span_cand
             overflow_dfs["span_overflow_anchors"] = span_overflow
@@ -268,7 +305,7 @@ class DedupPipeline:
                 cheap_edges.select("conv_a", "conv_b"), ["conv_a", "conv_b"], "left_anti"
             )
             span_edges = (
-                verify_span_pairs(new_cand, conv, cfg)
+                verify_span_pairs(new_cand, conv, cfg, docs=docs)
                 .drop("span_len")
                 .withColumn("similarity", F.lit(None).cast("double"))
                 .select("conv_a", "conv_b", "source", "similarity")

@@ -7,15 +7,15 @@ rule (BASELINE.json).
 
 Two stages, mirroring the engine's universal block→fingerprint→verify spine:
 
-1. **Anchor blocking** (distributed, cheap): every doc emits the rolling
-   hashes of its ``anchor_w``-char windows whose hash ≡ 0 (mod
+1. **Anchor blocking** (cheap): every doc emits the rolling
+   hashes of its ``_ANCHOR_W``-char windows whose hash ≡ 0 (mod
    ``span_anchor_mod``) — content-defined sampling (winnowing-style), so two
    docs sharing a span of length L share ≈ L/span_anchor_mod anchors
    REGARDLESS of alignment. A self-join on anchor hash + a minimum
    shared-anchor count yields candidate pairs. Hot anchors (boilerplate)
    are capped like LSH mega-bands — star edges + overflow metric.
 
-2. **Pair verification** (Arrow-batched pandas UDF): exact longest-common-
+2. **Pair verification**: exact longest-common-
    substring length via binary search over span length L — for each probe L,
    intersect the sets of rolling L-window hashes of both docs (O(n) per probe;
    numpy-vectorized). Pairs with LCS ≥ ``min_span_len`` become span edges.
@@ -24,12 +24,19 @@ Both stages hash windows with ``minhash``'s invertible-base prefix-sum
 rolling hash (``_roll_prefix`` / ``_roll_windows``): the prefix arrays are
 built once per doc, and each window length is then one O(n) pass — no
 per-window loop.
+
+Each stage has one numpy kernel (``doc_anchor_hashes``, ``span_lengths``)
+and two placements: a pandas UDF, or — when the caller passes the
+conversations' docs already collected as Arrow (``docs=``, picked by the
+pipeline for a small input) — the driver, where no Python worker starts.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -73,6 +80,42 @@ def longest_common_substring_len(a: str, b: str, lo: int = 1) -> int:
     return best
 
 
+#: anchor window width (chars of the normalized doc)
+_ANCHOR_W = 64
+#: Spark columns of the anchor table both placements pair
+_ANCHOR_SCHEMA = T.StructType(
+    [T.StructField("anchor_hash", T.LongType()), T.StructField("conv_id", T.StringType())]
+)
+
+
+def doc_anchor_hashes(docs: list[str], cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
+    """(doc index, anchor hash) int64 arrays: the distinct anchors of every
+    doc, sorted by doc then hash — the one anchor kernel, run by the pandas
+    UDF and by the pipeline's driver placement alike.
+
+    ONE vectorized pass for the whole batch (was a per-doc loop of ~10
+    small numpy calls — fixed overhead dominated at ~2 KB/doc).
+    ``batch_window_hashes`` window values are position-independent, so a
+    window's anchor hash does not depend on where it sits. The normalize
+    pass is vectorized too (regex-parity pinned by test).
+    """
+    w, mod = _ANCHOR_W, cfg.span_anchor_mod
+    normed = batch_ws_normalize_bytes(docs, cfg.span_doc_cap)
+    n = len(normed)
+    H, _starts, counts = batch_window_hashes(normed, w)
+    lens = np.fromiter((len(b) for b in normed), dtype=np.int64, count=n)
+    doc_idx = np.repeat(np.arange(n, dtype=np.int64), counts)
+    # docs shorter than the window emit no anchors (their single
+    # whole-text hash from batch_window_hashes must not leak through)
+    m = np.repeat(lens >= w, counts) & (H % np.uint64(mod) == 0)
+    d_sel, h_sel = doc_idx[m], H[m].astype(np.int64)
+    order = np.lexsort((h_sel, d_sel))
+    d_s, h_s = d_sel[order], h_sel[order]
+    keep = np.ones(d_s.size, dtype=bool)
+    keep[1:] = (d_s[1:] != d_s[:-1]) | (h_s[1:] != h_s[:-1])
+    return d_s[keep], h_s[keep]
+
+
 def doc_anchors(
     conversations: DataFrame,
     cfg: DedupConfig | None = None,
@@ -80,42 +123,22 @@ def doc_anchors(
 ) -> DataFrame:
     """(conv_id, doc) → (conv_id, anchor_hash), one row per distinct anchor.
 
-    Anchors are ``anchor_w``-char windows with mixed hash ≡ 0 mod
-    span_anchor_mod, computed in a pandas UDF over the normalized doc.
+    Anchors are ``_ANCHOR_W``-char windows with mixed hash ≡ 0 mod
+    span_anchor_mod, computed by ``doc_anchor_hashes`` in a pandas UDF
+    over the normalized doc.
     """
     from dedup.util import spread_for_udf
 
     cfg = cfg or DedupConfig()
-    w, mod, cap = 64, cfg.span_anchor_mod, cfg.span_doc_cap
     # spread rows for the UDF; a checkpointed input that is already wide
     # skips the full-doc-text shuffle (see util.spread_for_udf)
     conversations = spread_for_udf(conversations, materialized=input_materialized)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def anchors_udf(docs: pd.Series) -> pd.Series:
-        # ONE vectorized pass for the whole batch (was a per-doc loop of
-        # ~10 small numpy calls — fixed overhead dominated at ~2 KB/doc).
-        # batch_window_hashes window values are position-independent, so
-        # a window's anchor hash does not depend on where it sits. The
-        # normalize pass is vectorized too (regex-parity pinned by test).
-        normed = batch_ws_normalize_bytes(list(docs), cap)
-        n = len(normed)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        H, _starts, counts = batch_window_hashes(normed, w)
-        lens = np.fromiter((len(b) for b in normed), dtype=np.int64, count=n)
-        doc_idx = np.repeat(np.arange(n, dtype=np.int64), counts)
-        # docs shorter than the window emit no anchors (their single
-        # whole-text hash from batch_window_hashes must not leak through)
-        m = np.repeat(lens >= w, counts) & (H % np.uint64(mod) == 0)
-        d_sel, h_sel = doc_idx[m], H[m].astype(np.int64)
-        order = np.lexsort((h_sel, d_sel))
-        d_s, h_s = d_sel[order], h_sel[order]
-        keep = np.ones(d_s.size, dtype=bool)
-        keep[1:] = (d_s[1:] != d_s[:-1]) | (h_s[1:] != h_s[:-1])
-        d_s, h_s = d_s[keep], h_s[keep]
-        bounds = np.searchsorted(d_s, np.arange(n + 1))
-        return pd.Series([h_s[bounds[i] : bounds[i + 1]] for i in range(n)])
+        d, h = doc_anchor_hashes(list(docs), cfg)
+        bounds = np.searchsorted(d, np.arange(len(docs) + 1))
+        return pd.Series([h[bounds[i] : bounds[i + 1]] for i in range(len(docs))], dtype=object)
 
     return conversations.select(
         "conv_id", F.explode(anchors_udf(F.col("doc"))).alias("anchor_hash")
@@ -127,6 +150,7 @@ def span_candidate_pairs(
     cfg: DedupConfig | None = None,
     input_materialized: bool = False,
     metrics_out: dict | None = None,
+    docs: pa.Table | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Anchor-join candidates: pairs sharing ≥ min_span_len/(4·mod) anchors.
 
@@ -134,33 +158,44 @@ def span_candidate_pairs(
     pair table small: a true L-span shares ≈ L/mod anchors, so the threshold
     is conservative by 4× (alignment/normalization slack).
 
-    The anchor table is ALWAYS checkpointed: both ``bucketed_pairs``
-    regimes read the anchor rows twice (row count + Arrow collect on the
-    driver; bucket stats + the s>2 membership join distributed), and
-    without a cut the anchor pandas UDF — the expensive part of this
-    tier — runs once per read (measured 58 s uncut vs 14.5 s checkpointed
-    at sf0.1 local[32]).
+    Two placements of ``doc_anchor_hashes``, picked by the caller:
+
+    - ``docs`` given (the conversations' ``(conv_id, doc)`` collected as
+      Arrow): the kernel runs on the driver and its arrays go straight to
+      ``lsh.driver_bucket_pairs`` — no anchor DataFrame, no Python worker.
+      Over ``lsh._DRIVER_PAIRS`` the distributed pairing runs over an
+      anchor frame built from the same arrays.
+    - otherwise the kernel runs in the anchor pandas UDF, and the anchor
+      table is ALWAYS checkpointed: both ``bucketed_pairs`` regimes read
+      the anchor rows twice (row count + Arrow collect on the driver;
+      bucket stats + the s>2 membership join distributed), and without a
+      cut the UDF — the expensive part of this tier — runs once per read
+      (measured 58 s uncut vs 14.5 s checkpointed at sf0.1 local[32]).
 
     ``metrics_out``: optional dict filled with ``span_driver`` (which
-    ``bucketed_pairs`` regime ran).
+    bucket-pairing regime ran).
     """
-    from dedup.lsh import bucketed_pairs
+    from dedup.lsh import bucketed_pairs, distributed_bucket_pairs, driver_bucket_pairs
 
     cfg = cfg or DedupConfig()
     min_shared = max(2, cfg.min_span_len // (4 * cfg.span_anchor_mod))
-    anchors = doc_anchors(conversations, cfg, input_materialized).localCheckpoint()
-
-    # bucket pairing (see lsh.bucketed_pairs); hot anchors (boilerplate)
-    # emit star edges + overflow rows instead of O(n²) pairs — a star edge
-    # counts toward shared_anchors like any other co-occurrence
-    raw, overflow = bucketed_pairs(
-        anchors,
-        ["anchor_hash"],
-        ["conv_id"],
-        cfg.band_bucket_cap,
-        metrics_out,
-        "span_driver",
-    )
+    # hot anchors (boilerplate) emit star edges + overflow rows instead of
+    # O(n²) pairs — a star edge counts toward shared_anchors like any
+    # other co-occurrence
+    args = (["anchor_hash"], ["conv_id"], cfg.band_bucket_cap)
+    if docs is None:
+        anchors = doc_anchors(conversations, cfg, input_materialized).localCheckpoint()
+        raw, overflow = bucketed_pairs(anchors, *args, metrics_out, "span_driver")
+    else:
+        spark = conversations.sparkSession
+        d, h = doc_anchor_hashes(docs.column("doc").to_pylist(), cfg)
+        table = pa.table({"anchor_hash": h, "conv_id": docs.column("conv_id").take(d)})
+        out = driver_bucket_pairs(spark, table, _ANCHOR_SCHEMA, *args)
+        if metrics_out is not None:
+            metrics_out["span_driver"] = out is not None
+        if out is None:
+            out = distributed_bucket_pairs(spark.createDataFrame(table, _ANCHOR_SCHEMA), *args)
+        raw, overflow = out
     pairs = (
         raw.select(
             F.col("a.conv_id").alias("conv_a"), F.col("b.conv_id").alias("conv_b")
@@ -173,29 +208,58 @@ def span_candidate_pairs(
     return pairs, overflow
 
 
+def span_lengths(docs_a: list[str], docs_b: list[str], cfg: DedupConfig) -> np.ndarray:
+    """int32 longest-common-substring length of each (docs_a[i], docs_b[i])
+    pair after normalization, 0 when it is under ``min_span_len`` — the one
+    LCS kernel, run by the pandas UDF and by the driver placement alike.
+    The binary search starts at ``min_span_len``, so a pair below it costs
+    one probe."""
+    na_l = batch_ws_normalize_bytes(docs_a, cfg.span_doc_cap)
+    nb_l = batch_ws_normalize_bytes(docs_b, cfg.span_doc_cap)
+    out = np.zeros(len(na_l), dtype=np.int32)
+    for i, (na, nb) in enumerate(zip(na_l, nb_l)):
+        out[i] = longest_common_substring_len(na, nb, lo=cfg.min_span_len)
+    return out
+
+
 def verify_span_pairs(
     pairs: DataFrame,
     conversations: DataFrame,
     cfg: DedupConfig | None = None,
+    docs: pa.Table | None = None,
 ) -> DataFrame:
     """Exact LCS verification of span candidates; keeps pairs with a common
     substring ≥ min_span_len chars. Returns (conv_a, conv_b, source,
-    span_len)."""
+    span_len).
+
+    With ``docs`` (the conversations' ``(conv_id, doc)`` as Arrow) only
+    the candidate pairs are collected and ``span_lengths`` runs on the
+    driver; otherwise it runs in a pandas UDF over ``join_pair_docs``."""
     cfg = cfg or DedupConfig()
-    joined = join_pair_docs(pairs, conversations)
-    cap, min_len = cfg.span_doc_cap, cfg.min_span_len
+    min_len = cfg.min_span_len
+    if docs is not None:
+        cand = pairs.select("conv_a", "conv_b", "source").toArrow()
+        ids, text = docs.column("conv_id").combine_chunks(), docs.column("doc")
+
+        def side(col):
+            return text.take(pc.index_in(cand.column(col), value_set=ids)).to_pylist()
+
+        span = span_lengths(side("conv_a"), side("conv_b"), cfg)
+        keep = span >= min_len
+        out = cand.filter(pa.array(keep)).append_column(
+            "span_len", pa.array(span[keep], pa.int32())
+        )
+        return pairs.sparkSession.createDataFrame(
+            out, "conv_a string, conv_b string, source string, span_len int"
+        )
 
     @F.pandas_udf(T.IntegerType())
     def lcs_udf(doc_a: pd.Series, doc_b: pd.Series) -> pd.Series:
-        na_l = batch_ws_normalize_bytes(list(doc_a), cap)
-        nb_l = batch_ws_normalize_bytes(list(doc_b), cap)
-        out = np.zeros(len(doc_a), dtype=np.int32)
-        for i, (na, nb) in enumerate(zip(na_l, nb_l)):
-            out[i] = longest_common_substring_len(na, nb)
-        return pd.Series(out)
+        return pd.Series(span_lengths(list(doc_a), list(doc_b), cfg))
 
     return (
-        joined.withColumn("span_len", lcs_udf("doc_a", "doc_b"))
+        join_pair_docs(pairs, conversations)
+        .withColumn("span_len", lcs_udf("doc_a", "doc_b"))
         .where(F.col("span_len") >= F.lit(min_len))
         .select("conv_a", "conv_b", "source", "span_len")
     )

@@ -34,3 +34,17 @@ def turns_df(spark, corpus):
     df = df.cache()
     df.count()
     return df
+
+
+@pytest.fixture
+def freed_scratch(spark):
+    """Unpersist the checkpoints a test's own pipeline runs leave pinned.
+
+    Left alone, the JVM's context cleaner frees them whenever their Python
+    handles are collected, which can fall inside a later test that compares
+    persistent-RDD sets."""
+    from dedup.util import persistent_rdd_ids, unpersist_ids
+
+    before = persistent_rdd_ids(spark)
+    yield
+    unpersist_ids(spark, persistent_rdd_ids(spark) - before, blocking=True)

@@ -43,6 +43,37 @@ def test_pipeline_finds_all_planted_kinds(pipeline_run, corpus):
         assert lab.get(a) is None or lab.get(a) != lab.get(b)
 
 
+def test_udf_placement_gives_the_same_clusters(
+    spark, turns_df, pipeline_run, monkeypatch, freed_scratch
+):
+    """The test corpus is under the driver-placement bound; forced over it,
+    the pass runs the kernels in pandas UDFs and finds the same clusters
+    and edges, and the metrics say which placement ran."""
+    import dedup.pipeline
+
+    assert pipeline_run.metrics["kernels_driver"] is True
+    assert 0 < pipeline_run.metrics["doc_bytes"] <= dedup.pipeline._DRIVER_DOC_BYTES
+    monkeypatch.setattr(dedup.pipeline, "_DRIVER_DOC_BYTES", -1)
+    res = DedupPipeline(spark, DedupConfig()).run(turns_df)
+    assert res.metrics["kernels_driver"] is False
+    assert res.metrics["doc_bytes"] == pipeline_run.metrics["doc_bytes"]
+    assert res.metrics["edges_by_source"] == pipeline_run.metrics["edges_by_source"]
+    assert _cluster_map(res) == _cluster_map(pipeline_run)
+
+
+def test_tz_naive_timestamps_run(spark, freed_scratch):
+    """A TIMESTAMP_NTZ ``ts`` column (pandas datetime64, tz-naive parquet)
+    runs through the keep policy: assembly casts it to the session zone."""
+    from pyspark.sql import functions as F
+
+    from dedup.synth import corpus_to_spark, make_corpus
+
+    turns = corpus_to_spark(spark, make_corpus(20, 7))
+    naive = turns.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+    got = _cluster_map(DedupPipeline(spark, DedupConfig()).run(naive))
+    assert got and got == _cluster_map(DedupPipeline(spark, DedupConfig()).run(turns))
+
+
 def test_keep_policy_oldest(pipeline_run, corpus):
     """Representative = oldest first_ts (planted originals predate copies)."""
     m = _cluster_map(pipeline_run)
@@ -249,7 +280,7 @@ def test_caps_audit_in_metrics(spark, turns_df, tmp_path_factory):
     for k in (
         "caps", "lsh_overflow_buckets", "cc_edges", "cc_driver", "cc_rounds",
         "stages", "ingest_rejects", "span_overflow_anchors", "lsh_driver",
-        "span_driver", "edges_by_source",
+        "span_driver", "edges_by_source", "kernels_driver", "doc_bytes",
     ):
         assert k in disk, k
     # SimHash is not a pipeline tier: no SimHash key, no SimHash edges

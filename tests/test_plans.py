@@ -174,24 +174,44 @@ def test_keep_policy_deskewed_no_window(spark, turns_parquet):
 
 
 #: Spark jobs one in-memory ``DedupPipeline`` pass runs on the shared test
-#: corpus (120 base conversations), as measured when the SimHash tier left
-#: the pipeline (the pass ran 43 before). At this input size the cold pass
-#: is mostly fixed cost per job, so the count must not creep back up.
-PIPELINE_JOB_BUDGET = 37
+#: corpus (120 base conversations), as measured when the signature, anchor
+#: and LCS kernels moved to the driver for small inputs (the pass ran 37
+#: before, 43 with the SimHash tier). At this input size the cold pass is
+#: mostly fixed cost per job, so the count must not creep back up.
+PIPELINE_JOB_BUDGET = 30
+
+
+def _sql_plans(spark) -> dict[int, str]:
+    """Physical plan text of every SQL execution the session recorded."""
+    store = spark._jsparkSession.sharedState().statusStore()  # noqa: SLF001
+    ex = store.executionsList()
+    return {
+        ex.apply(i).executionId(): ex.apply(i).physicalPlanDescription()
+        for i in range(ex.size())
+    }
 
 
 def test_pipeline_job_budget(spark, turns_df):
+    """A small in-memory pass stays within its job budget and, under the
+    driver-placement bound, runs no Python UDF: no Python worker starts."""
     from dedup.pipeline import DedupPipeline
+
+    sc = spark.sparkContext._jsc.sc()  # noqa: SLF001
 
     def n_jobs():
         # the status store is fed by the async listener bus: drain it first
-        sc = spark.sparkContext._jsc.sc()  # noqa: SLF001
         sc.listenerBus().waitUntilEmpty()
         return sc.statusStore().jobsList(spark._jvm.java.util.ArrayList()).size()  # noqa: SLF001
 
-    before = n_jobs()
+    before, plans_before = n_jobs(), _sql_plans(spark)
     res = DedupPipeline(spark, DedupConfig()).run(turns_df)
     jobs = n_jobs() - before
     assert jobs <= PIPELINE_JOB_BUDGET, jobs
     # each stage's row count rides its own checkpoint: real counts, no job
     assert all(s.rows > 0 for s in res.stages), res.stages
+    assert res.metrics["kernels_driver"] is True
+    plans = {k: v for k, v in _sql_plans(spark).items() if k not in plans_before}
+    assert plans
+    for plan in plans.values():
+        for marker in ("ArrowEvalPython", "BatchEvalPython", "PythonUDF"):
+            assert marker not in plan, (marker, plan)

@@ -133,6 +133,71 @@ def test_shared_span_pipeline(spark, turns_df, corpus):
         assert r.span_len >= cfg.min_span_len
 
 
+@pytest.mark.parametrize("driver", [False, True], ids=["udf", "driver"])
+def test_span_verify_probes_from_min_span_len(spark, driver):
+    """The LCS search starts at ``min_span_len``: a pair one char short is
+    rejected, and pairs at and above it keep their exact ``span_len``, in
+    both placements of ``verify_span_pairs``."""
+    import random
+
+    rng = random.Random(3)
+
+    def text(alphabet, n):
+        return "".join(rng.choice(alphabet) for _ in range(n))
+
+    # disjoint filler alphabets: no common substring extends past the span
+    rows = []
+    for name, n in (("short", 199), ("exact", 200), ("long", 450)):
+        shared = text("0123456789uvwxyz", n)
+        rows.append((f"{name}_a", text("abcdefghij", 300) + shared + text("abcdefghij", 80)))
+        rows.append((f"{name}_b", text("klmnopqrst", 40) + shared + text("klmnopqrst", 250)))
+    conv = spark.createDataFrame(rows, "conv_id string, doc string")
+    pairs = spark.createDataFrame(
+        [(f"{n}_a", f"{n}_b", "span") for n in ("short", "exact", "long")],
+        "conv_a string, conv_b string, source string",
+    )
+    docs = conv.toArrow() if driver else None
+    got = verify_span_pairs(pairs, conv, DedupConfig(min_span_len=200), docs=docs)
+    assert {(r.conv_a, r.span_len) for r in got.collect()} == {("exact_a", 200), ("long_a", 450)}
+
+
+@pytest.mark.parametrize(
+    "cfg", [DedupConfig(), DedupConfig(band_bucket_cap=3)], ids=["default", "cap3"]
+)
+def test_kernel_placements_identical(spark, turns_df, monkeypatch, freed_scratch, cfg):
+    """The driver placement of the signature, anchor and LCS kernels gives
+    the UDF placement's signatures, span candidate pairs, overflow rows and
+    span edges — also when a cap binds, and when the driver's anchor pairs
+    exceed ``lsh._DRIVER_PAIRS`` and pair distributed."""
+    from collections import Counter
+
+    import dedup.lsh as lsh
+    from dedup.assemble import assemble_conversations
+    from dedup.minhash import signatures
+
+    conv = assemble_conversations(turns_df, cfg).localCheckpoint()
+    docs = conv.select("conv_id", "doc").toArrow()
+    out = {}
+    for placement in ("udf", "driver", "driver-over-budget"):
+        if placement == "driver-over-budget":
+            monkeypatch.setattr(lsh, "_DRIVER_PAIRS", 0)
+        d = None if placement == "udf" else docs
+        m = {}
+        cand, overflow = span_candidate_pairs(conv, cfg, True, metrics_out=m, docs=d)
+        out[placement] = (
+            sorted((r.conv_id, tuple(r.minhash)) for r in signatures(conv, cfg, d).collect()),
+            Counter(tuple(r) for r in cand.collect()),
+            Counter(tuple(r) for r in overflow.collect()),
+            sorted(tuple(r) for r in verify_span_pairs(cand, conv, cfg, docs=d).collect()),
+        )
+        assert m["span_driver"] is (placement != "driver-over-budget")
+    monkeypatch.undo()
+    sigs, cand, overflow, edges = out["udf"]
+    assert out["driver"] == out["udf"] == out["driver-over-budget"]
+    assert len(sigs) == conv.count() and cand and edges
+    assert bool(overflow) is (cfg.band_bucket_cap == 3)
+
+
 # --- driver vs distributed bucket pairing in simhash_conv_pairs ------------
 
 SH_SCHEMA = "conv_id string, turn_idx int, simhash long"
