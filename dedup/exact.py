@@ -1,23 +1,25 @@
 """Stage 2 (exact tier): block → fingerprint → group.
 
-This is the reference's whole engine, re-expressed declaratively:
+This is the reference's whole engine, re-expressed declaratively
+(reference paths are under its ``src/``):
 
 - blocking key = (n_turns, total_chars) ≈ file size grouping
-  (reference: /root/reference/src/processor.rs:88-132, insert at 117-120);
-- singleton-block pruning — blocks with <2 members never get fingerprinted
-  (reference: /root/reference/src/processor.rs:41-42, the key perf trick);
+  (processor.rs:88-132, insert at 117-120);
 - prefix hash over the first ``prefix_len`` chars ≈ first-16KiB gxhash fast
-  mode (reference: /root/reference/src/fileinfo.rs:42-48);
-- full-content hash ≈ strict mode (reference: /root/reference/src/
-  fileinfo.rs:27-40). We hash the WHOLE doc in one md5 — the reference's
-  XOR-of-chunks fold is commutative, i.e. chunk-order-insensitive, a weakness
-  we deliberately do not replicate; and its size-salt (fileinfo.rs:38-39,
-  disambiguating empty vs all-NUL files) is unnecessary because whole-string
-  hashing plus the (n_turns,total_chars) block key already separates them.
+  mode (fileinfo.rs:42-48);
+- full-content hash ≈ strict mode (fileinfo.rs:27-40). We hash the WHOLE doc
+  in one md5 — the reference's XOR-of-chunks fold is commutative, i.e.
+  chunk-order-insensitive, a weakness we deliberately do not replicate; and
+  its size-salt (fileinfo.rs:38-39, disambiguating empty vs all-NUL files) is
+  unnecessary because whole-string hashing plus the block key already
+  separates them.
 
-md5 (hex string) is used for oracle-checkable tiers — DuckDB's md5() agrees
-with Spark's on identical UTF-8 input. xxhash64 variants exist for speed when
-no oracle is needed. All hashing is JVM-side codegen — zero Python here.
+The reference prunes singleton blocks so their files are never read
+(processor.rs:41-42). Here both md5s are computed map-side from docs already
+in hand, and the dup key leads with the block key, so that prune would save
+no hashing and change no group: the tier is one group-by on the dup key and
+one join back. md5 (hex) because DuckDB's md5() agrees with Spark's on the
+same UTF-8 input. All hashing is JVM-side codegen — zero Python here.
 """
 
 from __future__ import annotations
@@ -35,25 +37,18 @@ def with_block_key(conversations: DataFrame) -> DataFrame:
     partitioning shuffles on a single column.
     """
     return conversations.withColumn(
-        "block_key",
-        (F.col("n_turns").cast("long") * F.lit(2**40) + F.col("total_chars")).alias(
-            "block_key"
-        ),
+        "block_key", F.col("n_turns").cast("long") * F.lit(2**40) + F.col("total_chars")
     )
 
 
 def prune_singleton_blocks(conversations: DataFrame, key: str = "block_key") -> DataFrame:
-    """Keep only multi-member blocks (F3) — the pruning that lets the exact
-    tier skip fingerprinting unique conversations entirely
-    (reference: /root/reference/src/processor.rs:41-42, re-check :56).
+    """Keep only rows whose ``key`` has ≥2 members: with ``block_key``, the
+    reference's multi-member block predicate (F3; processor.rs:41-42).
 
     groupBy-count + semi-join rather than a window count: a window puts the
-    whole group in ONE task's partition — a 10⁷-copy boilerplate template
-    becomes a straggler AQE cannot split (AQE splits skewed JOIN partitions,
-    not window partitions). The groupBy combines map-side, so the count
-    table is one skinny row per distinct key; AQE broadcasts it when small
-    and skew-splits the semi-join when not — the corpus rows never hit an
-    unsplittable single-key partition.
+    whole group in ONE task's partition, a straggler AQE cannot split. The
+    groupBy combines map-side into one skinny row per distinct key; AQE
+    broadcasts it when small and skew-splits the semi-join when not.
     """
     multi = (
         conversations.groupBy(key)
@@ -74,24 +69,21 @@ def with_exact_hashes(conversations: DataFrame, cfg: DedupConfig | None = None) 
 
 def exact_clusters(conversations: DataFrame, cfg: DedupConfig | None = None) -> DataFrame:
     """Full exact tier: returns (conv_id, n_turns, total_chars, first_ts,
-    dup_key) for every conversation in a ≥2-member duplicate group (A2+F4).
+    block_key, prefix_hash, content_hash, dup_key, anchor) for every
+    conversation in a ≥2-member duplicate group (A2+F4); ``anchor`` is the
+    group's minimum conv_id.
 
-    ``dup_key`` is the grouping fingerprint: content_hash under strict mode,
-    prefix_hash under fast mode (reference: src/processor.rs:61-64). Fast
+    ``dup_key`` is the block key plus the grouping fingerprint: content_hash
+    under strict mode, prefix_hash under fast mode (processor.rs:61-64). Fast
     mode therefore allows the same documented false positive as the
-    reference (same prefix, different tail ⇒ one group;
-    reference test: src/processor.rs:214-265).
+    reference (same size and prefix, different tail ⇒ one group;
+    reference test: processor.rs:214-265).
     """
     cfg = cfg or DedupConfig()
-    # Hashing happens MAP-SIDE, before any shuffle: the reference defers
-    # hashing to multi-member blocks to avoid FILE READS (IO, not CPU —
-    # src/fileinfo.rs:42-48); here the doc bytes are already in hand, and
-    # hashing eagerly lets both downstream shuffles (block window, dup-key
-    # window) carry 32-byte digests instead of whole documents — at corpus
-    # scale that's the difference between shuffling 100 TB twice and
-    # shuffling ~100 GB twice. Singleton-block pruning (F3) still gates the
-    # grouping work exactly as in the reference.
-    skinny = with_exact_hashes(with_block_key(conversations), cfg).select(
+    fingerprint = F.col("content_hash") if cfg.strict else F.col("prefix_hash")
+    # Hashing happens map-side, before the one shuffle, so the group-by
+    # carries 32-byte digests instead of whole documents.
+    keyed = with_exact_hashes(with_block_key(conversations), cfg).select(
         "conv_id",
         "n_turns",
         "total_chars",
@@ -99,36 +91,28 @@ def exact_clusters(conversations: DataFrame, cfg: DedupConfig | None = None) -> 
         "block_key",
         "prefix_hash",
         "content_hash",
+        F.concat_ws(":", F.col("block_key").cast("string"), fingerprint).alias("dup_key"),
     )
-    blocked = prune_singleton_blocks(skinny)
-    dup_key = F.col("content_hash") if cfg.strict else F.col("prefix_hash")
-    # Fast mode still blocks by size first, so two convs only group when
-    # (n_turns, total_chars, prefix_hash) all agree — exactly the reference's
-    # size-block + prefix-hash containment.
-    keyed = blocked.withColumn(
-        "dup_key", F.concat_ws(":", F.col("block_key").cast("string"), dup_key)
+    # groupBy + join, not windows, for the same reason as
+    # prune_singleton_blocks: a 10⁷-copy template stays AQE-splittable
+    groups = (
+        keyed.groupBy("dup_key")
+        .agg(F.count(F.lit(1)).alias("_n"), F.min("conv_id").alias("anchor"))
+        .where(F.col("_n") > 1)
+        .drop("_n")
     )
-    # same de-skewed multi-member filter as prune_singleton_blocks: groupBy
-    # (map-side combine) + semi-join, never a single-task window partition
-    return prune_singleton_blocks(keyed, key="dup_key")
+    return keyed.join(groups, "dup_key").select(*keyed.columns, "anchor")
 
 
 def exact_pairs(conversations: DataFrame, cfg: DedupConfig | None = None) -> DataFrame:
     """Exact-tier duplicate PAIRS (conv_a < conv_b, source='exact') feeding
     the shared verify/CC stage. Pairs are emitted per dup group as
-    (member, group-min) star edges — O(n) edges per group instead of O(n²),
+    (anchor, member) star edges — O(n) edges per group instead of O(n²),
     which matters when a templated conversation has thousands of copies.
     """
     clus = exact_clusters(conversations, cfg)
-    # group-min via aggregation + join (not a window): one skinny row per
-    # dup group after map-side combine; a mega-group's members join against
-    # it in AQE-splittable partitions instead of piling into one window task
-    anchors = clus.groupBy("dup_key").agg(F.min("conv_id").alias("anchor"))
-    star = clus.join(anchors, "dup_key").where(
-        F.col("conv_id") != F.col("anchor")
-    )
-    return star.select(
-        F.least("conv_id", "anchor").alias("conv_a"),
-        F.greatest("conv_id", "anchor").alias("conv_b"),
+    return clus.where(F.col("conv_id") != F.col("anchor")).select(
+        F.col("anchor").alias("conv_a"),
+        F.col("conv_id").alias("conv_b"),
         F.lit("exact").alias("source"),
     )

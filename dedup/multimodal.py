@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dedup.exact import prune_singleton_blocks
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -155,18 +157,10 @@ def decode_media(media: DataFrame, dim: int = 16, fake: bool = True) -> DataFram
 
 
 def media_exact_dups(features: DataFrame) -> DataFrame:
-    """Exact-duplicate media via content hash — same block/fingerprint/group
-    spine as the text tiers. Multi-member filter is a groupBy-count +
-    semi-join (map-side combine, AQE-splittable) rather than a window
-    count, so a boilerplate asset with 10⁷ copies never lands in one
-    unsplittable window task (same rationale as exact.prune_singleton_blocks)."""
-    multi = (
-        features.groupBy("content_hash")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .where(F.col("_n") > 1)
-        .select("content_hash")
-    )
-    return features.join(multi, "content_hash", "left_semi").select(
+    """Exact-duplicate media via content hash — the text tiers' de-skewed
+    multi-member filter (groupBy-count + semi-join, no window) keyed on
+    ``content_hash``."""
+    return prune_singleton_blocks(features, key="content_hash").select(
         "media_id", "kind", "content_hash"
     )
 

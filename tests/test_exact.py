@@ -13,6 +13,7 @@ from dedup.assemble import assemble_conversations
 from dedup.config import DedupConfig
 from dedup.exact import exact_clusters, exact_pairs, prune_singleton_blocks, with_block_key
 from dedup.schema import TRANSCRIPTS_SCHEMA
+from tests.reference_oracle import groups_to_pairs, reference_duplicate_groups
 
 TS = dt.datetime(2024, 1, 1)
 
@@ -48,10 +49,12 @@ def test_shared_prefix_fast_vs_strict(spark):
     (reference: src/processor.rs:156-265 pair of tests).
 
     Same n_turns and total_chars so the pair shares a block; tails differ
-    beyond the prefix window.
+    beyond the prefix window. A third conv with the same prefix but a longer
+    tail sits in another block, so fast mode still leaves it out.
     """
     prefix = "x" * 20000
     rows = _conv("a", [prefix, "tailAAAA"]) + _conv("b", [prefix, "tailBBBB"])
+    rows += _conv("c", [prefix, "tailCCCCC"])
     fast = _groups(spark, rows, DedupConfig(strict=False))
     assert len(fast) == 1 and set(next(iter(fast.values()))) == {"a", "b"}
     strict = _groups(spark, rows, DedupConfig(strict=True))
@@ -70,12 +73,14 @@ def test_same_size_different_content_blocks_but_no_group(spark):
 
 
 def test_singleton_blocks_never_fingerprinted(spark):
-    """Distinct sizes ⇒ singleton blocks pruned before hashing
+    """Distinct sizes ⇒ every block is a singleton: none is a block
+    candidate, and the exact tier reports no group
     (reference: src/processor.rs:41-42)."""
     rows = _conv("a", ["x"]) + _conv("b", ["xx"]) + _conv("c", ["xxx"])
     df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
     conv = assemble_conversations(df)
     assert prune_singleton_blocks(with_block_key(conv)).count() == 0
+    assert _groups(spark, rows, DedupConfig()) == {}
 
 
 def test_empty_vs_padding_not_grouped(spark):
@@ -91,17 +96,28 @@ def test_empty_vs_padding_not_grouped(spark):
 
 
 def test_exact_pairs_star_shape(spark):
-    texts = ["same conversation text"]
-    rows = _conv("a", texts) + _conv("b", texts) + _conv("c", texts)
-    df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
-    conv = assemble_conversations(df)
-    pairs = {(r.conv_a, r.conv_b) for r in exact_pairs(conv).collect()}
-    assert pairs == {("a", "b"), ("a", "c")}  # star around min conv_id
+    """One size block holding a different-content pair and three identical
+    conversations: the pair forms no group, the three form one group
+    anchored at its minimum conv_id, and the pairs are the star around it."""
+    rows = _conv("p", ["abcdef"]) + _conv("q", ["ghijkl"])
+    for cid in ("a", "b", "c"):
+        rows += _conv(cid, ["mnopqr"])
+    conv = assemble_conversations(spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA))
+    for strict in (False, True):
+        cfg = DedupConfig(strict=strict)
+        clus = exact_clusters(conv, cfg).collect()
+        assert len({r.dup_key for r in clus}) == 1
+        assert sorted((r.conv_id, r.anchor) for r in clus) == [
+            ("a", "a"), ("b", "a"), ("c", "a")
+        ]
+        pairs = {(r.conv_a, r.conv_b, r.source) for r in exact_pairs(conv, cfg).collect()}
+        assert pairs == {("a", "b", "exact"), ("a", "c", "exact")}
 
 
 def test_synth_exact_dups_found(spark, turns_df, corpus):
-    """All planted exact-dup pairs recovered by the exact tier on the synth
-    corpus, fast and strict."""
+    """The exact tier's groups are exactly the reference's duplicate groups
+    on the synth corpus, fast and strict, and hold every planted exact-dup
+    pair."""
     truth = {
         (a, b)
         for a, b, k in corpus.truth_pairs.itertuples(index=False)
@@ -109,15 +125,12 @@ def test_synth_exact_dups_found(spark, turns_df, corpus):
     }
     assert truth, "corpus must plant exact dups"
     conv = assemble_conversations(turns_df)
+    docs = {r.conv_id: (r.n_turns, r.doc) for r in conv.collect()}
     for strict in (False, True):
         clus = exact_clusters(conv, DedupConfig(strict=strict))
         groups: dict[str, set[str]] = {}
         for r in clus.collect():
             groups.setdefault(r.dup_key, set()).add(r.conv_id)
-        found = set()
-        for members in groups.values():
-            ms = sorted(members)
-            for i in range(len(ms)):
-                for j in range(i + 1, len(ms)):
-                    found.add((ms[i], ms[j]))
-        assert truth <= found
+        ref = reference_duplicate_groups(docs, strict=strict)
+        assert sorted(map(sorted, groups.values())) == sorted(map(sorted, ref)), strict
+        assert truth <= groups_to_pairs(list(groups.values()))
