@@ -110,6 +110,3 @@ class DedupConfig:
                 f"num_perm ({self.num_perm}) must equal "
                 f"lsh_bands*lsh_rows ({self.lsh_bands}*{self.lsh_rows})"
             )
-
-
-DEFAULT_CONFIG = DedupConfig()

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 
 #: split separator for turns (literal '. ')
 _SEP_RE = r"\. "  # Spark regex
-_SEP_LIT = ". "  # DuckDB literal
 
 
 def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -33,7 +33,9 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass, field
+import uuid
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -96,23 +98,22 @@ class DedupPipeline:
         keep_policy: str = "oldest",
         log=None,
     ):
-        """The independent fingerprint tiers are built in parallel driver
-        threads: the signatures + LSH pairing and the span anchors share no
-        inputs beyond the conversations stage, so their eager jobs (and,
-        under the driver placement, their numpy kernels) run concurrently.
-        Serial submission would leave most task slots idle during every
-        narrow stage (stats aggregations, checkpoints, Arrow batch
-        boundaries) — idle slots cost nothing on a small cluster but scale
-        linearly with cluster width. Stage walls still sum to the run wall;
-        attribution follows stage completion order."""
+        """The span candidates read only the conversations stage and are
+        first needed by the edge stage, so ``run`` builds them on one
+        background thread while the calling thread runs the signature,
+        pairs and verify work in stage order; their eager jobs (and, under
+        the driver placement, their numpy kernels) overlap. Only the calling
+        thread records stages.
+
+        With a ``run_dir``, the settings (``cfg``, ``enable_span``,
+        ``keep_policy``) are recorded in ``settings.json``; a later run on
+        the same dir with other settings raises instead of resuming."""
         self.spark = spark
         self.cfg = cfg or DedupConfig()
         self.run_dir = run_dir
         self.enable_span = enable_span
         self.keep_policy = keep_policy
         self.log = log or (lambda msg: None)
-        self._lineage: list[dict] = []
-        self._shuffle_snap: dict = {}
 
     # ---- checkpoint plumbing -------------------------------------------
 
@@ -122,6 +123,33 @@ class DedupPipeline:
     def _done(self, stage: str) -> bool:
         p = self._path(stage)
         return bool(p) and os.path.exists(os.path.join(p, "_SUCCESS"))
+
+    def _check_settings(self) -> None:
+        """Record the settings a run dir is computed from, and refuse one
+        computed from other (or unrecorded) settings: resuming it would hand
+        back their clusters."""
+        if not self.run_dir:
+            return
+        path = os.path.join(self.run_dir, "settings.json")
+        # through JSON, so tuples compare equal to the lists read back
+        want = json.loads(json.dumps({
+            "cfg": asdict(self.cfg),
+            "enable_span": self.enable_span,
+            "keep_policy": self.keep_policy,
+        }))
+        have = None
+        if os.path.exists(path):
+            with open(path) as f:
+                have = json.load(f)
+        elif not any(self._done(s) for s in self.STAGES):
+            os.makedirs(self.run_dir, exist_ok=True)
+            with open(path, "w") as f:
+                json.dump(want, f)
+            return
+        if have != want:
+            raise ValueError(
+                f"run dir {self.run_dir} was computed with settings {have}, not {want}"
+            )
 
     def _materialize(self, stage: str, df: DataFrame | None, aggs=()) -> DataFrame:
         """Write-then-read a stage (checkpoint) or localCheckpoint in-memory.
@@ -139,7 +167,7 @@ class DedupPipeline:
         ``aggs``: extra named aggregate columns observed with the row count
         (one ``agg`` job on resume); their values join the lineage row.
         """
-        t0 = getattr(self, "_section_t0", None) or time.monotonic()
+        t0 = self._section_t0
         p = self._path(stage)
         exprs = (F.count(F.lit(1)).alias("rows"), *aggs)
         if self._done(stage):
@@ -165,6 +193,7 @@ class DedupPipeline:
 
         self._section_t0 = time.monotonic()  # next stage's section starts now
         entry = {
+            "run_id": self._run_id,
             "stage": stage,
             "rows": rows,
             "seconds": round(seconds, 3),
@@ -175,9 +204,9 @@ class DedupPipeline:
         # Per-SECTION shuffle/IO byte deltas from the app status store
         # (VERDICT r04 #2: bytes are host-noise-immune where walls are not).
         # Same attribution rule as the walls: deltas follow stage COMPLETION
-        # order, so with concurrent tier threads a section's bytes include
-        # whatever other tiers' jobs finished during it — exact per-run
-        # totals, approximate per-stage split.
+        # order, so a section's bytes include whatever span-thread jobs
+        # finished during it — exact per-run totals, approximate per-stage
+        # split.
         snap = shuffle_totals(self.spark)
         if snap and self._shuffle_snap:
             entry["shuffle"] = shuffle_delta(self._shuffle_snap, snap)
@@ -193,12 +222,14 @@ class DedupPipeline:
     # ---- stages ---------------------------------------------------------
 
     def run(self, turns: DataFrame) -> PipelineResult:
-        from concurrent.futures import ThreadPoolExecutor
-
         from dedup.util import persistent_rdd_ids, shuffle_totals
 
         cfg = self.cfg
+        self._check_settings()
         metrics: dict = {}
+        # per-run state: a second run() on this instance starts afresh
+        self._run_id = uuid.uuid4().hex
+        self._lineage: list[dict] = []
         self._section_t0 = time.monotonic()
         self._shuffle_snap = shuffle_totals(self.spark)
         _pre_ids = persistent_rdd_ids(self.spark)
@@ -224,20 +255,13 @@ class DedupPipeline:
                 )
             self.log(f"ingest rejects: {metrics['ingest_rejects']}")
 
-        # Tier construction: the signatures (+LSH pairing) and the span
-        # anchors are independent given the conversations stage. Their
-        # EAGER jobs (stage writes, stats/UDF-table checkpoints) are
-        # submitted from parallel driver threads so the Spark scheduler
-        # backfills idle task slots — the narrow phases of one tier overlap
-        # the wide phases of another.
-        # Resume guards unchanged: a tier's kernels are never even
-        # constructed when the stage consuming them is already on disk.
+        # Resume guards: a tier's kernels are never even constructed when
+        # the stage consuming them is already on disk.
         sigs_done = self._done("signatures")
         pairs_done = self._done("pairs")
         edges_done = self._done("edges")
         span_needed = self.enable_span and not edges_done
         overflow_dfs: dict[str, DataFrame] = {}
-        tier: dict[str, DataFrame] = {}
 
         # Kernel placement, picked once from the observed doc bytes: a
         # small conversations stage is collected as Arrow and the
@@ -250,42 +274,31 @@ class DedupPipeline:
             docs = conv.select("conv_id", "doc").toArrow()
         metrics["kernels_driver"] = docs is not None
 
-        def t_signatures():
-            sigs = self._materialize(
-                "signatures", None if sigs_done else signatures(conv, cfg, docs)
-            )
-            tier["sigs"] = sigs
-            if not pairs_done:
-                # dedup=False: the pair-union groupBy below is the
-                # single pair-dedup shuffle for every tier — a per-tier
-                # dropDuplicates would shuffle the same pair set twice
-                lsh_pairs, lsh_overflow = candidate_pairs(
-                    sigs, cfg, dedup=False, metrics_out=metrics
-                )
-                tier["lsh"] = lsh_pairs
-                overflow_dfs["lsh_overflow_buckets"] = lsh_overflow
-
-        def t_span():
-            # Span candidates are anchor joins only — the LCS verifier runs
-            # later, anti-joined against the already-accepted edge set, so
-            # building candidates early costs nothing extra
-            span_cand, span_overflow = span_candidate_pairs(
-                conv, cfg, input_materialized=True, metrics_out=metrics, docs=docs
-            )
-            tier["span_cand"] = span_cand
-            overflow_dfs["span_overflow_anchors"] = span_overflow
-
-        tasks = [t_signatures]
+        # The span candidates read only the conversations stage and are
+        # first needed by the edge stage: one background thread builds them
+        # (anchor joins; their eager jobs overlap the signature, pairs and
+        # verify work below) while this thread runs the stages in order.
+        span = None
         if span_needed:
-            tasks.append(t_span)
-        with ThreadPoolExecutor(max_workers=len(tasks)) as ex:
-            for f in [ex.submit(t) for t in tasks]:
-                f.result()
-        sigs = tier["sigs"]
+            ex = ThreadPoolExecutor(max_workers=1)
+            span = ex.submit(
+                span_candidate_pairs,
+                conv, cfg, input_materialized=True, metrics_out=metrics, docs=docs,
+            )
+            ex.shutdown(wait=False)  # the thread exits when the task ends
 
+        sigs = self._materialize(
+            "signatures", None if sigs_done else signatures(conv, cfg, docs)
+        )
         all_pairs = None
         if not pairs_done:
-            all_pairs = self._dedup_pair_union([exact_pairs(conv, cfg), tier["lsh"]])
+            # dedup=False: the pair-union groupBy is the single pair-dedup
+            # shuffle for every tier — a per-tier dropDuplicates would
+            # shuffle the same pair set twice
+            lsh_pairs, overflow_dfs["lsh_overflow_buckets"] = candidate_pairs(
+                sigs, cfg, dedup=False, metrics_out=metrics
+            )
+            all_pairs = self._dedup_pair_union([exact_pairs(conv, cfg), lsh_pairs])
         pairs = self._materialize("pairs", all_pairs)
 
         if edges_done:
@@ -293,7 +306,7 @@ class DedupPipeline:
             return self._finish(edges, conv, metrics, overflow_dfs, _pre_ids)
 
         cheap_edges = verify_pairs(pairs, sigs, cfg, conversations=conv)
-        if self.enable_span:
+        if span is not None:
             # Span tier verifies LAST, against the already-accepted edge
             # set: exact copies and near-dups share most anchors and would
             # all become span candidates, but their LCS verification is
@@ -301,7 +314,8 @@ class DedupPipeline:
             # Anti-join keeps LCS (the most expensive verifier) for pairs
             # only the span tier can see. Final edge SET is unchanged.
             cheap_edges = cheap_edges.localCheckpoint()
-            new_cand = tier["span_cand"].join(
+            span_cand, overflow_dfs["span_overflow_anchors"] = span.result()
+            new_cand = span_cand.join(
                 cheap_edges.select("conv_a", "conv_b"), ["conv_a", "conv_b"], "left_anti"
             )
             span_edges = (

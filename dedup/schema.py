@@ -1,4 +1,4 @@
-"""Schemas for the transcript corpus and every derived table.
+"""Schema of the transcript corpus, and the separator that joins its turns.
 
 The input table shape is mandated by BASELINE.json ``input_hint``:
 ``transcripts(conv_id string, turn_idx int, role string, text string,
@@ -25,45 +25,5 @@ TRANSCRIPTS_SCHEMA = T.StructType(
         T.StructField("text", T.StringType(), True),
         T.StructField("tool", T.StringType(), True),
         T.StructField("ts", T.TimestampType(), True),
-    ]
-)
-
-#: conversations ≈ FileInfo (path→conv_id, size→(n_turns,total_chars),
-#: modified→first_ts/last_ts); reference: src/fileinfo.rs:18-24.
-CONVERSATIONS_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("n_turns", T.IntegerType(), False),
-        T.StructField("total_chars", T.LongType(), False),
-        T.StructField("first_ts", T.TimestampType(), True),
-        T.StructField("last_ts", T.TimestampType(), True),
-        T.StructField("doc", T.StringType(), False),
-    ]
-)
-
-SIGNATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("block_key", T.LongType(), False),
-        T.StructField("prefix_hash", T.StringType(), False),
-        T.StructField("content_hash", T.StringType(), False),
-        T.StructField("minhash", T.ArrayType(T.IntegerType(), False), False),
-        T.StructField("simhash", T.LongType(), False),
-    ]
-)
-
-CANDIDATE_PAIRS_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_a", T.StringType(), False),
-        T.StructField("conv_b", T.StringType(), False),
-        T.StructField("source", T.StringType(), False),  # lsh|simhash|span|exact
-    ]
-)
-
-CLUSTERS_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("cluster_id", T.StringType(), False),
-        T.StructField("is_representative", T.BooleanType(), False),
     ]
 )

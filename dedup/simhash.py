@@ -126,30 +126,24 @@ def batch_simhash(texts: list[str], k: int = 4) -> np.ndarray:
     return fp.astype(np.int64)  # two's-complement into Spark LongType
 
 
-def py_simhash(text: str, k: int = 4, seed: int = 42) -> int:
-    """64-bit SimHash over char-k-gram shingle multiset of hard-normalized
-    text (reference single-doc implementation; oracle for the batched UDF)."""
+def py_simhash(text: str, k: int = 4) -> int:
+    """64-bit SimHash of one text: ``batch_simhash`` on a one-doc batch, the
+    same call the UDF of ``with_turn_simhash`` makes per Arrow batch."""
     return int(batch_simhash([text], k)[0])
-
-
-def make_simhash_udf(cfg: DedupConfig):
-    k = 4
-
-    @F.pandas_udf(T.LongType())
-    def simhash_udf(texts: pd.Series) -> pd.Series:
-        return pd.Series(batch_simhash(list(texts), k))
-
-    return simhash_udf
 
 
 def with_turn_simhash(turns: DataFrame, cfg: DedupConfig | None = None) -> DataFrame:
     """Per-turn simhash for NON-EMPTY turns. Empty turns are dropped here,
     before the UDF (an empty-text simhash would mega-bucket, and filtering
-    first keeps the checkpointed table free of the text column)."""
-    cfg = cfg or DedupConfig()
-    udf = make_simhash_udf(cfg)
+    first keeps the checkpointed table free of the text column). ``cfg`` is
+    unused: the gram width is fixed at 4."""
+
+    @F.pandas_udf(T.LongType())
+    def simhash_udf(texts: pd.Series) -> pd.Series:
+        return pd.Series(batch_simhash(list(texts), 4))
+
     return turns.where(F.length(F.coalesce("text", F.lit(""))) > 0).withColumn(
-        "simhash", udf(F.col("text"))
+        "simhash", simhash_udf(F.col("text"))
     )
 
 

@@ -143,6 +143,53 @@ def test_full_resume_runs_no_eager_tier_work(spark, turns_df, tmp_path):
     assert persistent_rdd_ids(spark) == pre
 
 
+def test_reused_run_dir_refuses_other_settings(spark, turns_df, tmp_path):
+    """A run dir records the settings it was computed from. A run with other
+    settings (config, span tier or keep policy) on it raises before any
+    stage resumes, instead of returning the first run's clusters; so does a
+    run dir whose stages carry no settings record."""
+    import json
+    import os
+
+    run_dir = str(tmp_path / "run")
+    DedupPipeline(spark, DedupConfig(), run_dir=run_dir).run(turns_df)
+    others = (
+        DedupPipeline(
+            spark, DedupConfig(jaccard_threshold=0.99, min_span_len=100000), run_dir=run_dir
+        ),
+        DedupPipeline(spark, DedupConfig(), run_dir=run_dir, enable_span=False),
+        DedupPipeline(spark, DedupConfig(), run_dir=run_dir, keep_policy="first_id"),
+    )
+    for pipe in others:
+        with pytest.raises(ValueError, match="settings"):
+            pipe.run(turns_df)
+    os.remove(os.path.join(run_dir, "settings.json"))
+    with pytest.raises(ValueError, match="settings"):
+        DedupPipeline(spark, DedupConfig(), run_dir=run_dir).run(turns_df)
+    with open(os.path.join(run_dir, "lineage.jsonl")) as f:
+        assert len([json.loads(line) for line in f]) == len(DedupPipeline.STAGES)
+
+
+def test_each_run_has_its_own_lineage(spark, turns_df, tmp_path):
+    """Two runs of one instance report one lineage row per stage each, and
+    the lineage table, which appends across runs, tells them apart by
+    ``run_id``."""
+    import json
+
+    run_dir = tmp_path / "run"
+    pipe = DedupPipeline(spark, DedupConfig(), run_dir=str(run_dir))
+    first, second = pipe.run(turns_df), pipe.run(turns_df)
+    for res in (first, second):
+        assert [s.name for s in res.stages] == list(DedupPipeline.STAGES)
+        assert [e["stage"] for e in res.metrics["stages"]] == list(DedupPipeline.STAGES)
+    assert all(s.resumed for s in second.stages)
+    with open(run_dir / "lineage.jsonl") as f:
+        ids = [json.loads(line)["run_id"] for line in f]
+    n = len(DedupPipeline.STAGES)
+    assert len(ids) == 2 * n
+    assert len(set(ids[:n])) == len(set(ids[n:])) == 1 and ids[0] != ids[n]
+
+
 def test_select_representatives_matches_window_ordering(spark):
     """The groupBy-min(key struct) formulation (r04 de-skew) must pick the
     SAME representative as the original row_number-over-window ordering for
