@@ -13,6 +13,9 @@ sandbox-portable equivalent implemented here is the anti-join rewrite
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -47,6 +50,40 @@ POLICIES = {
     ),
     "first_id": lambda: F.struct(F.col("conv_id").alias("id")),
 }
+
+
+def _np_key(col: pa.ChunkedArray, sign: int) -> list[np.ndarray]:
+    """numpy twin of a policy struct's (n, k) fields: null flag, then
+    ``sign`` × the value as int64 (epoch micros for a timestamp), 0 if null."""
+    flag = pc.is_null(col).to_numpy(zero_copy_only=False)
+    return [flag, sign * pc.fill_null(col.cast(pa.int64()), 0).to_numpy()]
+
+
+#: ``POLICIES`` over Arrow columns: policy name → the leading key arrays;
+#: row position (conv_id order) is the final tie-break
+NP_POLICIES = {
+    "oldest": lambda t: _np_key(t.column("first_ts"), 1),
+    "newest": lambda t: _np_key(t.column("first_ts"), -1),
+    "longest": lambda t: _np_key(t.column("total_chars"), -1),
+    "first_id": lambda t: [],
+}
+
+
+def representatives(cluster: np.ndarray, conv: pa.Table, policy: str = "oldest") -> np.ndarray:
+    """``select_representatives`` for rows in conv_id order, as a mask of
+    the rows whose policy key is their cluster's minimum. ``cluster`` is
+    each row's cluster label; ``conv`` holds its ``first_ts`` and
+    ``total_chars``."""
+    if policy not in NP_POLICIES:
+        raise ValueError(f"unknown keep policy {policy!r}; one of {sorted(NP_POLICIES)}")
+    n = cluster.size
+    order = np.lexsort((np.arange(n), *NP_POLICIES[policy](conv)[::-1], cluster))
+    c = cluster[order]
+    first = np.ones(n, dtype=bool)
+    first[1:] = c[1:] != c[:-1]
+    rep = np.zeros(n, dtype=bool)
+    rep[order[first]] = True
+    return rep
 
 
 def select_representatives(

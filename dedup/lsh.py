@@ -14,9 +14,9 @@ the reference does — with no shuffle at all.
 Larger tables, tables with nulls or with columns that are neither strings
 nor integers, and tables whose pairs would exceed ``_DRIVER_PAIRS`` take
 the distributed path: a bucket-stats aggregation, a membership join and a
-bounded ``collect_list`` per bucket. The two regimes are also callable on
-their own (``driver_bucket_pairs``, ``distributed_bucket_pairs``): the span
-tier's driver placement hands its anchor arrays straight to the first.
+bounded ``collect_list`` per bucket. The driver regime's numpy kernel,
+``bucket_pair_rows``, is also what the pipeline's driver pass
+(``dedup.driver_pass``) pairs LSH bands and span anchors with.
 
 Skew strategy (north rule: explicit handling, no silent caps):
 - AQE skew-join is on session-wide (session.py) so runtime mega-partitions
@@ -126,56 +126,24 @@ def bucketed_pairs(
     with a ≤ b in member-struct order (first member column ascending).
     """
     _check_cap(cap)  # before any job runs
+    spark, schema = rows.sparkSession, rows.schema
     out = None
     if rows.count() <= _DRIVER_ROWS:
-        out = driver_bucket_pairs(
-            rows.sparkSession,
-            rows.select(*bucket_cols, *member_cols).toArrow(),
-            rows.schema,
-            bucket_cols,
-            member_cols,
-            cap,
+        out = _driver_bucket_pairs(
+            rows.select(*bucket_cols, *member_cols).toArrow(), bucket_cols, member_cols, cap
         )
     if metrics_out is not None:
         metrics_out[driver_key] = out is not None
-    if out is None:
-        out = distributed_bucket_pairs(rows, bucket_cols, member_cols, cap)
-    return out
-
-
-def driver_bucket_pairs(
-    spark,
-    table: pa.Table,
-    schema: T.StructType,
-    bucket_cols: list[str],
-    member_cols: list[str],
-    cap: int,
-) -> tuple[DataFrame, DataFrame] | None:
-    """``bucketed_pairs``' driver regime over an already-collected Arrow
-    ``table`` whose Spark columns are ``schema``: the (pairs, overflow)
-    frames, or ``None`` when the table must go distributed (nulls, a column
-    without order-preserving codes, or more than ``_DRIVER_PAIRS`` pairs)."""
-    _check_cap(cap)
-    out = _driver_bucket_pairs(table, bucket_cols, member_cols, cap)
-    if out is None:
-        return None
-    member_t = T.StructType([schema[c] for c in member_cols])
-    pairs = spark.createDataFrame(out[0], T.StructType(
-        [T.StructField("a", member_t), T.StructField("b", member_t)]
-    ))
-    overflow = spark.createDataFrame(out[1], T.StructType(
-        [schema[c] for c in bucket_cols]
-        + [T.StructField("bucket_n", T.LongType(), False)]
-    ))
-    return pairs, overflow
-
-
-def distributed_bucket_pairs(
-    rows: DataFrame, bucket_cols: list[str], member_cols: list[str], cap: int
-) -> tuple[DataFrame, DataFrame]:
-    """``bucketed_pairs``' distributed regime: the bucket-stats aggregation
-    (checkpointed) and ``route_bucket_pairs``."""
-    _check_cap(cap)
+    if out is not None:
+        member_t = T.StructType([schema[c] for c in member_cols])
+        pairs = spark.createDataFrame(out[0], T.StructType(
+            [T.StructField("a", member_t), T.StructField("b", member_t)]
+        ))
+        overflow = spark.createDataFrame(out[1], T.StructType(
+            [schema[c] for c in bucket_cols]
+            + [T.StructField("bucket_n", T.LongType(), False)]
+        ))
+        return pairs, overflow
     m = F.struct(*[F.col(c) for c in member_cols])
     keyed = rows.select(*bucket_cols, m.alias("m"))
     stats = (
@@ -212,21 +180,20 @@ def _group_pairs(members: np.ndarray, sizes: np.ndarray) -> tuple[np.ndarray, np
     return members[left], members[right]
 
 
-def _driver_bucket_pairs(
-    table: pa.Table, bucket_cols: list[str], member_cols: list[str], cap: int
-) -> tuple[pa.Table, pa.Table] | None:
-    """The pairs and overflow rows of ``bucketed_pairs`` for a collected
-    table, or ``None`` when the driver regime cannot take it."""
-    if any(c.null_count for c in table.columns):
-        return None
-    codes = [_order_codes(table.column(c)) for c in (*bucket_cols, *member_cols)]
-    if any(c is None for c in codes):
-        return None
-    nb, n = len(bucket_cols), table.num_rows
+def bucket_pair_rows(
+    codes: list[np.ndarray], n_bucket: int, cap: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray] | None:
+    """The driver regime's numpy kernel. ``codes`` are one int64 code array
+    per column, bucket columns (the first ``n_bucket``) then member columns,
+    each ordered as its column. Returns row indices ``(a, b)`` of every
+    pair, the member of ``a`` first, and ``(over, sizes)``: one row of each
+    bucket over ``cap`` and its size; or ``None`` over ``_DRIVER_PAIRS``
+    pairs (checked before any pair is enumerated)."""
+    n = codes[0].size
     order = np.lexsort(codes[::-1])  # bucket columns, then members, ascending
     new = np.zeros(n, dtype=bool)
     new[:1] = True
-    for c in codes[:nb]:
+    for c in codes[:n_bucket]:
         c = c[order]
         new[1:] |= c[1:] != c[:-1]
     heads = np.flatnonzero(new)
@@ -237,7 +204,7 @@ def _driver_bucket_pairs(
     # star edges: rows of a capped bucket whose member differs from the
     # bucket min, i.e. from the bucket's first sorted row
     differs = np.zeros(n, dtype=bool)
-    for c in codes[nb:]:
+    for c in codes[n_bucket:]:
         c = c[order]
         differs |= c != c[head]
     star = np.flatnonzero(in_big & differs)
@@ -247,7 +214,23 @@ def _driver_bucket_pairs(
     a, b = _group_pairs(order[~in_big], small)
     a = np.concatenate([a, order[head[star]]])
     b = np.concatenate([b, order[star]])
+    return a, b, order[heads[big]], sizes[big]
 
+
+def _driver_bucket_pairs(
+    table: pa.Table, bucket_cols: list[str], member_cols: list[str], cap: int
+) -> tuple[pa.Table, pa.Table] | None:
+    """The pairs and overflow rows of ``bucketed_pairs`` for a collected
+    table, or ``None`` when the driver regime cannot take it."""
+    if any(c.null_count for c in table.columns):
+        return None
+    codes = [_order_codes(table.column(c)) for c in (*bucket_cols, *member_cols)]
+    if any(c is None for c in codes):
+        return None
+    out = bucket_pair_rows(codes, len(bucket_cols), cap)
+    if out is None:
+        return None
+    a, b, over, sizes = out
     fields = [table.schema.field(c) for c in member_cols]
 
     def member(idx):
@@ -257,10 +240,9 @@ def _driver_bucket_pairs(
             fields=fields,
         )
 
-    over = pa.array(order[heads[big]], pa.int64())
     overflow = pa.Table.from_arrays(
-        [table.column(c).take(over) for c in bucket_cols]
-        + [pa.array(sizes[big], pa.int64())],
+        [table.column(c).take(pa.array(over, pa.int64())) for c in bucket_cols]
+        + [pa.array(sizes, pa.int64())],
         schema=pa.schema(
             [table.schema.field(c) for c in bucket_cols]
             + [pa.field("bucket_n", pa.int64(), nullable=False)]

@@ -8,8 +8,8 @@ signatures at ANY seed/config) while also catching near-duplicates, which is
 what the north rule requires.
 
 All compute is one numpy batch kernel, ``doc_signatures`` (no per-row
-Python), run in an Arrow-batched pandas UDF or, for a small input, on the
-driver (``signatures``):
+Python), run in an Arrow-batched pandas UDF or, for a small input, by the
+pipeline's driver pass:
 - shingling = numpy sliding-window polynomial rolling hash over UTF-8 bytes
   of the normalized doc, finalized with a 64-bit mixer (N2);
 - signature position i = min over shingles x of mix64(x XOR salt_i), where
@@ -30,7 +30,6 @@ from functools import lru_cache
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -289,7 +288,7 @@ NORM_PATTERN = "[\\s\\x1c-\\x1f]+"
 def doc_signatures(docs: list[str], cfg: DedupConfig) -> np.ndarray:
     """(len(docs) × num_perm) int32 signatures of ``py_normalize(doc)`` —
     the one signature kernel, run by the pandas UDF and by the pipeline's
-    driver placement alike. Normalized here, not in the JVM: Java's \\s
+    driver pass alike. Normalized here, not in the JVM: Java's \\s
     and lower() disagree with py_normalize on Unicode whitespace (U+00A0,
     U+2003, U+3000)."""
     return batch_minhash(
@@ -327,29 +326,11 @@ def with_minhash(
     return conversations.withColumn("minhash", minhash_udf(F.col("doc")))
 
 
-def signatures(
-    conversations: DataFrame, cfg: DedupConfig | None = None, docs: pa.Table | None = None
-) -> DataFrame:
-    """(conv_id, minhash) for every conversation, in one of two placements.
-
-    With ``docs`` — the conversations' ``(conv_id, doc)`` already collected
-    as Arrow — ``doc_signatures`` runs on the driver and the table comes
-    back through ``createDataFrame``: no Python worker starts. Without it
-    the same kernel runs in the pandas UDF (``with_minhash``) over the
-    materialized ``conversations``. The caller picks the placement by size.
-    """
-    cfg = cfg or DedupConfig()
-    if docs is None:
-        return with_minhash(conversations, cfg, repartition="auto").select("conv_id", "minhash")
-    sig = doc_signatures(docs.column("doc").to_pylist(), cfg)
-    minhash = pa.ListArray.from_arrays(
-        pa.array(np.arange(0, sig.size + 1, cfg.num_perm, dtype=np.int32)),
-        pa.array(sig.reshape(-1)),
-    )
-    return conversations.sparkSession.createDataFrame(
-        pa.table({"conv_id": docs.column("conv_id"), "minhash": minhash}),
-        "conv_id string, minhash array<int>",
-    )
+def signatures(conversations: DataFrame, cfg: DedupConfig | None = None) -> DataFrame:
+    """(conv_id, minhash) for every conversation of a materialized
+    ``conversations``: ``doc_signatures`` in the pandas UDF of
+    ``with_minhash``."""
+    return with_minhash(conversations, cfg, repartition="auto").select("conv_id", "minhash")
 
 
 # ---------------------------------------------------------------------------

@@ -13,13 +13,22 @@ The candidate tiers are exact, MinHash/LSH and span. The SimHash tier
 tier: with its candidates verified like LSH ones it added no edge on any
 measured corpus, so a pass no longer pays for its UDF and pairing jobs.
 
-The three Python kernels (MinHash signatures, span anchors, span LCS) have
-two placements, picked once per run by the conversations stage's doc bytes
-(observed on its own action): up to ``_DRIVER_DOC_BYTES`` the stage's
-``(conv_id, doc)`` is collected as Arrow once and every kernel runs on the
-driver, so a small pass starts no Python worker; above it they run in
-pandas UDFs. The same rule as the ``cc`` and ``lsh`` driver regimes: one
-kernel, two placements, picked by size.
+Two passes compute the stages after assembly, picked once per run by the
+conversations stage's doc bytes (observed on its own action):
+
+- up to ``_DRIVER_DOC_BYTES`` the stage's ``(conv_id, doc, n_turns,
+  total_chars, first_ts)`` is collected as Arrow once and the **driver
+  pass** computes every later stage in numpy (``dedup.driver_pass``): exact
+  grouping, LSH banding, the pair union, verify, span pairing and LCS, CC
+  and the keep policy. Spark only writes each stage from Arrow, so a small
+  pass starts no Python worker and runs one job per stage;
+- above it, or when the driver pass's LSH or anchor pairs exceed
+  ``lsh._DRIVER_PAIRS``, the **DataFrame pass** builds every stage with the
+  tiers' DataFrame builders, their Python kernels in pandas UDFs.
+
+Both passes run the same kernels and write the same stage rows (pinned by
+``tests/test_pipeline.py``). The same rule as the ``cc`` and ``lsh``
+driver regimes: one kernel, two placements, picked by size.
 
 Metrics are first-class (north rule): every stage logs its row count,
 observed on the stage's own write or checkpoint; the LSH and anchor
@@ -37,26 +46,30 @@ import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass, field
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from dedup import driver_pass
 from dedup.assemble import assemble_conversations, reject_metrics_exprs
 from dedup.cc import connected_components
 from dedup.config import DedupConfig
 from dedup.exact import exact_pairs
-from dedup.keep import select_representatives
+from dedup.keep import representatives, select_representatives
 from dedup.lsh import candidate_pairs
-from dedup.minhash import signatures
+from dedup.minhash import doc_signatures, signatures
 from dedup.suffix import span_candidate_pairs, verify_span_pairs
 from dedup.verify import verify_pairs
 
 #: every edge ``source`` a tier emits; ``metrics["edges_by_source"]`` counts each
 _SOURCES = ("exact", "lsh", "span")
 
-#: largest conversations stage (UTF-8 bytes of ``doc``, summed) whose
-#: signature, anchor and LCS kernels run on the driver; a larger one runs
-#: them in pandas UDFs. Measured on a 4-core host, local[4], synth_spark
-#: corpora, signatures + span candidates, driver vs UDF placement: warm
+#: largest conversations stage (UTF-8 bytes of ``doc``, summed) that the
+#: driver pass takes; a larger one takes the DataFrame pass. Measured for
+#: the kernels alone, before the rest of the pass moved to the driver, and
+#: not re-measured for the whole pass: on a 4-core host, local[4],
+#: synth_spark corpora, signatures + span candidates, driver vs UDF: warm
 #: session 0.94-1.19 s vs 1.59-1.88 s at 2.2 MB, 2.07-2.39 vs 2.08-2.20 at
 #: 5.3 MB, 3.66-3.95 vs 2.33-2.51 at 10.5 MB; a session's first pass
 #: (the UDF side pays the Python worker start) 2.3-2.5 vs 5.2-6.0 at
@@ -64,6 +77,11 @@ _SOURCES = ("exact", "lsh", "span")
 #: 7.7-9.3 vs 7.5-8.5 at 20.9 MB. The bound sits at the warm crossover, so
 #: the driver placement is never the slower one.
 _DRIVER_DOC_BYTES = 5_000_000
+#: the clusters stage: ``select_representatives``' columns
+_CLUSTERS_SCHEMA = (
+    "conv_id string, cluster_id string, first_ts timestamp, total_chars long,"
+    " is_representative boolean"
+)
 
 
 @dataclass
@@ -98,12 +116,11 @@ class DedupPipeline:
         keep_policy: str = "oldest",
         log=None,
     ):
-        """The span candidates read only the conversations stage and are
-        first needed by the edge stage, so ``run`` builds them on one
-        background thread while the calling thread runs the signature,
-        pairs and verify work in stage order; their eager jobs (and, under
-        the driver placement, their numpy kernels) overlap. Only the calling
-        thread records stages.
+        """In the DataFrame pass the span candidates, which read only the
+        conversations stage and are first needed by the edge stage, are
+        built on one background thread while the calling thread runs the
+        signature, pairs and verify work in stage order, so their eager
+        jobs overlap. Only the calling thread records stages.
 
         With a ``run_dir``, the settings (``cfg``, ``enable_span``,
         ``keep_policy``) are recorded in ``settings.json``; a later run on
@@ -232,7 +249,7 @@ class DedupPipeline:
         self._lineage: list[dict] = []
         self._section_t0 = time.monotonic()
         self._shuffle_snap = shuffle_totals(self.spark)
-        _pre_ids = persistent_rdd_ids(self.spark)
+        self._pre_ids = persistent_rdd_ids(self.spark)
 
         # S8 ingest-reject accounting rides the assemble action via observe()
         # — no extra corpus scan; skipped on resume (the action never fires)
@@ -255,41 +272,124 @@ class DedupPipeline:
                 )
             self.log(f"ingest rejects: {metrics['ingest_rejects']}")
 
-        # Resume guards: a tier's kernels are never even constructed when
-        # the stage consuming them is already on disk.
-        sigs_done = self._done("signatures")
-        pairs_done = self._done("pairs")
-        edges_done = self._done("edges")
-        span_needed = self.enable_span and not edges_done
-        overflow_dfs: dict[str, DataFrame] = {}
-
-        # Kernel placement, picked once from the observed doc bytes: a
-        # small conversations stage is collected as Arrow and the
-        # signature, anchor and LCS kernels run on the driver, so the pass
-        # starts no Python worker; a larger one runs them in pandas UDFs.
-        # The docs are collected only when a stage that reads them runs.
+        # Placement, picked once from the observed doc bytes: a small
+        # conversations stage is collected as Arrow once and the rest of the
+        # pass runs on the driver. A pass that resumes a later stage takes
+        # the DataFrame pass, which reads each stage back from disk.
         metrics["doc_bytes"] = self._lineage[-1]["doc_bytes"]
-        docs = None
-        if (not sigs_done or span_needed) and metrics["doc_bytes"] <= _DRIVER_DOC_BYTES:
-            docs = conv.select("conv_id", "doc").toArrow()
-        metrics["kernels_driver"] = docs is not None
+        clusters = None
+        resumes = any(self._done(s) for s in self.STAGES[1:])
+        if not resumes and metrics["doc_bytes"] <= _DRIVER_DOC_BYTES:
+            docs = conv.select(
+                "conv_id", "doc", "n_turns", "total_chars", "first_ts"
+            ).toArrow()
+            clusters = self._driver_pass(docs.sort_by("conv_id"), metrics)
+        metrics["kernels_driver"] = clusters is not None
+        if clusters is None:
+            clusters = self._dataframe_pass(conv, metrics)
+        return self._finish(clusters, metrics)
+
+    def _driver_pass(self, docs: pa.Table, metrics: dict) -> DataFrame | None:
+        """Every stage after assembly from ``docs`` (the conversations
+        stage, sorted by ``conv_id``) by ``dedup.driver_pass``; Spark only
+        writes each stage from Arrow. Returns the clusters, or ``None`` —
+        before any stage is written — when the LSH or anchor pairs exceed
+        ``lsh._DRIVER_PAIRS``."""
+        cfg = self.cfg
+        ids = docs.column("conv_id").combine_chunks()
+        n = len(ids)
+        texts = docs.column("doc").to_pylist()
+
+        def write(stage: str, schema: str, **cols) -> DataFrame:
+            return self._materialize(stage, self.spark.createDataFrame(pa.table(cols), schema))
+
+        sig = doc_signatures(texts, cfg)
+        lsh = driver_pass.lsh_pairs(sig, cfg)
+        span = None
+        if self.enable_span and lsh is not None:
+            span = driver_pass.span_candidates(texts, cfg)
+        if lsh is None or (self.enable_span and span is None):
+            return None
+        metrics.update(lsh_driver=True, lsh_overflow_buckets=lsh[2])
+        if span is not None:
+            metrics.update(span_driver=True, span_overflow_anchors=span[2])
+
+        write(
+            "signatures",
+            "conv_id string, minhash array<int>",
+            conv_id=ids,
+            minhash=pa.ListArray.from_arrays(
+                pa.array(np.arange(0, sig.size + 1, cfg.num_perm, dtype=np.int32)),
+                pa.array(sig.reshape(-1)),
+            ),
+        )
+        a, b, is_exact = driver_pass.pair_union(n, driver_pass.exact_pairs(docs, cfg), lsh[:2])
+        source = np.where(is_exact, "exact", "lsh")
+        write(
+            "pairs",
+            "conv_a string, conv_b string, source string",
+            conv_a=ids.take(a),
+            conv_b=ids.take(b),
+            source=source,
+        )
+
+        keep, sim = driver_pass.verify(a, b, is_exact, sig, texts, cfg)
+        a, b, sim, source = a[keep], b[keep], sim[keep], source[keep]
+        if span is not None:
+            # as in the DataFrame pass, LCS runs only on the candidates no
+            # cheaper tier accepted; a span edge has no similarity
+            ca, cb = span[:2]
+            new = ~np.isin(ca * n + cb, a * n + b)
+            ca, cb = ca[new], cb[new]
+            ok = driver_pass.span_verified(ca, cb, texts, cfg)
+            n_span = int(ok.sum())
+            a, b = np.concatenate([a, ca[ok]]), np.concatenate([b, cb[ok]])
+            sim = np.concatenate([sim, np.full(n_span, np.nan)])
+            source = np.concatenate([source, np.full(n_span, "span")])
+        metrics["edges_by_source"] = {s: int((source == s).sum()) for s in _SOURCES}
+        write(
+            "edges",
+            "conv_a string, conv_b string, source string, similarity double",
+            conv_a=ids.take(a),
+            conv_b=ids.take(b),
+            source=source,
+            similarity=pa.array(sim, mask=np.isnan(sim)),
+        )
+
+        nodes, roots, rounds = driver_pass.components(a, b, n)
+        self.log(f"cc driver finish: {a.size} edges, {rounds} union-find rounds")
+        metrics.update(cc_edges=int(a.size), cc_driver=True, cc_rounds=0)
+        meta = docs.select(["first_ts", "total_chars"]).take(nodes)
+        return self._clusters_stage(self.spark.createDataFrame(pa.table({
+            "conv_id": ids.take(nodes),
+            "cluster_id": ids.take(roots),
+            "first_ts": meta.column("first_ts"),
+            "total_chars": meta.column("total_chars"),
+            "is_representative": representatives(roots, meta, self.keep_policy),
+        }), _CLUSTERS_SCHEMA))
+
+    def _dataframe_pass(self, conv: DataFrame, metrics: dict) -> DataFrame:
+        """Every stage after assembly as Spark DataFrames, the tiers' Python
+        kernels in pandas UDFs. Resume guards: a tier's kernels are never
+        even constructed when the stage consuming them is already on disk."""
+        cfg = self.cfg
+        sigs_done, pairs_done, edges_done = (self._done(s) for s in self.STAGES[1:4])
+        overflow_dfs: dict[str, DataFrame] = {}
 
         # The span candidates read only the conversations stage and are
         # first needed by the edge stage: one background thread builds them
-        # (anchor joins; their eager jobs overlap the signature, pairs and
-        # verify work below) while this thread runs the stages in order.
+        # (anchor UDF and joins; their eager jobs overlap the signature,
+        # pairs and verify work below) while this thread runs the stages in
+        # order.
         span = None
-        if span_needed:
+        if self.enable_span and not edges_done:
             ex = ThreadPoolExecutor(max_workers=1)
             span = ex.submit(
-                span_candidate_pairs,
-                conv, cfg, input_materialized=True, metrics_out=metrics, docs=docs,
+                span_candidate_pairs, conv, cfg, input_materialized=True, metrics_out=metrics
             )
             ex.shutdown(wait=False)  # the thread exits when the task ends
 
-        sigs = self._materialize(
-            "signatures", None if sigs_done else signatures(conv, cfg, docs)
-        )
+        sigs = self._materialize("signatures", None if sigs_done else signatures(conv, cfg))
         all_pairs = None
         if not pairs_done:
             # dedup=False: the pair-union groupBy is the single pair-dedup
@@ -303,59 +403,45 @@ class DedupPipeline:
 
         if edges_done:
             edges = self._materialize("edges", None)
-            return self._finish(edges, conv, metrics, overflow_dfs, _pre_ids)
+        else:
+            cheap_edges = verify_pairs(pairs, sigs, cfg, conversations=conv)
+            if span is not None:
+                # Span tier verifies LAST, against the already-accepted edge
+                # set: exact copies and near-dups share most anchors and
+                # would all become span candidates, but their LCS
+                # verification is pure waste — the cheaper tiers already
+                # accepted them. Anti-join keeps LCS (the most expensive
+                # verifier) for pairs only the span tier can see. Final
+                # edge SET is unchanged.
+                cheap_edges = cheap_edges.localCheckpoint()
+                span_cand, overflow_dfs["span_overflow_anchors"] = span.result()
+                new_cand = span_cand.join(
+                    cheap_edges.select("conv_a", "conv_b"), ["conv_a", "conv_b"], "left_anti"
+                )
+                span_edges = (
+                    verify_span_pairs(new_cand, conv, cfg)
+                    .drop("span_len")
+                    .withColumn("similarity", F.lit(None).cast("double"))
+                    .select("conv_a", "conv_b", "source", "similarity")
+                )
+                cheap_edges = cheap_edges.unionByName(span_edges)
 
-        cheap_edges = verify_pairs(pairs, sigs, cfg, conversations=conv)
-        if span is not None:
-            # Span tier verifies LAST, against the already-accepted edge
-            # set: exact copies and near-dups share most anchors and would
-            # all become span candidates, but their LCS verification is
-            # pure waste — the cheaper tiers already accepted them.
-            # Anti-join keeps LCS (the most expensive verifier) for pairs
-            # only the span tier can see. Final edge SET is unchanged.
-            cheap_edges = cheap_edges.localCheckpoint()
-            span_cand, overflow_dfs["span_overflow_anchors"] = span.result()
-            new_cand = span_cand.join(
-                cheap_edges.select("conv_a", "conv_b"), ["conv_a", "conv_b"], "left_anti"
+            # the per-source edge funnel rides the edge stage's own action
+            edge_obs = Observation("edges_by_source")
+            edges = self._materialize(
+                "edges",
+                cheap_edges.observe(
+                    edge_obs,
+                    *(F.count(F.when(F.col("source") == s, 1)).alias(s) for s in _SOURCES),
+                ),
             )
-            span_edges = (
-                verify_span_pairs(new_cand, conv, cfg, docs=docs)
-                .drop("span_len")
-                .withColumn("similarity", F.lit(None).cast("double"))
-                .select("conv_a", "conv_b", "source", "similarity")
-            )
-            cheap_edges = cheap_edges.unionByName(span_edges)
+            metrics["edges_by_source"] = edge_obs.get
 
-        # the per-source edge funnel rides the edge stage's own action
-        edge_obs = Observation("edges_by_source")
-        edges = self._materialize(
-            "edges",
-            cheap_edges.observe(
-                edge_obs,
-                *(F.count(F.when(F.col("source") == s, 1)).alias(s) for s in _SOURCES),
-            ),
-        )
-        metrics["edges_by_source"] = edge_obs.get
-        return self._finish(edges, conv, metrics, overflow_dfs, _pre_ids)
-
-    def _dedup_pair_union(self, pair_dfs):
-        all_pairs = pair_dfs[0]
-        for p in pair_dfs[1:]:
-            all_pairs = all_pairs.unionByName(p)
-        # One row per undirected pair. Only 'exact' pairs skip verify_pairs,
-        # so a pair exact proposed must keep that source: min() does,
-        # because "exact" sorts before every other tier's name.
-        return all_pairs.groupBy("conv_a", "conv_b").agg(F.min("source").alias("source"))
-
-    def _finish(self, edges, conv, metrics, overflow_dfs, _pre_ids):
-        from dedup.util import persistent_rdd_ids, unpersist_ids
-
-        cfg = self.cfg
         # Overflow metrics (no silent caps — the north rule): all tier
         # overflow counts are batched into ONE tiny union-agg job instead of
-        # one standalone .count() per tier; it must run here, before the
-        # end-of-run scratch-checkpoint cleanup frees the blocks the
-        # overflow lineage reads.
+        # one standalone .count() per tier; it must run before the
+        # scratch-checkpoint cleanup frees the blocks the overflow lineage
+        # reads.
         if overflow_dfs:
             aggs = None
             for name, df in overflow_dfs.items():
@@ -368,34 +454,47 @@ class DedupPipeline:
                 metrics[row["metric"]] = row["value"]
 
         if self._done("clusters"):
-            clusters = self._materialize("clusters", None)  # loads from disk
-        else:
-            # edge count from the stage lineage (observed on the edge stage's
-            # own action, or counted on resume): above CC's driver bound it
-            # skips the driver-regime probe
-            n_edges = next(e["rows"] for e in self._lineage if e["stage"] == "edges")
-            cc = connected_components(
-                edges.select("conv_a", "conv_b"),
-                cfg.cc_max_iters,
-                log=self.log,
-                n_edges=n_edges,
-                input_deduped=True,  # edge stage is one row per pair
-                metrics_out=metrics,  # cc_edges / cc_driver / cc_rounds
-            )
-            _before_clusters = persistent_rdd_ids(self.spark)
-            clusters = self._materialize(
-                "clusters",
-                select_representatives(cc, conv, self.keep_policy),
-            )
-            # free every scratch checkpoint this run pinned (tier sized
-            # tables, CC rounds, conv/sigs/...) EXCEPT the blocks backing the
-            # returned clusters DataFrame — leaked blocks measurably slow the
-            # session's next job.
-            _cluster_ids = persistent_rdd_ids(self.spark) - _before_clusters
-            scratch = (persistent_rdd_ids(self.spark) - _pre_ids) - _cluster_ids
-            freed = unpersist_ids(self.spark, scratch)
-            self.log(f"freed {freed} scratch checkpoint RDDs")
+            return self._materialize("clusters", None)  # loads from disk
+        # edge count from the stage lineage (observed on the edge stage's
+        # own action, or counted on resume): above CC's driver bound it
+        # skips the driver-regime probe
+        n_edges = next(e["rows"] for e in self._lineage if e["stage"] == "edges")
+        cc = connected_components(
+            edges.select("conv_a", "conv_b"),
+            cfg.cc_max_iters,
+            log=self.log,
+            n_edges=n_edges,
+            input_deduped=True,  # edge stage is one row per pair
+            metrics_out=metrics,  # cc_edges / cc_driver / cc_rounds
+        )
+        return self._clusters_stage(select_representatives(cc, conv, self.keep_policy))
 
+    def _dedup_pair_union(self, pair_dfs):
+        all_pairs = pair_dfs[0]
+        for p in pair_dfs[1:]:
+            all_pairs = all_pairs.unionByName(p)
+        # One row per undirected pair. Only 'exact' pairs skip verify_pairs,
+        # so a pair exact proposed must keep that source: min() does,
+        # because "exact" sorts before every other tier's name.
+        return all_pairs.groupBy("conv_a", "conv_b").agg(F.min("source").alias("source"))
+
+    def _clusters_stage(self, df: DataFrame) -> DataFrame:
+        """Materialize the clusters stage, then free every scratch
+        checkpoint this run pinned (tier tables, CC rounds, earlier stages)
+        EXCEPT the blocks backing the returned clusters DataFrame — leaked
+        blocks measurably slow the session's next job."""
+        from dedup.util import persistent_rdd_ids, unpersist_ids
+
+        before = persistent_rdd_ids(self.spark)
+        clusters = self._materialize("clusters", df)
+        now = persistent_rdd_ids(self.spark)
+        cluster_ids = now - before
+        freed = unpersist_ids(self.spark, (now - self._pre_ids) - cluster_ids)
+        self.log(f"freed {freed} scratch checkpoint RDDs")
+        return clusters
+
+    def _finish(self, clusters: DataFrame, metrics: dict) -> PipelineResult:
+        cfg = self.cfg
         # Caps audit (VERDICT r04 #7): every configured cap/width that can
         # bind during a run is named in the metrics output next to the
         # overflow counters it governs, so a 100× corpus run is auditable

@@ -25,18 +25,15 @@ rolling hash (``_roll_prefix`` / ``_roll_windows``): the prefix arrays are
 built once per doc, and each window length is then one O(n) pass — no
 per-window loop.
 
-Each stage has one numpy kernel (``doc_anchor_hashes``, ``span_lengths``)
-and two placements: a pandas UDF, or — when the caller passes the
-conversations' docs already collected as Arrow (``docs=``, picked by the
-pipeline for a small input) — the driver, where no Python worker starts.
+Each stage has one numpy kernel (``doc_anchor_hashes``, ``span_lengths``).
+The DataFrame builders here run them in pandas UDFs; the pipeline's driver
+pass (``dedup.driver_pass``) calls them directly for a small input.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -82,16 +79,12 @@ def longest_common_substring_len(a: str, b: str, lo: int = 1) -> int:
 
 #: anchor window width (chars of the normalized doc)
 _ANCHOR_W = 64
-#: Spark columns of the anchor table both placements pair
-_ANCHOR_SCHEMA = T.StructType(
-    [T.StructField("anchor_hash", T.LongType()), T.StructField("conv_id", T.StringType())]
-)
 
 
 def doc_anchor_hashes(docs: list[str], cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
     """(doc index, anchor hash) int64 arrays: the distinct anchors of every
     doc, sorted by doc then hash — the one anchor kernel, run by the pandas
-    UDF and by the pipeline's driver placement alike.
+    UDF and by the pipeline's driver pass alike.
 
     ONE vectorized pass for the whole batch (was a per-doc loop of ~10
     small numpy calls — fixed overhead dominated at ~2 KB/doc).
@@ -145,64 +138,50 @@ def doc_anchors(
     )
 
 
+def min_shared_anchors(cfg: DedupConfig) -> int:
+    """Anchors a span candidate pair must share: a true L-span shares
+    ≈ L/mod anchors, and the threshold is conservative by 4× (alignment and
+    normalization slack)."""
+    return max(2, cfg.min_span_len // (4 * cfg.span_anchor_mod))
+
+
 def span_candidate_pairs(
     conversations: DataFrame,
     cfg: DedupConfig | None = None,
     input_materialized: bool = False,
     metrics_out: dict | None = None,
-    docs: pa.Table | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Anchor-join candidates: pairs sharing ≥ min_span_len/(4·mod) anchors.
+    """Anchor-join candidates: pairs sharing ≥ ``min_shared_anchors``
+    anchors. Returns (pairs, overflow_metrics); the shared-anchor minimum
+    keeps the pair table small.
 
-    Returns (pairs, overflow_metrics). The shared-anchor minimum keeps the
-    pair table small: a true L-span shares ≈ L/mod anchors, so the threshold
-    is conservative by 4× (alignment/normalization slack).
-
-    Two placements of ``doc_anchor_hashes``, picked by the caller:
-
-    - ``docs`` given (the conversations' ``(conv_id, doc)`` collected as
-      Arrow): the kernel runs on the driver and its arrays go straight to
-      ``lsh.driver_bucket_pairs`` — no anchor DataFrame, no Python worker.
-      Over ``lsh._DRIVER_PAIRS`` the distributed pairing runs over an
-      anchor frame built from the same arrays.
-    - otherwise the kernel runs in the anchor pandas UDF, and the anchor
-      table is ALWAYS checkpointed: both ``bucketed_pairs`` regimes read
-      the anchor rows twice (row count + Arrow collect on the driver;
-      bucket stats + the s>2 membership join distributed), and without a
-      cut the UDF — the expensive part of this tier — runs once per read
-      (measured 58 s uncut vs 14.5 s checkpointed at sf0.1 local[32]).
+    The anchor table is ALWAYS checkpointed: both ``bucketed_pairs``
+    regimes read the anchor rows twice (row count + Arrow collect on the
+    driver; bucket stats + the s>2 membership join distributed), and
+    without a cut the anchor UDF — the expensive part of this tier — runs
+    once per read (measured 58 s uncut vs 14.5 s checkpointed at sf0.1
+    local[32]).
 
     ``metrics_out``: optional dict filled with ``span_driver`` (which
     bucket-pairing regime ran).
     """
-    from dedup.lsh import bucketed_pairs, distributed_bucket_pairs, driver_bucket_pairs
+    from dedup.lsh import bucketed_pairs
 
     cfg = cfg or DedupConfig()
-    min_shared = max(2, cfg.min_span_len // (4 * cfg.span_anchor_mod))
+    anchors = doc_anchors(conversations, cfg, input_materialized).localCheckpoint()
     # hot anchors (boilerplate) emit star edges + overflow rows instead of
     # O(n²) pairs — a star edge counts toward shared_anchors like any
     # other co-occurrence
-    args = (["anchor_hash"], ["conv_id"], cfg.band_bucket_cap)
-    if docs is None:
-        anchors = doc_anchors(conversations, cfg, input_materialized).localCheckpoint()
-        raw, overflow = bucketed_pairs(anchors, *args, metrics_out, "span_driver")
-    else:
-        spark = conversations.sparkSession
-        d, h = doc_anchor_hashes(docs.column("doc").to_pylist(), cfg)
-        table = pa.table({"anchor_hash": h, "conv_id": docs.column("conv_id").take(d)})
-        out = driver_bucket_pairs(spark, table, _ANCHOR_SCHEMA, *args)
-        if metrics_out is not None:
-            metrics_out["span_driver"] = out is not None
-        if out is None:
-            out = distributed_bucket_pairs(spark.createDataFrame(table, _ANCHOR_SCHEMA), *args)
-        raw, overflow = out
+    raw, overflow = bucketed_pairs(
+        anchors, ["anchor_hash"], ["conv_id"], cfg.band_bucket_cap, metrics_out, "span_driver"
+    )
     pairs = (
         raw.select(
             F.col("a.conv_id").alias("conv_a"), F.col("b.conv_id").alias("conv_b")
         )
         .groupBy("conv_a", "conv_b")
         .agg(F.count(F.lit(1)).alias("shared_anchors"))
-        .where(F.col("shared_anchors") >= F.lit(min_shared))
+        .where(F.col("shared_anchors") >= F.lit(min_shared_anchors(cfg)))
         .select("conv_a", "conv_b", F.lit("span").alias("source"))
     )
     return pairs, overflow
@@ -211,7 +190,7 @@ def span_candidate_pairs(
 def span_lengths(docs_a: list[str], docs_b: list[str], cfg: DedupConfig) -> np.ndarray:
     """int32 longest-common-substring length of each (docs_a[i], docs_b[i])
     pair after normalization, 0 when it is under ``min_span_len`` — the one
-    LCS kernel, run by the pandas UDF and by the driver placement alike.
+    LCS kernel, run by the pandas UDF and by the pipeline's driver pass alike.
     The binary search starts at ``min_span_len``, so a pair below it costs
     one probe."""
     na_l = batch_ws_normalize_bytes(docs_a, cfg.span_doc_cap)
@@ -226,32 +205,13 @@ def verify_span_pairs(
     pairs: DataFrame,
     conversations: DataFrame,
     cfg: DedupConfig | None = None,
-    docs: pa.Table | None = None,
 ) -> DataFrame:
     """Exact LCS verification of span candidates; keeps pairs with a common
     substring ≥ min_span_len chars. Returns (conv_a, conv_b, source,
-    span_len).
-
-    With ``docs`` (the conversations' ``(conv_id, doc)`` as Arrow) only
-    the candidate pairs are collected and ``span_lengths`` runs on the
-    driver; otherwise it runs in a pandas UDF over ``join_pair_docs``."""
+    span_len). ``span_lengths`` runs in a pandas UDF over
+    ``join_pair_docs``."""
     cfg = cfg or DedupConfig()
     min_len = cfg.min_span_len
-    if docs is not None:
-        cand = pairs.select("conv_a", "conv_b", "source").toArrow()
-        ids, text = docs.column("conv_id").combine_chunks(), docs.column("doc")
-
-        def side(col):
-            return text.take(pc.index_in(cand.column(col), value_set=ids)).to_pylist()
-
-        span = span_lengths(side("conv_a"), side("conv_b"), cfg)
-        keep = span >= min_len
-        out = cand.filter(pa.array(keep)).append_column(
-            "span_len", pa.array(span[keep], pa.int32())
-        )
-        return pairs.sparkSession.createDataFrame(
-            out, "conv_a string, conv_b string, source string, span_len int"
-        )
 
     @F.pandas_udf(T.IntegerType())
     def lcs_udf(doc_a: pd.Series, doc_b: pd.Series) -> pd.Series:

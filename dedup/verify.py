@@ -8,8 +8,9 @@ Two verifiers:
 - ``estimate``: fraction of agreeing MinHash signature positions — an
   unbiased Jaccard estimator computed from columns already on hand with
   zip_with + aggregate (pure JVM, no shuffle beyond the two signature joins);
-- ``exact``: recompute shingle-set Jaccard from the docs in an Arrow-batched
-  pandas UDF (config ``exact_verify=True``) — the strict path.
+- ``exact``: recompute shingle-set Jaccard from the docs
+  (``shingle_jaccard``) in an Arrow-batched pandas UDF (config
+  ``exact_verify=True``) — the strict path.
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dedup.config import DedupConfig
+from dedup.minhash import py_normalize, shingle_hashes
 
 
 def _agreement(col_a, col_b, num_perm: int):
@@ -43,6 +45,22 @@ def join_pair_docs(pairs: DataFrame, conversations: DataFrame) -> DataFrame:
         .join(docs.withColumnsRenamed({"conv_id": "conv_b", "doc": "doc_b"}), "conv_b")
         .repartition(conversations.sparkSession.sparkContext.defaultParallelism)
     )
+
+
+def shingle_jaccard(docs_a: list[str], docs_b: list[str], k: int) -> np.ndarray:
+    """float64 k-shingle Jaccard of each (docs_a[i], docs_b[i]) pair — the
+    exact-verify kernel, run by the pandas UDF and by the pipeline's driver
+    pass alike. Shingles are taken under ``py_normalize``, the SAME
+    normalization the signature tier shingles under (incl. the \\x1c-\\x1f
+    separator class), so this is the quantity MinHash estimates."""
+    out = np.empty(len(docs_a))
+    for i, (x, y) in enumerate(zip(docs_a, docs_b)):
+        sa = shingle_hashes(py_normalize(x or ""), k)
+        sb = shingle_hashes(py_normalize(y or ""), k)
+        inter = np.intersect1d(sa, sb, assume_unique=True).size
+        union = sa.size + sb.size - inter
+        out[i] = inter / union if union else 1.0
+    return out
 
 
 def verify_pairs(
@@ -80,19 +98,7 @@ def verify_pairs(
 
         @F.pandas_udf(T.DoubleType())
         def jac(doc_a: pd.Series, doc_b: pd.Series) -> pd.Series:
-            from dedup.minhash import py_normalize, shingle_hashes
-
-            out = np.empty(len(doc_a))
-            for i, (x, y) in enumerate(zip(doc_a, doc_b)):
-                # py_normalize — the SAME normalization the signature tier
-                # shingles under (incl. the \x1c-\x1f separator class), so
-                # exact-verify Jaccard is the quantity MinHash estimates
-                sa = shingle_hashes(py_normalize(x or ""), k)
-                sb = shingle_hashes(py_normalize(y or ""), k)
-                inter = np.intersect1d(sa, sb, assume_unique=True).size
-                union = sa.size + sb.size - inter
-                out[i] = inter / union if union else 1.0
-            return pd.Series(out)
+            return pd.Series(shingle_jaccard(list(doc_a), list(doc_b), k))
 
         verified = joined.withColumn("similarity", jac("doc_a", "doc_b")).drop(
             "doc_a", "doc_b"

@@ -43,21 +43,60 @@ def test_pipeline_finds_all_planted_kinds(pipeline_run, corpus):
         assert lab.get(a) is None or lab.get(a) != lab.get(b)
 
 
+@pytest.mark.parametrize(
+    "cfg, policy",
+    [
+        (DedupConfig(), "oldest"),
+        (DedupConfig(strict=True), "newest"),
+        (DedupConfig(exact_verify=True), "longest"),
+        (DedupConfig(band_bucket_cap=3), "first_id"),
+    ],
+    ids=["default", "strict", "exact_verify", "cap3"],
+)
 def test_udf_placement_gives_the_same_clusters(
-    spark, turns_df, pipeline_run, monkeypatch, freed_scratch
+    spark, turns_df, tmp_path, monkeypatch, freed_scratch, cfg, policy
 ):
-    """The test corpus is under the driver-placement bound; forced over it,
-    the pass runs the kernels in pandas UDFs and finds the same clusters
-    and edges, and the metrics say which placement ran."""
+    """The test corpus is under the driver-pass bound; forced over it, the
+    DataFrame pass runs the kernels in pandas UDFs. Every stage gets the
+    same rows (edge similarities included), and the edge funnel, both
+    overflow counts and the lineage rows agree; the metrics say which pass
+    ran."""
     import dedup.pipeline
 
-    assert pipeline_run.metrics["kernels_driver"] is True
-    assert 0 < pipeline_run.metrics["doc_bytes"] <= dedup.pipeline._DRIVER_DOC_BYTES
+    def run(name):
+        rd = str(tmp_path / name)
+        m = DedupPipeline(spark, cfg, run_dir=rd, keep_policy=policy).run(turns_df).metrics
+        stages = {
+            s: sorted(tuple(r) for r in spark.read.parquet(f"{rd}/{s}").collect())
+            for s in DedupPipeline.STAGES[1:]
+        }
+        keys = ("doc_bytes", "edges_by_source", "lsh_overflow_buckets", "span_overflow_anchors")
+        lineage = [(e["stage"], e["rows"], e["resumed"]) for e in m["stages"]]
+        return m["kernels_driver"], stages, {k: m[k] for k in keys}, lineage
+
+    driver = run("driver")
+    assert 0 < driver[2]["doc_bytes"] <= dedup.pipeline._DRIVER_DOC_BYTES
     monkeypatch.setattr(dedup.pipeline, "_DRIVER_DOC_BYTES", -1)
+    udf = run("udf")
+    assert (driver[0], udf[0]) == (True, False)
+    assert driver[1:] == udf[1:]
+    assert driver[1]["clusters"] and driver[2]["edges_by_source"]["span"]
+
+
+def test_driver_pass_hands_off_over_the_pair_budget(
+    spark, turns_df, pipeline_run, monkeypatch, freed_scratch
+):
+    """Bucket pairs over ``lsh._DRIVER_PAIRS`` send the pass to the
+    DataFrame pass before any stage after assembly is written; it finds
+    the same clusters, and the metrics say which pass ran."""
+    import dedup.lsh
+
+    assert pipeline_run.metrics["kernels_driver"] is True
+    monkeypatch.setattr(dedup.lsh, "_DRIVER_PAIRS", 0)
     res = DedupPipeline(spark, DedupConfig()).run(turns_df)
     assert res.metrics["kernels_driver"] is False
-    assert res.metrics["doc_bytes"] == pipeline_run.metrics["doc_bytes"]
-    assert res.metrics["edges_by_source"] == pipeline_run.metrics["edges_by_source"]
+    assert res.metrics["lsh_driver"] is False
+    assert [s.name for s in res.stages] == list(DedupPipeline.STAGES)
     assert _cluster_map(res) == _cluster_map(pipeline_run)
 
 
@@ -191,16 +230,18 @@ def test_each_run_has_its_own_lineage(spark, turns_df, tmp_path):
 
 
 def test_select_representatives_matches_window_ordering(spark):
-    """The groupBy-min(key struct) formulation (r04 de-skew) must pick the
-    SAME representative as the original row_number-over-window ordering for
-    every policy — including null first_ts (NULLS LAST) and exact ties
-    (conv_id tie-break)."""
+    """The groupBy-min(key struct) formulation (r04 de-skew) and its numpy
+    twin ``representatives`` must pick the SAME representative as the
+    original row_number-over-window ordering for every policy — including
+    null first_ts (NULLS LAST) and exact ties (conv_id tie-break)."""
     import datetime as dt
 
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from dedup.keep import select_representatives
+    import numpy as np
+
+    from dedup.keep import representatives, select_representatives
 
     ts = lambda d: dt.datetime(2026, 1, d, tzinfo=dt.timezone.utc)
     conv = spark.createDataFrame(
@@ -238,6 +279,11 @@ def test_select_representatives_matches_window_ordering(spark):
         }
         assert got == want, (policy, got, want)
         assert sum(got.values()) == 2, policy  # exactly one rep per cluster
+        # the driver pass's numpy twin, over the rows in conv_id order
+        rows = clusters.join(conv, "conv_id").orderBy("conv_id").toArrow()
+        cluster = np.unique(rows.column("cluster_id").to_pylist(), return_inverse=True)[1]
+        rep = representatives(cluster, rows, policy)
+        assert dict(zip(rows.column("conv_id").to_pylist(), rep.tolist())) == want, policy
 
 
 def test_span_union_stable_when_lsh_rejects(spark):
@@ -344,6 +390,7 @@ def test_empty_input_runs_to_zero_clusters(spark, turns_df, tmp_path):
     empty = spark.createDataFrame([], TRANSCRIPTS_SCHEMA)
     for turns, run_dir in ((empty, None), (turns_df.limit(0), str(tmp_path / "run"))):
         res = DedupPipeline(spark, DedupConfig(), run_dir=run_dir).run(turns)
+        assert res.metrics["kernels_driver"] is True
         assert res.clusters.count() == 0
         assert res.metrics["ingest_rejects"]["raw_rows"] == 0
 

@@ -136,9 +136,11 @@ def test_shared_span_pipeline(spark, turns_df, corpus):
 @pytest.mark.parametrize("driver", [False, True], ids=["udf", "driver"])
 def test_span_verify_probes_from_min_span_len(spark, driver):
     """The LCS search starts at ``min_span_len``: a pair one char short is
-    rejected, and pairs at and above it keep their exact ``span_len``, in
-    both placements of ``verify_span_pairs``."""
+    rejected, and pairs at and above it are kept — by ``verify_span_pairs``
+    (with their exact ``span_len``) and by the driver pass alike."""
     import random
+
+    from dedup import driver_pass
 
     rng = random.Random(3)
 
@@ -151,13 +153,19 @@ def test_span_verify_probes_from_min_span_len(spark, driver):
         shared = text("0123456789uvwxyz", n)
         rows.append((f"{name}_a", text("abcdefghij", 300) + shared + text("abcdefghij", 80)))
         rows.append((f"{name}_b", text("klmnopqrst", 40) + shared + text("klmnopqrst", 250)))
+    cfg = DedupConfig(min_span_len=200)
+    if driver:
+        texts = [doc for _, doc in rows]
+        a, b = np.arange(0, len(rows), 2), np.arange(1, len(rows), 2)
+        ok = driver_pass.span_verified(a, b, texts, cfg)
+        assert {rows[i][0] for i in a[ok]} == {"exact_a", "long_a"}
+        return
     conv = spark.createDataFrame(rows, "conv_id string, doc string")
     pairs = spark.createDataFrame(
         [(f"{n}_a", f"{n}_b", "span") for n in ("short", "exact", "long")],
         "conv_a string, conv_b string, source string",
     )
-    docs = conv.toArrow() if driver else None
-    got = verify_span_pairs(pairs, conv, DedupConfig(min_span_len=200), docs=docs)
+    got = verify_span_pairs(pairs, conv, cfg)
     assert {(r.conv_a, r.span_len) for r in got.collect()} == {("exact_a", 200), ("long_a", 450)}
 
 
@@ -165,37 +173,50 @@ def test_span_verify_probes_from_min_span_len(spark, driver):
     "cfg", [DedupConfig(), DedupConfig(band_bucket_cap=3)], ids=["default", "cap3"]
 )
 def test_kernel_placements_identical(spark, turns_df, monkeypatch, freed_scratch, cfg):
-    """The driver placement of the signature, anchor and LCS kernels gives
-    the UDF placement's signatures, span candidate pairs, overflow rows and
-    span edges — also when a cap binds, and when the driver's anchor pairs
-    exceed ``lsh._DRIVER_PAIRS`` and pair distributed."""
+    """The driver pass's tiers give the DataFrame tiers' rows: signatures,
+    exact pairs, LSH pairs and span candidates with their repeats, both
+    overflow counts and the span edges — also when a cap binds. Over
+    ``lsh._DRIVER_PAIRS`` the LSH and anchor pairing hand off (None)."""
     from collections import Counter
 
     import dedup.lsh as lsh
+    from dedup import driver_pass
     from dedup.assemble import assemble_conversations
-    from dedup.minhash import signatures
+    from dedup.exact import exact_pairs
+    from dedup.minhash import doc_signatures, signatures
 
     conv = assemble_conversations(turns_df, cfg).localCheckpoint()
-    docs = conv.select("conv_id", "doc").toArrow()
-    out = {}
-    for placement in ("udf", "driver", "driver-over-budget"):
-        if placement == "driver-over-budget":
-            monkeypatch.setattr(lsh, "_DRIVER_PAIRS", 0)
-        d = None if placement == "udf" else docs
-        m = {}
-        cand, overflow = span_candidate_pairs(conv, cfg, True, metrics_out=m, docs=d)
-        out[placement] = (
-            sorted((r.conv_id, tuple(r.minhash)) for r in signatures(conv, cfg, d).collect()),
-            Counter(tuple(r) for r in cand.collect()),
-            Counter(tuple(r) for r in overflow.collect()),
-            sorted(tuple(r) for r in verify_span_pairs(cand, conv, cfg, docs=d).collect()),
-        )
-        assert m["span_driver"] is (placement != "driver-over-budget")
-    monkeypatch.undo()
-    sigs, cand, overflow, edges = out["udf"]
-    assert out["driver"] == out["udf"] == out["driver-over-budget"]
-    assert len(sigs) == conv.count() and cand and edges
-    assert bool(overflow) is (cfg.band_bucket_cap == 3)
+    docs = conv.select("conv_id", "doc", "n_turns", "total_chars").toArrow().sort_by("conv_id")
+    ids, texts = docs.column("conv_id").to_pylist(), docs.column("doc").to_pylist()
+
+    def named(a, b):
+        return Counter((ids[i], ids[j]) for i, j in zip(a.tolist(), b.tolist()))
+
+    def rows(df):
+        return Counter((r.conv_a, r.conv_b) for r in df.collect())
+
+    sigs = signatures(conv, cfg).localCheckpoint()
+    sig = doc_signatures(texts, cfg)
+    assert sorted((r.conv_id, tuple(r.minhash)) for r in sigs.collect()) == [
+        (i, tuple(s)) for i, s in zip(ids, sig.tolist())
+    ]
+    assert named(*driver_pass.exact_pairs(docs, cfg)) == rows(exact_pairs(conv, cfg))
+
+    lsh_df, lsh_overflow = lsh.candidate_pairs(sigs, cfg, dedup=False)
+    la, lb, n_lsh_over = driver_pass.lsh_pairs(sig, cfg)
+    assert named(la, lb) == rows(lsh_df) and n_lsh_over == lsh_overflow.count()
+
+    cand, overflow = span_candidate_pairs(conv, cfg, True)
+    a, b, n_over = driver_pass.span_candidates(texts, cfg)
+    assert named(a, b) == rows(cand) and n_over == overflow.count()
+    ok = driver_pass.span_verified(a, b, texts, cfg)
+    edges = rows(verify_span_pairs(cand, conv, cfg))
+    assert named(a[ok], b[ok]) == edges and edges
+    assert bool(n_over) is (cfg.band_bucket_cap == 3)
+
+    monkeypatch.setattr(lsh, "_DRIVER_PAIRS", 0)
+    assert driver_pass.lsh_pairs(sig, cfg) is None
+    assert driver_pass.span_candidates(texts, cfg) is None
 
 
 # --- driver vs distributed bucket pairing in simhash_conv_pairs ------------
